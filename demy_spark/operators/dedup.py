@@ -652,7 +652,7 @@ def assign_clusters(
     clusters are shallow in practice, so ``max_iters``=5 suffices.
     Returns (id, cluster_id).
 
-    r14: this runs the pagerank iteration shape (graph._iteration_conf
+    r14: this runs the pagerank iteration shape (session.aqe_disabled
     — the exact loop this operator's idiom seeded). The call is EAGER:
     each iteration's label frame is materialized by a synchronous
     localCheckpoint INSIDE the loop-scoped AQE-off conf (every
@@ -673,9 +673,9 @@ def assign_clusters(
     rationale). Larger corpora fall back to the co-keyed shuffle join;
     pass 0 to force it. Results are identical on both paths
     (F.broadcast only hints a strategy)."""
-    from demy_spark.operators.graph import _iteration_conf
+    from demy_spark.session import aqe_disabled
 
-    with _iteration_conf(pairs.sparkSession):
+    with aqe_disabled(pairs.sparkSession):
         edges = (
             pairs.select(F.col("doc_a").alias("_x_"), F.col("doc_b").alias("_y_"))
             .unionByName(

@@ -42,54 +42,12 @@ multigraphs).
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from demy_spark.session import aqe_disabled
+
 __all__ = ["pagerank"]
-
-
-_conf_lock = threading.Lock()
-_conf_depth = 0
-_conf_prev: str | None = None
-
-
-@contextmanager
-def _iteration_conf(spark):
-    """AQE off for the duration of the eager iteration loop, restored
-    on exit — the phrases._training_loop_conf rationale applied to
-    pagerank: every per-iteration frame is node-sized (ranks,
-    contributions) or already persisted (the transition frame), so
-    adaptive replanning has nothing to optimize, yet it materializes
-    every exchange as its own scheduler job (measured r13 at sf0.1:
-    q152's two 5-iteration calls read 83 jobs with AQE on vs 43 with
-    it off on the broadcast path, 29 on the shuffle path — see
-    OPTIMIZATION_r13.md). Off, each eager checkpoint is ONE job whose
-    exchanges are plain stages, and the transition frame's persisted
-    hash(_s_) partitioning keeps its partition count, so the
-    non-broadcast path can reuse it instead of re-exchanging (AQE's
-    coalescing used to change the cached partition count, forcing a
-    re-shuffle every iteration). Session-global while held — the
-    documented _training_loop_conf tradeoff — and REFCOUNTED so that
-    concurrent pagerank calls (callers overlapping independent graphs
-    per the scheduler back-fill recipe, e.g. q152's two modes) restore
-    the caller's AQE value exactly once, after the LAST call exits,
-    instead of racing the set/restore pairs."""
-    global _conf_depth, _conf_prev
-    with _conf_lock:
-        if _conf_depth == 0:
-            _conf_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-        _conf_depth += 1
-    try:
-        yield
-    finally:
-        with _conf_lock:
-            _conf_depth -= 1
-            if _conf_depth == 0:
-                spark.conf.set("spark.sql.adaptive.enabled", _conf_prev)
 
 
 def pagerank(
@@ -177,13 +135,20 @@ def pagerank(
     or session end) after its final action.
 
     SESSION-GLOBAL CONF WHILE RUNNING: the call holds
-    ``_iteration_conf`` — AQE is disabled for the WHOLE SparkSession
-    for the duration of the (eager) iteration loop and restored on
-    exit. Any UNRELATED query another thread runs on the same session
-    while this call is in flight plans with AQE off: it still returns
-    correct results, but silently loses runtime coalescing/skew
-    handling. Concurrent pagerank-family calls are safe (the conf is
-    refcounted; q152 overlaps two modes deliberately); callers that
+    ``session.aqe_disabled`` — AQE is disabled for the WHOLE
+    SparkSession for the duration of the (eager) iteration loop and
+    restored on exit. Why: every per-iteration frame is node-sized or
+    already persisted, yet AQE materializes every exchange as its own
+    scheduler job (measured r13 at sf0.1: q152's two 5-iteration calls
+    read 83 jobs with AQE on vs 43 off on the broadcast path, 29 on the
+    shuffle path — OPTIMIZATION_r13.md); off, the transition frame's
+    persisted hash(_s_) partitioning also keeps its partition count, so
+    the non-broadcast path reuses it instead of re-exchanging. Any
+    UNRELATED query another thread runs on the same session while this
+    call is in flight plans with AQE off: it still returns correct
+    results, but silently loses runtime coalescing/skew handling.
+    Concurrent iterative calls are safe (the hold is refcounted; q152
+    overlaps two modes deliberately); callers that
     interleave ranking with serving traffic should run the ranker on
     its own ``spark.newSession()``, which insulates SQLConf entirely —
     the ``phrase_merges`` trainer contract.
@@ -197,7 +162,7 @@ def pagerank(
     if scale <= 0:
         raise ValueError(f"scale must be positive, got {scale}")
 
-    with _iteration_conf(edges.sparkSession):
+    with aqe_disabled(edges.sparkSession):
         w_expr = (
             F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
         )

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from demy_spark.functions.textstats import norm_tokens
+from demy_spark.session import aqe_disabled
 
 __all__ = ["apply_merges", "bpe_encode", "bpe_train", "phrase_merges"]
 
@@ -58,18 +59,19 @@ def _training_loop_conf(spark, checkpoint_dir: str | None):
     unset), and AQE off for the duration — every round's frames are
     vocab-sized, where adaptive replanning adds a scheduler job per
     exchange and optimizes nothing (measured in PLANS.md round-5:
-    37 → 13 jobs for 6 BPE rounds). Other queries the caller runs
+    37 → 13 jobs for 6 BPE rounds). The AQE flip is the refcounted
+    ``session.aqe_disabled`` hold pagerank uses, so a trainer that
+    overlaps a pagerank call neither re-enables AQE under the other's
+    loop nor leaves it off. Other queries the caller runs
     CONCURRENTLY with training would plan with AQE off too — the
     documented tradeoff of both mutations being session-global."""
     prev_ckpt = spark.sparkContext.getCheckpointDir()
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        yield
+        with aqe_disabled(spark):
+            yield
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         if checkpoint_dir is not None and prev_ckpt is not None:
             # getCheckpointDir() returns the RESOLVED path — the
             # user-supplied root plus a per-set UUID component. Restore

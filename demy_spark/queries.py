@@ -11026,7 +11026,7 @@ def q152_supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # overlap them so the second mode's jobs back-fill the scheduler
     # gaps of the first's eager per-iteration checkpoints (the
     # optimization guide's concurrent-jobs recipe; pagerank's
-    # _iteration_conf is refcounted for exactly this). InheritableThread
+    # aqe_disabled hold is refcounted for exactly this). InheritableThread
     # propagates the caller's job group/description, keeping the bench
     # job-count stamp attributed (r13: wall 5.1 s -> 3.2 s, job count
     # unchanged).

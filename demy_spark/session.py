@@ -1,4 +1,5 @@
-"""SparkSession factory.
+"""SparkSession factory, and the refcounted AQE hold of the eager
+iteration loops.
 
 Parity: core/src/main/scala/Application.scala:10-54 (session bootstrap).
 The reference builds one session per spark-submit run; we expose a
@@ -8,6 +9,8 @@ factory with cluster-sane defaults that also behaves on local[N].
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -33,6 +36,17 @@ def get_spark(
     - UTC session timezone: deterministic timestamp semantics (and the
       DuckDB oracle compares naive-UTC values).
     - Arrow on: pandas UDFs and toPandas go through columnar batches.
+    - Generated-code cache of 512 classes (Spark's default is 100): one
+      steady pass of q152 + q134 needs about 150 distinct classes, so
+      at 100 the LRU evicted them and every pass recompiled (134.75
+      Janino compiles per pass, measured with CodegenMetrics; 0 at 256
+      and above). A static conf: it only takes effect when this call
+      creates the first session of the process.
+    - No codegen stage id in generated class names: the id is part of
+      the cached source and can differ between runs of the same adaptive
+      plan, so a re-run query still missed the cache (q134's second run
+      recompiled 8-14 classes, each differing from a first-run class
+      only in that id). Plans from ``explain()`` still show the ids.
     """
     cpus = shuffle_partitions or default_parallelism()
     builder = (
@@ -46,6 +60,8 @@ def get_spark(
         # wide agg stages (e.g. the 128-column MinHash signature) must
         # stay in whole-stage codegen; the default cutoff is 100 fields
         .config("spark.sql.codegen.maxFields", "256")
+        .config("spark.sql.codegen.cache.maxEntries", "512")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
@@ -58,3 +74,40 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+_aqe_lock = threading.Lock()
+_aqe_holds: dict = {}  # JVM session -> [depth, caller's AQE value]
+
+
+@contextmanager
+def aqe_disabled(spark: SparkSession):
+    """AQE off on ``spark`` while held, the caller's value restored
+    when the LAST concurrent holder exits.
+
+    The eager iteration loops (pagerank, assign_clusters, the BPE and
+    phrase trainers) work on node- or vocab-sized frames where adaptive
+    replanning optimizes nothing yet costs one scheduler job per
+    exchange. The hold is refcounted per session, so overlapping calls
+    (q152 runs its two pagerank modes on threads; a trainer may run
+    beside them) neither restore early nor leave AQE off: a set/restore
+    pair per call would let the first exit turn AQE back on under a
+    running loop, and the last exit restore the ``false`` it saved.
+    Session-global while held — any unrelated query on the same session
+    plans with AQE off; run it on a sibling ``spark.newSession()``,
+    which has its own SQLConf and its own count here."""
+    key = spark._jsparkSession
+    with _aqe_lock:
+        hold = _aqe_holds.get(key)
+        if hold is None:
+            hold = _aqe_holds[key] = [0, spark.conf.get("spark.sql.adaptive.enabled", "true")]
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+        hold[0] += 1
+    try:
+        yield
+    finally:
+        with _aqe_lock:
+            hold[0] -= 1
+            if hold[0] == 0:
+                del _aqe_holds[key]
+                spark.conf.set("spark.sql.adaptive.enabled", hold[1])

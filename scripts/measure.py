@@ -1,14 +1,15 @@
-"""Round-13 optimization measurement harness.
+"""Optimization measurement harness.
 
 Times individual queries/extras with the bench's exact methodology
 (noop sink, 2 warm-up passes, min-of-3) on the bench session config,
-and writes `.explain("formatted")` to plans/r14/<name>_<tag>.txt.
+and writes `.explain("formatted")` to plans/<round>/<name>_<tag>.txt.
 
 Usage:
-    python scripts/measure_r14.py <tag> [name ...]
+    python scripts/measure.py <round> <tag> [name ...]
 
-With no names: all headline queries + the bench extras. <tag> is
-"before"/"after" (the plan filename suffix).
+<round> names the plan directory and the app (e.g. "r14"). With no
+names: all headline queries. <tag> is "before"/"after" (the plan
+filename suffix).
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from demy_spark.session import get_spark  # noqa: E402
 from demy_spark import queries as _q  # noqa: E402
 
-PLANS_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r14")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 BENCH_EXTRAS = {
     "fuzzy_probe_10x": lambda: _q.bench_fuzzy_probe_10x,
@@ -60,12 +61,14 @@ def force(df) -> None:
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "probe"
-    names = sys.argv[2:]
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    rnd, tag, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    plans_dir = os.path.join(ROOT, "plans", rnd)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(
-        "demy_spark_measure_r14",
+        f"demy_spark_measure_{rnd}",
         master=f"local[{cpus}]",
         shuffle_partitions=min(cpus, 16),
     )
@@ -74,7 +77,7 @@ def main() -> None:
     if not names:
         names = sorted(_q.headline_queries())
 
-    os.makedirs(PLANS_DIR, exist_ok=True)
+    os.makedirs(plans_dir, exist_ok=True)
     results: dict[str, float] = {}
     for name in names:
         if name in BENCH_EXTRAS:
@@ -101,7 +104,7 @@ def main() -> None:
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
             plan_txt = buf.getvalue()
-        with open(os.path.join(PLANS_DIR, f"{name}_{tag}.txt"), "w") as fh:
+        with open(os.path.join(plans_dir, f"{name}_{tag}.txt"), "w") as fh:
             fh.write(plan_txt)
         best = float("inf")
         for i in range(3):
@@ -123,6 +126,7 @@ def main() -> None:
     print(
         json.dumps(
             {
+                "round": rnd,
                 "tag": tag,
                 "results": results,
                 "total": round(sum(results.values()), 3),

@@ -103,7 +103,7 @@ def test_quiet_calib_override_moves_class_bands_in_lockstep():
 # and reads lower, variably), and the operator's cache release means
 # every bench pass rebuilds COLD (no cross-pass plan-cache reuse —
 # the review-r13 hygiene fix). r13 optimization moved the count from
-# 83-92 to ~48: _iteration_conf pins AQE off inside the loop (each
+# 83-92 to ~48: session.aqe_disabled pins AQE off inside the loop (each
 # checkpoint is ONE job instead of one per materialized exchange)
 # and q152 overlaps its two modes on InheritableThreads (job COUNT
 # unchanged by the overlap; the pairs pre-materialization adds its

@@ -284,18 +284,18 @@ def test_broadcast_and_shuffle_paths_agree_exactly(spark):
 
 
 def test_iteration_conf_restores_aqe_and_refcounts(spark):
-    """_iteration_conf (r13) pins AQE off only while held and restores
-    the caller's value exactly once — the inner exit of a nested
-    (concurrent-caller) hold must NOT restore early, which is what
-    makes q152's overlapped pagerank modes safe."""
-    from demy_spark.operators.graph import _iteration_conf
+    """pagerank's AQE hold (session.aqe_disabled, r13) pins AQE off
+    only while held and restores the caller's value exactly once — the
+    inner exit of a nested (concurrent-caller) hold must NOT restore
+    early, which is what makes q152's overlapped pagerank modes safe."""
+    from demy_spark.session import aqe_disabled
 
     prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     try:
-        with _iteration_conf(spark):
+        with aqe_disabled(spark):
             assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-            with _iteration_conf(spark):
+            with aqe_disabled(spark):
                 assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
             assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
@@ -304,7 +304,7 @@ def test_iteration_conf_restores_aqe_and_refcounts(spark):
 
 
 def test_iterative_operators_restore_aqe_for_later_queries(spark):
-    """Blast-radius fence (VERDICT r13 task 7): _iteration_conf is
+    """Blast-radius fence (VERDICT r13 task 7): aqe_disabled is
     session-global WHILE HELD, so every public operator that holds it
     must have returned it to the caller's value by the time the next
     (non-iterative) query plans — a query issued after any of these

@@ -1,0 +1,135 @@
+"""Session factory settings and the session-scoped conf holds."""
+
+from __future__ import annotations
+
+import os
+import random
+import subprocess
+import sys
+import threading
+
+from demy_spark.operators.phrases import _training_loop_conf
+from demy_spark.queries import REGISTRY
+from demy_spark.session import aqe_disabled
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+AQE = "spark.sql.adaptive.enabled"
+CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
+
+
+def _compiles(spark) -> int:
+    """Janino compiles so far in this JVM (every cache miss compiles)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_get_spark_sizes_codegen_cache_and_extra_conf_wins(spark):
+    # the fixture session is built by get_spark, so the default is live
+    assert spark.conf.get(CODEGEN_CACHE) == "512"
+    # a static conf only applies to a new session: build one in a
+    # fresh JVM to see an extra_conf value win over the default
+    code = (
+        "from demy_spark.session import get_spark\n"
+        "s = get_spark('codegen_cache_override', master='local[1]', shuffle_partitions=1,"
+        f" extra_conf={{'{CODEGEN_CACHE}': '64'}})\n"
+        f"print('value=' + s.conf.get('{CODEGEN_CACHE}'))\n"
+        "s.stop()\n"
+    )
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "512m"}
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=ROOT, env=env, capture_output=True, text=True, timeout=600
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "value=64" in out.stdout.splitlines()
+
+
+def test_rerun_of_iterative_queries_compiles_nothing(spark, sf_dir):
+    """A query the session has already run pays no codegen again: the
+    second round of q152 + q134 must hit the generated-code cache for
+    every class (at Spark's default of 100 entries it recompiled)."""
+    names = ["q152_supplier_pagerank", "q134_phrase_search"]
+
+    def one_round():
+        for name in names:
+            REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            spark.catalog.clearCache()
+
+    one_round()
+    before = _compiles(spark)
+    one_round()
+    assert _compiles(spark) - before == 0
+
+
+def test_aqe_hold_survives_pagerank_bpe_interleave(spark):
+    """pagerank enters, bpe enters, pagerank exits, bpe exits: AQE must
+    stay off until the LAST exit and then be the caller's value again.
+    A blind save/restore in the trainer turns AQE back on at pagerank's
+    exit, under bpe's loop, and bpe's exit restores the ``false`` it
+    saved, leaving the session with AQE off."""
+    prev = spark.conf.get(AQE, "true")
+    spark.conf.set(AQE, "true")
+    try:
+        pagerank_hold = aqe_disabled(spark)
+        bpe_hold = _training_loop_conf(spark, None)
+        pagerank_hold.__enter__()
+        assert spark.conf.get(AQE) == "false"
+        bpe_hold.__enter__()
+        assert spark.conf.get(AQE) == "false"
+        pagerank_hold.__exit__(None, None, None)
+        assert spark.conf.get(AQE) == "false"  # bpe's loop still running
+        bpe_hold.__exit__(None, None, None)
+        assert spark.conf.get(AQE) == "true"
+    finally:
+        spark.conf.set(AQE, prev)
+
+
+def test_aqe_hold_is_counted_per_session(spark):
+    """A trainer on a sibling session (the documented way to keep it
+    off serving traffic) holds AQE off on its own SQLConf only, and
+    the two holds restore independently."""
+    other = spark.newSession()
+    prev = spark.conf.get(AQE, "true")
+    spark.conf.set(AQE, "true")
+    other.conf.set(AQE, "true")
+    try:
+        with aqe_disabled(spark):
+            with _training_loop_conf(other, None):
+                assert spark.conf.get(AQE) == "false"
+                assert other.conf.get(AQE) == "false"
+            assert other.conf.get(AQE) == "true"
+            assert spark.conf.get(AQE) == "false"
+        assert spark.conf.get(AQE) == "true"
+    finally:
+        spark.conf.set(AQE, prev)
+
+
+def test_aqe_hold_threaded_stress(spark):
+    """More threads than cores enter and leave pagerank's hold and the
+    trainer's at random points: every holder sees AQE off, and the
+    caller's value is back once all have left."""
+    prev = spark.conf.get(AQE, "true")
+    spark.conf.set(AQE, "true")
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    seen_on: list[int] = []
+
+    def worker(seed: int) -> None:
+        rng = random.Random(seed)
+        for _ in range(25):
+            hold = aqe_disabled(spark) if rng.random() < 0.5 else _training_loop_conf(spark, None)
+            with hold:
+                if spark.conf.get(AQE) != "false":
+                    seen_on.append(seed)
+
+    try:
+        threads = [threading.Thread(target=worker, args=(s,)) for s in range(2 * (os.cpu_count() or 4))]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        assert seen_on == []
+        assert spark.conf.get(AQE) == "true"
+    finally:
+        sys.setswitchinterval(switch)
+        spark.conf.set(AQE, prev)
