@@ -286,7 +286,8 @@ def blocklist_gate(
     frame is ~30 B/row, so gate wall time is flat from the 9-row
     fixture through 100 k domains and a 1 M-domain list (~30 MB
     relation) costs only ~+0.6 s of broadcast build
-    (scripts/probe_blocklist_width_r8.py, table in PLANS.md round-8).
+    (scripts/probe_blocklist_width_r8.py as of commit 49a9b30, table in
+    PLANS.md round-8).
     The real UT1 adult list (~4 M domains, ~120 MB + JVM relation
     overhead) is the practical ceiling: above ~1-2 M domains the
     per-executor relation copy gets memory-heavy and the broadcast
@@ -314,7 +315,8 @@ def blocklist_gate(
     narrow scan over the list, never the corpus, never a shuffle) and
     dispatches on the MEASURED boundary
     from the round-8/9 probes (PLANS.md tables,
-    scripts/probe_blocklist_{width_r8,bloom_r9}.py): ≤ 2 M domains →
+    scripts/probe_blocklist_{width_r8,bloom_r9}.py as of commit
+    49a9b30): ≤ 2 M domains →
     "broadcast" (a ≤~60 MB relation broadcasts fine and is fastest
     everywhere measured); above → "bloom" (at UT1's 4 M the relation
     is ~240 MB per executor and the broadcast build serializes on the

@@ -244,7 +244,8 @@ def script_profile(c: Column | str) -> Column:
     8 vectorized range masks + one ``reduceat`` — a single pass over
     the batch's codepoints. This is the measured winner by ~9x over
     the 8-sequential-``regexp_replace`` codegen chain it replaced
-    (0.57 s vs 5.08 s at 10x sf0.1, scripts/probe_script_profile_r6.py,
+    (0.57 s vs 5.08 s at 10x sf0.1, scripts/probe_script_profile_r6.py
+    as of commit 49a9b30,
     PLANS.md round-6; a one-pass codegen ``aggregate`` fold over
     ``split(s, '')`` chars was 2x SLOWER than even the chain — per-char
     struct accumulators don't vectorize). The chain survives as

@@ -202,7 +202,8 @@ def _minhash_bands(
     corpus-sized work — ran once PER FRAME (measured r14: q101's plan
     carried 8 parquet scans of `documents`). The share is a plain
     ``persist`` of the narrow (id, hash, h2) rows — a same-session
-    3-arm A/B (scripts/probe_ckpt_ab_r14.py, calib 0.070) measured it
+    3-arm A/B (scripts/probe_ckpt_ab_r14.py as of commit 49a9b30,
+    calib 0.070) measured it
     fastest (persist 2.245 s vs rescan 2.508 vs lazy localCheckpoint
     2.697 on the q101 probe: the columnar cache write is cheaper than
     RDD checkpoint blocks and kills the duplicate hashing either way).

@@ -161,6 +161,11 @@ class FuzzyIndex:
       keeps the hot path to one shuffle).
     - ``vocab``: token dfs + corpus scalars, for the symmetric-delete
       fuzzy candidate generator.
+
+    A built index persists its row-id-stamped ``right`` at
+    construction (lazily; the first action fills it). The caller
+    releases it (``index.right.unpersist()`` or clearCache) with the
+    index.
     """
 
     def __init__(
@@ -172,7 +177,14 @@ class FuzzyIndex:
         case_insensitive: bool = True,
         boost_acronyms: bool = False,
     ):
-        self.right = right.withColumn(RID, F.monotonically_increasing_id())
+        # persisted so the row ids are stamped ONCE: right, postings
+        # and doc stats are separate evaluations of this frame, and
+        # when ``right`` is a shuffle output each evaluation can order
+        # its rows differently (and AQE can coalesce its partitions
+        # differently per plan), so an unpersisted stamp hands the
+        # same row different ids in different frames (and in save()'s
+        # four writes)
+        self.right = right.withColumn(RID, F.monotonically_increasing_id()).persist()
         toks = _tokenize(F.col(text_col), token_pattern)
         if boost_acronyms:
             toks = _double_acronyms(toks)
@@ -203,7 +215,8 @@ class FuzzyIndex:
 
     def persist(self) -> "FuzzyIndex":
         for df in (self.right, self.scored_postings, self.vocab):
-            df.cache()
+            if not df.is_cached:
+                df.cache()
         return self
 
     def save(self, path: str) -> None:
@@ -341,7 +354,8 @@ def fuzzy_lookup(
     # NOT materialized, deliberately (r14): qtoks feeds 3-4 consumers
     # (exact join, fuzzy q-vocab + candidate join, token-array
     # reassembly) and a shared materialization looks attractive — but
-    # a same-session 3-arm A/B (scripts/probe_ckpt_ab_r14.py over
+    # a same-session 3-arm A/B (scripts/probe_ckpt_ab_r14.py as of
+    # commit 49a9b30, over
     # q24_fuzzy_lookup and bench_fuzzy_probe_10x) measured BOTH forms
     # losing to rescans at sf0.1 (q24: ckpt 4.20 / persist 3.44-ish
     # vs rescan 3.80; probe_10x: 3.98 / 3.87 vs 3.47 — persist's one

@@ -120,19 +120,17 @@ def pagerank(
     ``lineage`` controls the per-iteration localCheckpoint that keeps
     lineage flat: ``"eager"`` (default) materializes each iteration
     synchronously — one deterministic job per iteration, which is
-    what makes the bench job-count pin exact (a LAZY checkpoint's
+    what makes the bench job-count pin exact (a lazy checkpoint's
     materialization races under concurrent downstream evaluation and
-    the observed job count flickers); ``"lazy"`` defers
-    materialization to the first action (fine when the caller forces
-    exactly once, single-threaded); ``"keep"`` skips checkpointing so
-    the FULL iterated plan stays inspectable (plan-shape tests; any
+    the observed job count flickers); ``"keep"`` skips checkpointing
+    so the FULL iterated plan stays inspectable (plan-shape tests; any
     checkpoint replaces the logical plan with an RDD scan node) —
     plan size grows with iterations, so only for small ``iterations``.
     Cache ownership follows the mode: ``"eager"`` releases the
     internal persisted frames before returning (the result is already
-    materialized); under ``"lazy"``/``"keep"`` the returned plan still
-    reads them, so the caller releases (``spark.catalog.clearCache()``
-    or session end) after its final action.
+    materialized); under ``"keep"`` the returned plan still reads
+    them, so the caller releases (``spark.catalog.clearCache()`` or
+    session end) after its final action.
 
     SESSION-GLOBAL CONF WHILE RUNNING: the call holds
     ``session.aqe_disabled`` — AQE is disabled for the WHOLE
@@ -153,8 +151,8 @@ def pagerank(
     its own ``spark.newSession()``, which insulates SQLConf entirely —
     the ``phrase_merges`` trainer contract.
     """
-    if lineage not in ("eager", "lazy", "keep"):
-        raise ValueError(f"lineage must be eager|lazy|keep, got {lineage!r}")
+    if lineage not in ("eager", "keep"):
+        raise ValueError(f"lineage must be eager|keep, got {lineage!r}")
     if not 0 <= damping_pct <= 100:
         raise ValueError(f"damping_pct must be in [0, 100], got {damping_pct}")
     if iterations < 0:
@@ -247,12 +245,12 @@ def pagerank(
                     + F.expr(f"({d} * coalesce(_c_, 0L)) div 100")
                 ).cast("long").alias("_r_"),
             )
-            if lineage != "keep":
-                ranks = ranks.localCheckpoint(eager=lineage == "eager")
+            if lineage == "eager":
+                ranks = ranks.localCheckpoint(eager=True)
         # cache ownership: with eager checkpoints the final rank frame is
         # already materialized and references neither persisted frame, so
         # both release here; iterations == 0 leaves ranks reading base
-        # directly (trans is unused either way). Under "lazy"/"keep" the
+        # directly (trans is unused either way). Under "keep" the
         # returned plan still reads them — the CALLER owns the release
         # after its final action (the similarity.py ownership contract).
         # NOTE the bench consequence: Spark's cache is keyed by the

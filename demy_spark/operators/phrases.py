@@ -52,33 +52,42 @@ __all__ = ["apply_merges", "bpe_encode", "bpe_train", "phrase_merges"]
 
 
 @contextmanager
-def _training_loop_conf(spark, checkpoint_dir: str | None):
-    """Session settings for an eager merge-round loop, restored on
-    exit: the reliable-checkpoint directory (pre-existing dir put
-    back; if none was set the new one stays — Spark has no public
-    unset), and AQE off for the duration — every round's frames are
-    vocab-sized, where adaptive replanning adds a scheduler job per
-    exchange and optimizes nothing (measured in PLANS.md round-5:
-    37 → 13 jobs for 6 BPE rounds). The AQE flip is the refcounted
-    ``session.aqe_disabled`` hold pagerank uses, so a trainer that
-    overlaps a pagerank call neither re-enables AQE under the other's
-    loop nor leaves it off. Other queries the caller runs
-    CONCURRENTLY with training would plan with AQE off too — the
-    documented tradeoff of both mutations being session-global."""
+def _checkpoint_dir(spark, checkpoint_dir: str | None):
+    """Set the reliable-checkpoint directory for the duration, then
+    put a pre-existing one back (if none was set the new one stays —
+    Spark has no public unset). A lazy ``checkpoint()`` keeps the
+    directory that was set when it was CALLED, so restoring before
+    its first action is safe."""
     prev_ckpt = spark.sparkContext.getCheckpointDir()
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
     try:
-        with aqe_disabled(spark):
-            yield
+        yield
     finally:
         if checkpoint_dir is not None and prev_ckpt is not None:
             # getCheckpointDir() returns the RESOLVED path — the
             # user-supplied root plus a per-set UUID component. Restore
             # the root, not the resolved path: re-setting the resolved
             # path would nest a fresh UUID one level deeper on every
-            # trainer call (root/uuid1/uuid2/... growing unboundedly).
+            # call (root/uuid1/uuid2/... growing unboundedly).
             spark.sparkContext.setCheckpointDir(_strip_ckpt_uuid(prev_ckpt))
+
+
+@contextmanager
+def _training_loop_conf(spark, checkpoint_dir: str | None):
+    """Session settings for an eager merge-round loop, restored on
+    exit: the reliable-checkpoint directory (``_checkpoint_dir``), and
+    AQE off for the duration — every round's frames are vocab-sized,
+    where adaptive replanning adds a scheduler job per exchange and
+    optimizes nothing (measured in PLANS.md round-5: 37 → 13 jobs for
+    6 BPE rounds). The AQE flip is the refcounted
+    ``session.aqe_disabled`` hold pagerank uses, so a trainer that
+    overlaps a pagerank call neither re-enables AQE under the other's
+    loop nor leaves it off. Other queries the caller runs
+    CONCURRENTLY with training would plan with AQE off too — the
+    documented tradeoff of both mutations being session-global."""
+    with _checkpoint_dir(spark, checkpoint_dir), aqe_disabled(spark):
+        yield
 
 
 _CKPT_UUID_RE = re.compile(
@@ -328,9 +337,9 @@ def apply_merges(
     vocabularies are 10k-100k pairs; each pair becomes two literals
     in the plan — for very long lists, batch the calls). Same
     per-round lineage-truncation contract as ``phrase_merges``
-    (``checkpoint_dir`` for reliable checkpoints on long runs),
-    including its documented SESSION-GLOBAL ``setCheckpointDir``
-    side effect.
+    (``checkpoint_dir`` for reliable checkpoints on long runs); the
+    session's checkpoint directory is set only while the rounds are
+    planned, and a pre-existing one is restored before returning.
     """
     t = docs.select(
         F.col(id_col).alias("_id_"),
@@ -375,21 +384,20 @@ def _replay_merges(
 ) -> DataFrame:
     """Apply a FROZEN merge list in rank order — one _merge_pass round
     per pair, lineage truncated per round (localCheckpoint, or a
-    reliable checkpoint when ``checkpoint_dir`` is set —
-    session-globally, see ``phrase_merges``). Shared by
+    reliable checkpoint into ``checkpoint_dir`` when it is set; the
+    session's previous directory is back on return). Shared by
     ``apply_merges`` (word level) and ``bpe_encode`` (char level)."""
-    if checkpoint_dir is not None:
-        t.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-    for w1, w2 in merge_list:
-        paired = t.withColumn("_wn_", F.lead("_w_").over(wdoc)).withColumns(
-            {"_w1_": F.lit(w1), "_w2_": F.lit(w2)}
-        )
-        t = _merge_pass(paired, joiner, wdoc)
-        t = (
-            t.checkpoint(eager=False)
-            if checkpoint_dir is not None
-            else t.localCheckpoint(eager=False)
-        )
+    with _checkpoint_dir(t.sparkSession, checkpoint_dir):
+        for w1, w2 in merge_list:
+            paired = t.withColumn("_wn_", F.lead("_w_").over(wdoc)).withColumns(
+                {"_w1_": F.lit(w1), "_w2_": F.lit(w2)}
+            )
+            t = _merge_pass(paired, joiner, wdoc)
+            t = (
+                t.checkpoint(eager=False)
+                if checkpoint_dir is not None
+                else t.localCheckpoint(eager=False)
+            )
     return t
 
 

@@ -11153,3 +11153,61 @@ def oracle_sql() -> dict[str, str]:
 
 def headline_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {name: q.fn for name, q in REGISTRY.items() if q.headline}
+
+
+def bench_extras() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The bench's scale-stress extras, timed OUTSIDE the
+    baseline-comparable headline total, in bench order: short name ->
+    query function. The one table every timer reads (bench.py,
+    scripts/measure.py, the bench-contract job pins)."""
+    r = {name: q.fn for name, q in REGISTRY.items()}
+    return {
+        # candidate-volume regressions surface here first
+        "fuzzy_probe_10x": bench_fuzzy_probe_10x,
+        # round-3 curation / PQ / packing pipeline operators
+        "contamination": r["q86_contamination_check"],
+        "pq_ann": r["q89_pq_ann_topk"],
+        "sequence_pack": r["q94_sequence_pack"],
+        "curation_pipeline": r["q93_curation_pipeline"],
+        # round-3 late additions: sub-document dedup, LM scoring, the
+        # clustered semantic dedup, and the delta-batch index probe
+        "line_dedup": r["q96_line_dedup"],
+        "lm_quality": r["q98_lm_quality"],
+        "semdedup": r["q100_semdedup"],
+        "incremental_probe": r["q101_incremental_dedup"],
+        # round-4: chunking (pure-map scan shape), kNN label
+        # propagation (brute-force vote baseline), BPE training (corpus
+        # reduction + merge rounds + lineage truncation), BM25
+        "chunking": r["q111_chunk_documents"],
+        "knn_classify": r["q114_knn_classify"],
+        "bpe_train": r["q115_bpe_train"],
+        "bm25_search": r["q117_bm25_search"],
+        # round-5: the repetition-profile per-row fold and the
+        # winnowing fingerprint pair screen (explode + co-keyed
+        # self-join)
+        "repetition_profile": r["q124_repetition_profile"],
+        "winnow_pairs": r["q127_winnow_pairs"],
+        # round-6: the single-pass Arrow/numpy script profile, the PSL
+        # registered-domain rollup, positional phrase retrieval and
+        # the C4 line-rule gate
+        "script_profile": r["q130_script_profile"],
+        "domain_rollup": r["q131_domain_rollup"],
+        "phrase_search": r["q134_phrase_search"],
+        "c4_filters": r["q133_c4_filters"],
+        # round-7: hybrid RRF (two retrieval plans + integer fusion)
+        # and the token-budget cut (per-source sort window)
+        "hybrid_rrf": r["q138_hybrid_rrf"],
+        "budget_select": r["q140_budget_select"],
+        # rounds 10-11: the media and pure-Python JPEG decode paths
+        # under load (payload parser cost the fixture oracles can't see)
+        "media_decode": bench_media_decode,
+        "image_decode": bench_image_decode,
+        # round 12: the mergeable quantile summary ('exact' derives its
+        # capacity from a count() so it stays lossless; 'sketch64'
+        # times the compaction path)
+        "quantile_sketch": r["q151_quantile_sketch"],
+        # round 13: integer fixed-point PageRank over the supplier
+        # co-order graph (2 modes x 5 iterations of join+agg with
+        # per-iteration lineage truncation)
+        "pagerank": r["q152_supplier_pagerank"],
+    }

@@ -186,36 +186,6 @@ MULTI_JOB_EXTRAS = (
     "media_decode",
 )
 
-# bench extra name -> the same callable bench.py wires up
-EXTRA_FNS = {
-    "fuzzy_probe_10x": lambda q: q.bench_fuzzy_probe_10x,
-    "media_decode": lambda q: q.bench_media_decode,
-    "image_decode": lambda q: q.bench_image_decode,
-    "bpe_train": lambda q: q.REGISTRY["q115_bpe_train"].fn,
-    "quantile_sketch": lambda q: q.REGISTRY["q151_quantile_sketch"].fn,
-    "pagerank": lambda q: q.REGISTRY["q152_supplier_pagerank"].fn,
-    "pq_ann": lambda q: q.REGISTRY["q89_pq_ann_topk"].fn,
-    "curation_pipeline": lambda q: q.REGISTRY["q93_curation_pipeline"].fn,
-    "incremental_probe": lambda q: q.REGISTRY["q101_incremental_dedup"].fn,
-}
-
-
-def _measure_jobs(spark, fn, name: str) -> int:
-    """bench.py's stamp semantics: two passes to steady state, count
-    Spark jobs on the third."""
-    sc = spark.sparkContext
-
-    def force(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    spark.catalog.clearCache()
-    force(fn(spark, "/root/testdata/sf0.1"))
-    force(fn(spark, "/root/testdata/sf0.1"))
-    sc.setJobGroup(f"jobpin-{name}", name)
-    force(fn(spark, "/root/testdata/sf0.1"))
-    sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(f"jobpin-{name}"))
-
 
 def test_multi_job_extras_are_all_covered_by_a_pin():
     """A future extra added to MULTI_JOB_EXTRAS but forgotten in both
@@ -231,17 +201,18 @@ def test_multi_job_extras_are_all_covered_by_a_pin():
 
 
 @pytest.mark.slow
-def test_multi_job_extra_job_counts_are_pinned(spark):
-    """Slow lane (3.5 min: 8 extras x 3 sf0.1 passes) — the LIVE
+def test_multi_job_extra_job_counts_are_pinned(spark, sf_dir):
+    """Slow lane (~2 min on 4 cores: 8 extras x 4 sf0.1 passes) — the LIVE
     job-count probe of the current code. The default lane keeps the
     zero-cost artifact adjudication below; the live probe runs with
     `-m slow` and in every bench itself (extra_jobs stamps)."""
     import demy_spark.queries as _q
 
-    got = {
-        name: _measure_jobs(spark, EXTRA_FNS[name](_q), name)
-        for name in MULTI_JOB_EXTRAS
-    }
+    # bench.py's own per-extra routine over the one extras table, at
+    # the bench SF (the sf0.1 fixture beside the test one)
+    bench_sf = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    time_extra, extras = _bench().time_extra, _q.bench_extras()
+    got = {n: time_extra(spark, n, extras[n], bench_sf)[1] for n in MULTI_JOB_EXTRAS}
     exact = {n: v for n, v in got.items() if n in EXTRA_JOB_TABLE}
     assert exact == {n: EXTRA_JOB_TABLE[n] for n in exact}
     for n, (lo, hi) in EXTRA_JOB_BANDS.items():

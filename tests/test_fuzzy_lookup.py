@@ -151,6 +151,48 @@ def test_index_reuse(spark, tmp_path):
         fuzzy_lookup(left, right, "query")
 
 
+def test_index_row_ids_survive_a_shuffled_right(spark, tmp_path):
+    """FuzzyIndex stamps its row ids once. ``right`` here is a
+    round-robin shuffle output with several non-empty partitions (AQE
+    never coalesces a repartition(n), unlike a tiny hash shuffle, which
+    it merges into one partition and so hides the bug); its row order
+    differs between evaluations, so frames that each re-evaluated the
+    stamp would join postings to the wrong rows. A caller-built index
+    the caller never persisted, and a save()/load() round trip, must
+    both equal the self-built lookup."""
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
+    right = spark.createDataFrame(
+        [(i, f"{words[i % 6]} {words[i // 6 % 6]} w{i}") for i in range(120)],
+        "entity_id long, phrase string",
+    ).repartition(4)
+    probes = spark.createDataFrame(
+        [(i, f"x {words[i % 6]} {words[i * 5 % 6]} w{i * 3}") for i in range(40)],
+        "doc_id long, text string",
+    )
+    kw = dict(max_lev_distance=0, min_score=0.5, tie_break_cols=("entity_id",))
+
+    def rows(out):
+        return sorted(
+            tuple(r)
+            for r in out.where(F.col("phrase").isNotNull())
+            .select("doc_id", "phrase", "entity_id")
+            .collect()
+        )
+
+    # each probe's unique w<3i> token picks entity 3i. The self-built
+    # lookup runs LAST: its persisted index would otherwise serve the
+    # other two from the CacheManager and hide an unstamped rebuild.
+    want = [(i, f"{words[3 * i % 6]} {words[i // 2 % 6]} w{3 * i}", 3 * i) for i in range(40)]
+    built = FuzzyIndex(right, "phrase")
+    assert rows(fuzzy_lookup(probes, right, "text", index=built, **kw)) == want
+    spark.catalog.clearCache()
+    path = str(tmp_path / "idx")
+    FuzzyIndex(right, "phrase").save(path)
+    loaded = FuzzyIndex.load(spark, path)
+    assert rows(fuzzy_lookup(probes, right, "text", index=loaded, **kw)) == want
+    assert rows(fuzzy_lookup(probes, right, "text", "phrase", **kw)) == want
+
+
 def test_fuzzy_lookup_array_alignment(spark):
     from demy_spark.operators.fuzzy_lookup import fuzzy_lookup_array
 

@@ -164,6 +164,7 @@ def test_validation_errors(spark):
         {"iterations": -1},
         {"scale": 0},
         {"lineage": "nope"},
+        {"lineage": "lazy"},
     ):
         with pytest.raises(ValueError):
             pagerank(

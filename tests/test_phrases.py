@@ -120,6 +120,34 @@ def test_training_checkpoint_restore_does_not_nest(spark, tmp_path):
     assert "/" not in rel, f"checkpoint dir nested: {resolved}"
 
 
+def test_apply_merges_restores_session_checkpoint_dir(spark, tmp_path):
+    """apply_merges(checkpoint_dir=...) sets the session checkpoint
+    dir only while it plans its rounds: afterwards the resolved dir
+    sits DIRECTLY under the caller's prior root, while the lazy
+    reliable checkpoints still land in the requested dir."""
+    import os
+
+    sc = spark.sparkContext
+    root = tmp_path / "prior"
+    sc.setCheckpointDir(str(root))
+    docs = spark.createDataFrame([(1, "new york new york")], "doc_id long, text string")
+    for _ in range(2):
+        out = apply_merges(
+            docs, "doc_id", "text", [("new", "york")],
+            checkpoint_dir=str(tmp_path / "mine"),
+        )
+        assert [r["token"] for r in out.orderBy("pos").collect()] == [
+            "new@@york",
+            "new@@york",
+        ]
+    resolved = sc.getCheckpointDir()
+    assert resolved is not None and "/prior/" in resolved, resolved
+    rel = resolved.split("/prior/", 1)[1].rstrip("/")
+    assert "/" not in rel, f"checkpoint dir nested: {resolved}"
+    written = [d for _, dirs, _ in os.walk(tmp_path / "mine") for d in dirs]
+    assert any(d.startswith("rdd-") for d in written), written
+
+
 def test_phrase_merges_greedy_argmax_chain(spark):
     m, t = _run(
         spark,

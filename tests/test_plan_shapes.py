@@ -13,6 +13,7 @@ import re
 import pytest
 
 from demy_spark import queries as Q
+from perfbench.probe import plan_digest
 
 # queries whose builder functions are pure plan constructors (no
 # driver-side collect during build) — cheap to plan at sf0.001
@@ -111,6 +112,35 @@ def test_no_single_partition_data_window(name, plans):
     """A window over SinglePartition means all data on one reducer —
     the scale-killer operators/topk.py exists to avoid."""
     assert not re.search(r"Window .*, SinglePartition", plans[name])
+
+
+# (exchanges, broadcast joins, sort-merge joins) in each query's
+# sf0.001 executed plan, counted by perfbench.probe.plan_digest: the
+# optimized shapes the round-13/14 work settled on. A moved count is a
+# plan change to explain in the commit that moves it.
+DIGEST_PINS = {
+    "q89_pq_ann_topk": (8, 2, 0),
+    "q96_line_dedup": (5, 1, 0),
+    "q114_knn_classify": (2, 1, 0),
+    "q117_bm25_search": (7, 3, 0),
+    "q124_repetition_profile": (1, 0, 0),
+    "q127_winnow_pairs": (1, 1, 0),
+    "q133_c4_filters": (1, 0, 0),
+    "q134_phrase_search": (13, 8, 1),
+    "q138_hybrid_rrf": (8, 4, 0),
+    "q151_quantile_sketch": (8, 2, 0),
+}
+
+
+@pytest.mark.parametrize("name", sorted(DIGEST_PINS))
+def test_plan_digest_pins(name, spark, sf_dir):
+    # built on a cleared cache: a frame another test left persisted
+    # would replace a subtree (and its exchanges) with a cached scan
+    spark.catalog.clearCache()
+    plan = Q.REGISTRY[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
+    d = plan_digest(plan.toString())
+    got = (d["plan.exchanges"], d["plan.broadcast_joins"], d["plan.sort_merge_joins"])
+    assert got == DIGEST_PINS[name], plan.toString()
 
 
 def test_small_dims_broadcast(plans):

@@ -143,7 +143,8 @@ def test_phrase_query_side_stays_broadcast_at_load(spark):
     not tip the QUERY-side joins into a shuffle: every query-frame
     join carries an explicit broadcast hint regardless of query count
     (VERDICT r6 task 7; scripts/probe_phrase_load_r7.py +
-    probe_phrase_zipf_r8.py measure the wall-time side). Under the
+    probe_phrase_zipf_r8.py, as of commit 49a9b30, measure the
+    wall-time side). Under the
     default rarest-term anchoring the ONE join allowed to shuffle is
     the positional verify join — corpus vs corpus on
     (_id_, _w_, _pos_), which no broadcast can absorb at scale."""
