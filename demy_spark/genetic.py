@@ -22,6 +22,8 @@ import random
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from demy_spark.io import local_frame
+
 
 def _population_df(spark, population: list[list[list[float]]]) -> DataFrame:
     rows = [
@@ -30,7 +32,7 @@ def _population_df(spark, population: list[list[list[float]]]) -> DataFrame:
         for c, vec in enumerate(centers)
         for d, x in enumerate(vec)
     ]
-    return spark.createDataFrame(rows, ["_s_", "_c_", "_d_", "_w_"])
+    return local_frame(spark, rows, "_s_ long, _c_ long, _d_ long, _w_ double")
 
 
 def score_population(

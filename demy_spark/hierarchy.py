@@ -56,6 +56,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from demy_spark.io import local_frame
+
 
 @dataclass(frozen=True, eq=False)
 class CenterTagged:
@@ -389,4 +391,4 @@ def build_center_hierarchy(
         )
         for node, path in built
     ]
-    return spark.createDataFrame(out, _OUT_SCHEMA)
+    return local_frame(spark, out, _OUT_SCHEMA)

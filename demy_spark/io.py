@@ -9,9 +9,13 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Iterable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 TABLES = (
     "region",
@@ -179,6 +183,31 @@ def spread_narrow_scan(df: DataFrame, *, target: int | None = None) -> DataFrame
     if have * 2 >= want:
         return df
     return df.repartition(want)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | T.StructType
+) -> DataFrame:
+    """A driver-side constant table (query list, dictionary, merge
+    table, media rows) as an in-JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` plans a ``LogicalRDD`` over a
+    pickled ``parallelize``, so every stage that scans it starts
+    Python worker tasks and waits on their sockets (q134's 5-row query
+    frame: 2-task stages ran 200-270 ms for 4-10 ms of CPU). Here the
+    rows go column by column into an Arrow table typed by ``schema``
+    (a DDL string or a ``StructType``; required, so no type inference)
+    — the conversion the Spark Connect client applies to every local
+    ``createDataFrame``. Above
+    ``spark.sql.execution.arrow.localRelationThreshold`` Spark keeps
+    the Arrow batches in the JVM instead, which starts no Python
+    worker either."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
 
 
 def read_text_corpus(spark: SparkSession, path: str, *, line_col: str = "line") -> DataFrame:

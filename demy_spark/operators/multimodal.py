@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from demy_spark.io import local_frame
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -1914,4 +1916,4 @@ def synth_media_table(spark, n: int = 64) -> DataFrame:
                 (_sniff(bytes(payload)), 64 + i % 512, 64 + (i * 3) % 512, 1000 * (i % 90)),
             )
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from demy_spark.functions.textstats import norm_tokens
+from demy_spark.io import local_frame
 from demy_spark.session import aqe_disabled
 
 __all__ = ["apply_merges", "bpe_encode", "bpe_train", "phrase_merges"]
@@ -303,7 +304,8 @@ def phrase_merges(
                     )
                     continue
             merge_rows.append((it, None, None, None, tokens_after))
-    merges = spark.createDataFrame(
+    merges = local_frame(
+        spark,
         merge_rows,
         "iteration int, w1 string, w2 string, pair_count long, tokens_after long",
     )
@@ -518,8 +520,8 @@ def bpe_train(
             # while OUR directory is still set (every earlier round
             # materialized through the next round's argmax)
             t.count()
-    merge_table = spark.createDataFrame(
-        merge_rows, "rank int, sym1 string, sym2 string, pair_freq long"
+    merge_table = local_frame(
+        spark, merge_rows, "rank int, sym1 string, sym2 string, pair_freq long"
     )
     vocab_symbols = (
         _assemble_symbols(t)

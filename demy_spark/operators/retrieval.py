@@ -214,7 +214,10 @@ def phrase_search(
       is filtered to query terms by a broadcast semi-join BEFORE any
       shuffle, so every downstream frame is query-term-sized.
     - Queries are human-sized and broadcast everywhere; nothing
-      corpus-scale is ever collected or broadcast.
+      corpus-scale is ever collected. The query-term postings are
+      broadcast into the verify join only when their size estimate
+      is under the broadcast threshold (small corpora); otherwise
+      that join shuffles both sides.
     - Occurrence counting is shrinking hash aggregations, map-side
       combined; the top-k is a WindowGroupLimit-prunable rank window.
 

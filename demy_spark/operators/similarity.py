@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from demy_spark.functions.vectors import cosine_similarity, dot, l2_norm
+from demy_spark.io import local_frame
 
 
 def _hoisted_cosine() -> Column:
@@ -318,7 +319,8 @@ def _split_hot_lists(
         plan[c] = (s, next_id)
         next_id += s - 1
     spark = corpus.sparkSession
-    split_map = spark.createDataFrame(
+    split_map = local_frame(
+        spark,
         [(c, s, base) for c, (s, base) in plan.items()],
         "cluster int, _s_ int, _base_ int",
     )

@@ -28,6 +28,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from demy_spark.io import local_frame
+
 
 def _md5_long(s: Column, start: int, length: int = 15) -> Column:
     """Same construction as operators/dedup._md5_long (md5 hex slice →
@@ -292,7 +294,7 @@ def histogram_quantiles(
     Returns (q, qvalue, bin, n_total)."""
     spark = hist.sparkSession
     width = (hi - lo) / bins
-    qdf = spark.createDataFrame([(float(q),) for q in qs], ["q"])
+    qdf = local_frame(spark, [(float(q),) for q in qs], "q double")
     w_cum = Window.orderBy("bin").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -651,7 +653,7 @@ def quantile_sketch_query(
     ``(by..., p, q_value, n_rows)``."""
     keys = list(by)
     spark = sk.sparkSession
-    pdf = spark.createDataFrame([(int(p),) for p in percents], ["p"])
+    pdf = local_frame(spark, [(int(p),) for p in percents], "p long")
     merged = sk.groupBy(*keys, "value").agg(F.sum("weight").alias("weight"))
     w_val = Window.partitionBy(*keys).orderBy("value")
     w_all = Window.partitionBy(*keys)
@@ -702,7 +704,7 @@ def quantile_sketch_query_cont(
     frame; returns ``(by..., p, q_value DOUBLE, n_rows)``."""
     keys = list(by)
     spark = sk.sparkSession
-    pdf = spark.createDataFrame([(int(p),) for p in percents], ["p"])
+    pdf = local_frame(spark, [(int(p),) for p in percents], "p long")
     merged = sk.groupBy(*keys, "value").agg(F.sum("weight").alias("weight"))
     w_val = Window.partitionBy(*keys).orderBy("value")
     w_all = Window.partitionBy(*keys)

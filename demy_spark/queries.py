@@ -21,7 +21,7 @@ from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from demy_spark.io import load_tables, spread_narrow_scan
+from demy_spark.io import load_tables, local_frame, spread_narrow_scan
 from demy_spark.functions import textstats
 from demy_spark.functions.vectors import cosine_similarity
 from demy_spark.operators.topk import top_k_per_group
@@ -2465,7 +2465,7 @@ def q44_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     from demy_spark.entity import match_entities
 
     t = _t(spark, sf_dir)
-    ents = spark.createDataFrame(_ENTITY_DICT, ["entity", "synonym"])
+    ents = local_frame(spark, _ENTITY_DICT, "entity string, synonym string")
     m = match_entities(t["documents"], "text", "doc_id", ents)
     return m.groupBy("entity", "synonym").agg(
         F.count(F.lit(1)).alias("n_matches"),
@@ -2506,7 +2506,7 @@ def q45_entity_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from demy_spark.entity import cooccurring_tokens, match_entities
 
     t = _t(spark, sf_dir)
-    ents = spark.createDataFrame(_ENTITY_DICT, ["entity", "synonym"])
+    ents = local_frame(spark, _ENTITY_DICT, "entity string, synonym string")
     m = match_entities(t["documents"], "text", "doc_id", ents)
     out = cooccurring_tokens(
         t["documents"], "text", "doc_id", m, top_k=10, min_count=2
@@ -2854,7 +2854,8 @@ def q47_genetic_prototypes(spark: SparkSession, sf_dir: str) -> DataFrame:
         draws=_Q47_DRAWS,
         pool_size=_Q47_POOL,
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(g, round(score, 6) + 0.0, len(best)) for g, score in enumerate(history)],
         "generation int, best_fitness double, k int",
     )
@@ -4509,9 +4510,10 @@ def q78_entity_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     from demy_spark.entity import refine_entities
 
     t = _t(spark, sf_dir)
-    seeds = spark.createDataFrame(
+    seeds = local_frame(
+        spark,
         [("e_spark", "spark"), ("e_query", "query"), ("e_table", "table")],
-        ["entity", "synonym"],
+        "entity string, synonym string",
     )
     return refine_entities(
         t["documents"],
@@ -4606,8 +4608,8 @@ def q79_pipeline_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for s in res["scores"]
     ]
-    return spark.createDataFrame(
-        rows, "version int, qty double, total_revenue double, is_best boolean"
+    return local_frame(
+        spark, rows, "version int, qty double, total_revenue double, is_best boolean"
     )
 
 
@@ -7616,7 +7618,7 @@ def q117_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from demy_spark.operators.retrieval import bm25_search
 
     t = _t(spark, sf_dir)
-    qdf = spark.createDataFrame(_Q117_QUERIES, "query_id long, qtext string")
+    qdf = local_frame(spark, _Q117_QUERIES, "query_id long, qtext string")
     out = bm25_search(
         t["documents"], "doc_id", "text", qdf, "query_id", "qtext", k=10
     )
@@ -8966,7 +8968,7 @@ def q134_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from demy_spark.operators.retrieval import phrase_search
 
     t = _t(spark, sf_dir)
-    qdf = spark.createDataFrame(_Q134_QUERIES, "query_id long, qtext string")
+    qdf = local_frame(spark, _Q134_QUERIES, "query_id long, qtext string")
     out = phrase_search(
         t["documents"], "doc_id", "text", qdf, "query_id", "qtext", k=10
     )
@@ -9168,9 +9170,7 @@ def q137_blocklist_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from demy_spark.functions.domains import blocklist_gate
 
     t = _t(spark, sf_dir)
-    bl = spark.createDataFrame(
-        list(_Q137_BLOCKLIST), "domain string, category string"
-    )
+    bl = local_frame(spark, _Q137_BLOCKLIST, "domain string, category string")
     docs = t["documents"].select("doc_id", _q131_host().alias("host"))
     return blocklist_gate(docs, "host", bl).select(
         "doc_id", "reg_domain", "category", "keep"
@@ -9240,7 +9240,7 @@ def q138_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from demy_spark.operators.retrieval import bm25_search, rrf_fuse
 
     t = _t(spark, sf_dir)
-    qdf = spark.createDataFrame(_Q117_QUERIES, "query_id long, qtext string")
+    qdf = local_frame(spark, _Q117_QUERIES, "query_id long, qtext string")
     sparse = bm25_search(
         t["documents"], "doc_id", "text", qdf, "query_id", "qtext", k=10
     )
@@ -9719,8 +9719,8 @@ def q143_remote_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_chunks = len(server.files[found.id]["chunks"])
         fetch_to_spool(store, found.id, os.path.join(scratch, name))
         meta.append((k, name, n_chunks, found.comment))
-    meta_df = spark.createDataFrame(
-        meta, "nkey long, name string, n_chunks long, comment string"
+    meta_df = local_frame(
+        spark, meta, "nkey long, name string, n_chunks long, comment string"
     )
     spooled = spark.read.format("binaryFile").load(scratch).select(
         F.substring_index("path", "/", -1).alias("name"),
@@ -10065,7 +10065,8 @@ def q145_crawl_archives(spark: SparkSession, sf_dir: str) -> DataFrame:
             if "decompression-bomb" in str(e)
             else f"UNEXPECTED:{e}"
         )
-    bomb_df = spark.createDataFrame(
+    bomb_df = local_frame(
+        spark,
         [("packs/bomb.bz2", marker, len(bomb_body))],
         "name string, content_md5 string, n_bytes long",
     )
@@ -10206,7 +10207,7 @@ def q146_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_image,
     )
 
-    media = spark.createDataFrame(_q146_media_rows(), MEDIA_SCHEMA)
+    media = local_frame(spark, _q146_media_rows(), MEDIA_SCHEMA)
     decoded = decode_image(media, decoder=_auto_decode)
     px255 = lambda f: F.round(f(F.col("pixels")) * 255.0, 0).cast("int")  # noqa: E731
     return decoded.select(
@@ -10356,7 +10357,7 @@ def q147_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     extracts distributed."""
     from demy_spark.operators.multimodal import MEDIA_SCHEMA, extract_audio_features
 
-    media = spark.createDataFrame(_q147_media_rows(), MEDIA_SCHEMA)
+    media = local_frame(spark, _q147_media_rows(), MEDIA_SCHEMA)
     return extract_audio_features(media)
 
 
@@ -10511,7 +10512,7 @@ def q149_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     internals."""
     from demy_spark.operators.multimodal import MEDIA_SCHEMA, decode_audio
 
-    media = spark.createDataFrame(_q147_media_rows(), MEDIA_SCHEMA)
+    media = local_frame(spark, _q147_media_rows(), MEDIA_SCHEMA)
     decoded = decode_audio(media)
     stat = lambda f, col: F.when(  # noqa: E731
         F.col("decode_real"), f(F.col(col)).cast("double")
@@ -10543,7 +10544,7 @@ def q148_video_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     stubbed."""
     from demy_spark.operators.multimodal import MEDIA_SCHEMA, extract_video_metadata
 
-    media = spark.createDataFrame(_q148_media_rows(), MEDIA_SCHEMA)
+    media = local_frame(spark, _q148_media_rows(), MEDIA_SCHEMA)
     return extract_video_metadata(media)
 
 
@@ -10730,7 +10731,8 @@ def q150_video_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     and NULL stats."""
     from demy_spark.operators.multimodal import MEDIA_SCHEMA, sample_video_frames
 
-    media = spark.createDataFrame(
+    media = local_frame(
+        spark,
         [
             (1, bytearray(_q150_mp4()), ("video/mp4", 320, 240, 3000)),
             (2, bytearray(b"RIFFxxxxAVI LIST not a bmff"),

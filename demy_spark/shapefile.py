@@ -14,7 +14,7 @@ Pure-Python parsers from the public file-format specifications (ESRI
 shapefile whitepaper; dBase III header layout) — no GeoTools, no
 pyshp, no shapely. Parsing is driver-side (shapefiles are dimension
 tables: the reference's IRIS polygons are ~50k features), then
-``spark.createDataFrame`` hands Spark a plain relational table; at
+``io.local_frame`` hands Spark a plain relational table; at
 100 TB the POINT side is the big table and this polygon side is the
 broadcast dim, so driver-side parse is the right placement.
 
@@ -34,6 +34,8 @@ import struct
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from demy_spark.io import local_frame
 
 
 @dataclass(frozen=True)
@@ -355,4 +357,4 @@ def read_shapefile(
         )
         for a, s in zip(attrs, shapes)
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

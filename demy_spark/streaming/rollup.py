@@ -99,9 +99,8 @@ def _list_store(spark: SparkSession, store_path: str):
 
 
 def _read_txn(spark: SparkSession, fs, jvm, store_path: str, version: int) -> dict:
-    """Read a version's transaction marker; Java-8-safe byte loop (the
-    marker is tens of bytes). A missing marker is a FOREIGN store —
-    refuse rather than guess."""
+    """Read a version's transaction marker in one JVM call. A missing
+    marker is a FOREIGN store — refuse rather than guess."""
     p = jvm.org.apache.hadoop.fs.Path(f"{store_path}/v={version}/_txn.json")
     if not fs.exists(p):
         raise ValueError(
@@ -110,14 +109,9 @@ def _read_txn(spark: SparkSession, fs, jvm, store_path: str, version: int) -> di
         )
     stream = fs.open(p)
     try:
-        data = bytearray()
-        b = stream.read()
-        while b != -1:
-            data.append(b)
-            b = stream.read()
+        return json.loads(stream.readAllBytes().decode("utf-8"))
     finally:
         stream.close()
-    return json.loads(bytes(data).decode("utf-8"))
 
 
 def read_rollup_store(spark: SparkSession, store_path: str) -> DataFrame:
@@ -223,12 +217,13 @@ def _apply_versioned_batch(
         stored = spark.read.parquet(f"{store_path}/v={versions[-1]}")
         merged = merge_fn(stored, delta)
         # same-txn snapshots superseded beyond the retention window;
-        # clamp — during warm-up fewer exist than the window holds
+        # clamp — during warm-up fewer exist than the window holds.
+        # The newest version's marker was read above.
         same_txn_versions = [
             v
-            for v in versions
+            for v in versions[:-1]
             if _read_txn(spark, fs, jvm, store_path, v)["txn_id"] == txn_id
-        ]
+        ] + [versions[-1]]
         stale = same_txn_versions[
             : max(0, len(same_txn_versions) - (keep_versions - 1))
         ]

@@ -30,6 +30,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from demy_spark.io import local_frame
+
 
 def _explode_dims(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     return df.select(
@@ -41,7 +43,7 @@ def _centers_df(spark, centers: list[list[float]]) -> DataFrame:
     rows = [
         (c, d, float(x)) for c, vec in enumerate(centers) for d, x in enumerate(vec)
     ]
-    return spark.createDataFrame(rows, ["_c_", "_d_", "_w_"])
+    return local_frame(spark, rows, "_c_ long, _d_ long, _w_ double")
 
 
 def _nearest_centers(X, C, Cn):
@@ -390,7 +392,7 @@ def online_center_updates(
             T.StructField("cluster_balance", T.DoubleType()),
         ]
     )
-    return df.sparkSession.createDataFrame(out, schema)
+    return local_frame(df.sparkSession, out, schema)
 
 
 def online_fit_updates(
@@ -501,7 +503,7 @@ def online_fit_updates(
             T.StructField("point_norm", T.DoubleType()),
         ]
     )
-    return df.sparkSession.createDataFrame(out, schema)
+    return local_frame(df.sparkSession, out, schema)
 
 
 def grow_topic_tree(
@@ -573,7 +575,8 @@ def grow_topic_tree(
             nxt: list[tuple[str, list[int], DataFrame, bool]] = []
             for node, indices, rows, parent_ok in frontier:
                 mdf = F.broadcast(
-                    spark.createDataFrame(
+                    local_frame(
+                        spark,
                         [(ip, j) for j, ip in enumerate(indices)],
                         "_ip_ int, _j_ int",
                     )
@@ -652,7 +655,7 @@ def grow_topic_tree(
             T.StructField("spawned", T.BooleanType()),
         ]
     )
-    return spark.createDataFrame(results, schema)
+    return local_frame(spark, results, schema)
 
 
 def analogy_direction(

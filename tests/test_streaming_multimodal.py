@@ -479,6 +479,29 @@ def test_apply_rollup_batch_idempotence_contract(spark, tmp_path):
     assert read_rollup_store(spark, store).collect()[0]["s"] == 3
 
 
+def test_rollup_txn_marker_round_trips_long_non_ascii_id(spark, tmp_path):
+    """The transaction marker is read back whole: a 300-character
+    non-ASCII checkpoint path survives the write/read round trip, and a
+    replay under that id is still recognized and skipped."""
+    import pyspark.sql.functions as F
+
+    from demy_spark.streaming.rollup import _fs, _read_txn, apply_rollup_batch
+
+    txn_id = ("/checkpoints/été-流量-Ωμέγα/" * 20)[:300]
+    assert len(txn_id) == 300 and not txn_id.isascii()
+    store = str(tmp_path / "store")
+    kw = dict(sums={"s": F.sum("v")})
+    b = spark.createDataFrame([("k", 1)], "g string, v long")
+
+    assert apply_rollup_batch(b, store, ["g"], txn_id, 0, **kw) is True
+    fs, _, jvm = _fs(spark, store)
+    assert _read_txn(spark, fs, jvm, store, 0) == {"txn_id": txn_id, "epoch": 0}
+    assert apply_rollup_batch(b, store, ["g"], txn_id, 0, **kw) is False
+    assert apply_rollup_batch(b, store, ["g"], txn_id, 1, **kw) is True
+    assert _read_txn(spark, fs, jvm, store, 1) == {"txn_id": txn_id, "epoch": 1}
+    assert apply_rollup_batch(b, store, ["g"], txn_id, 1, **kw) is False
+
+
 def test_streaming_sliding_matches_batch(spark, sf_dir):
     """Sliding 2h/1h windows under readStream+watermark must equal the
     batch plan window-for-window (q120's streaming twin — every event
