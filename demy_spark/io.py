@@ -186,10 +186,11 @@ def spread_narrow_scan(df: DataFrame, *, target: int | None = None) -> DataFrame
 
 
 def local_frame(
-    spark: SparkSession, rows: Iterable[Sequence], schema: str | T.StructType
+    spark: SparkSession, rows: Iterable[Sequence] | pa.Table, schema: str | T.StructType
 ) -> DataFrame:
-    """A driver-side constant table (query list, dictionary, merge
-    table, media rows) as an in-JVM ``LocalRelation``.
+    """A driver-side table (query list, dictionary, merge table, media
+    rows, an iterative operator's node state) as an in-JVM
+    ``LocalRelation``.
 
     ``spark.createDataFrame(<list>)`` plans a ``LogicalRDD`` over a
     pickled ``parallelize``, so every stage that scans it starts
@@ -198,16 +199,22 @@ def local_frame(
     rows go column by column into an Arrow table typed by ``schema``
     (a DDL string or a ``StructType``; required, so no type inference)
     — the conversion the Spark Connect client applies to every local
-    ``createDataFrame``. Above
+    ``createDataFrame``. ``rows`` may already be a ``pyarrow.Table``
+    (e.g. a ``toArrow()`` result): its columns, in ``schema`` order,
+    are renamed and cast to it. Above
     ``spark.sql.execution.arrow.localRelationThreshold`` Spark keeps
     the Arrow batches in the JVM instead, which starts no Python
     worker either."""
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     arrow = to_arrow_schema(schema)
-    rows = list(rows)
-    cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
-    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
+    if isinstance(rows, pa.Table):
+        table = rows.rename_columns(arrow.names).cast(arrow)
+    else:
+        rows = list(rows)
+        cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+        table = pa.Table.from_arrays(cols, schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def read_text_corpus(spark: SparkSession, path: str, *, line_col: str = "line") -> DataFrame:

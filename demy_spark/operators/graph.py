@@ -23,13 +23,25 @@ Scale shape (the 100 TB contract):
 - the transition frame (edge, weight, out-total) is built with two
   hash aggregations and persisted ONCE — each iteration reuses it
   instead of re-running the upstream edge derivation;
-- one iteration = one equi-join (ranks ⋈ transition on src) + one
-  hash aggregation by dst + a broadcast of the 1-row dangling-mass
-  aggregate (SKIPPED outright when one up-front probe shows the graph
-  has no dangling node — the term is exactly zero then). No
-  driver-side state beyond that probe's two integers;
-- the rank frame is lazily ``localCheckpoint``-ed per iteration (the
-  assign_clusters idiom) so lineage stays flat in ``iterations``;
+- the node table (node, has-out-edge) is persisted once, and ONE
+  setup job reads its row count and whether it has a dangling node;
+- up to ``broadcast_nodes_max`` node rows (the default path), a
+  second setup job collects the node table, and the node-sized state
+  lives on the driver between iterations as an Arrow table: one
+  iteration = one pass over the transition frame (a join
+  with the broadcast rank table on src + one hash aggregation by dst,
+  read back with ``toArrow()``), and the node update — teleport,
+  dangling mass and damping, all exact int64 — runs on the driver.
+  Each iteration's ranks enter as a fresh ``LocalRelation``, so
+  lineage stays flat with no per-iteration checkpoint (the Pregelix
+  superstep: one join + group-by dataflow over the edges);
+- larger graphs keep the node state distributed: one iteration = one
+  equi-join (ranks ⋈ transition on src) + one hash aggregation by dst
+  + a broadcast of the 1-row dangling-mass aggregate (SKIPPED outright
+  when the setup job shows the graph has no dangling node — the term
+  is exactly zero then), and the rank frame is ``localCheckpoint``-ed
+  per iteration (the assign_clusters idiom) so lineage stays flat in
+  ``iterations``;
 - dangling mass is handled exactly (redistributed uniformly), so
   sinks — crawl frontiers are full of them — do not leak rank.
 
@@ -42,9 +54,13 @@ multigraphs).
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from demy_spark.io import local_frame
 from demy_spark.session import aqe_disabled
 
 __all__ = ["pagerank"]
@@ -95,53 +111,68 @@ def pagerank(
 
     Returns one row per ``nodes`` row: (``node_col``, ``rank_fp``)
     with ``rank_fp`` the final BIGINT rank in 1/``scale`` units.
-    ``n_nodes`` overrides the defining node count (the count and the
-    dangling-existence probe otherwise share ONE aggregate job — the
-    q151 derived-capacity idiom); an empty node frame returns an
-    empty result.
+    ``n_nodes`` overrides the defining node count (otherwise the
+    number of non-NULL node rows, read from the first setup job); an
+    empty node frame returns an empty result.
 
-    ``broadcast_nodes_max`` (r13 optimization) picks the per-iteration
-    join strategy from the MEASURED node count: node-sized frames
-    (ranks, per-iteration contributions) are ~16 bytes/row, so up to
-    this many nodes they broadcast-join onto the persisted transition
-    frame — zero exchanges of the edge-sized side per iteration —
-    while larger graphs fall back to the co-keyed shuffle join. The
-    conditional exists because each iteration's checkpointed rank
-    frame is a LogicalRDD with no size statistics: the planner cannot
-    make the broadcast decision itself and defaults to sort-merge
-    (measured r13 at sf0.1: the SMJ path re-exchanged the ~380k-row
-    cached transition frame AND the 1k-row rank frame every iteration
-    — 5 exchanges/iteration vs 1 with the broadcast, bench extra
-    6.8 s/83 jobs -> see OPTIMIZATION_r13.md). The default (4M nodes
-    ~= 64 MB built relation) is far under the broadcast hard cap and
-    covers every host-graph ranking a 100 TB corpus needs; pass 0 to
-    force the shuffle path.
+    ``broadcast_nodes_max`` picks where the node-sized state lives,
+    from the MEASURED number of node rows, which the first setup job
+    reads before anything is collected. Up to this many (the default
+    path), a second setup job collects the node table to the driver
+    and the ranks stay there between iterations as an Arrow table
+    (~16 bytes/node): each iteration broadcasts them as a
+    ``LocalRelation`` onto the persisted transition frame, aggregates
+    contributions by dst and reads them back — one edge pass, no
+    checkpoint, no per-iteration persist — and the node update runs on
+    the driver in exact int64 (all terms are non-negative, so
+    truncating division IS the floor division of the recurrence).
+    Larger graphs (or ``broadcast_nodes_max=0``) take the distributed
+    path: the rank frame is a checkpointed frame, joined without a
+    broadcast hint (the planner picks the strategy; a co-keyed shuffle
+    at that size), and the node table never reaches the driver. Both
+    paths compute the same recurrence and return identical BIGINT
+    ranks. The default (4M nodes ~= 64 MB of driver state and
+    broadcast relation) is far under the broadcast hard cap and covers
+    every host-graph ranking a 100 TB corpus needs. The driver path
+    matches each edge dst to a node by value in the node column's type
+    (an integral dst that does not fit it matches no node, as in
+    Spark's join), so it runs only when that pairs keys exactly as
+    Spark's coerced join does: node and dst of one non-floating type,
+    or both integral. Other type pairs (e.g. string nodes over bigint
+    edges, where Spark's join equates '007' with 7) take the
+    distributed path.
 
-    ``lineage`` controls the per-iteration localCheckpoint that keeps
-    lineage flat: ``"eager"`` (default) materializes each iteration
-    synchronously — one deterministic job per iteration, which is
-    what makes the bench job-count pin exact (a lazy checkpoint's
+    ``lineage`` applies to the distributed path: ``"eager"`` (default)
+    ``localCheckpoint``-s each iteration synchronously — one
+    deterministic job per iteration (a lazy checkpoint's
     materialization races under concurrent downstream evaluation and
     the observed job count flickers); ``"keep"`` skips checkpointing
     so the FULL iterated plan stays inspectable (plan-shape tests; any
     checkpoint replaces the logical plan with an RDD scan node) —
     plan size grows with iterations, so only for small ``iterations``.
-    Cache ownership follows the mode: ``"eager"`` releases the
-    internal persisted frames before returning (the result is already
-    materialized); under ``"keep"`` the returned plan still reads
-    them, so the caller releases (``spark.catalog.clearCache()`` or
-    session end) after its final action.
+    ``"keep"`` always takes the distributed path, since the driver
+    path has no iterated plan to keep.
+
+    Cache ownership: the default driver path and ``"eager"`` release
+    every internal persisted frame before returning (the driver path's
+    result is a ``LocalRelation``; the eager path's final rank frame
+    is materialized), so the call leaves no cached block behind. Under
+    ``"keep"`` the returned plan still reads them, so the caller
+    releases (``spark.catalog.clearCache()`` or session end) after its
+    final action. blocking=True on every release keeps the next
+    same-plan persist (the next bench pass, the next query in a
+    long-lived session) from racing the deferred drop.
 
     SESSION-GLOBAL CONF WHILE RUNNING: the call holds
     ``session.aqe_disabled`` — AQE is disabled for the WHOLE
-    SparkSession for the duration of the (eager) iteration loop and
-    restored on exit. Why: every per-iteration frame is node-sized or
-    already persisted, yet AQE materializes every exchange as its own
+    SparkSession for the duration of the iteration loop and restored
+    on exit. Why: every per-iteration frame is node-sized or already
+    persisted, yet AQE materializes every exchange as its own
     scheduler job (measured r13 at sf0.1: q152's two 5-iteration calls
     read 83 jobs with AQE on vs 43 off on the broadcast path, 29 on the
-    shuffle path — OPTIMIZATION_r13.md); off, the transition frame's
-    persisted hash(_s_) partitioning also keeps its partition count, so
-    the non-broadcast path reuses it instead of re-exchanging. Any
+    shuffle path — OPTIMIZATION_r13.md). The driver path keeps the
+    hold for the same reason: with AQE on, q152 at sf0.01 ran 58 jobs
+    instead of 35 and its median wall rose from 1.89 to 2.10 s. Any
     UNRELATED query another thread runs on the same session while this
     call is in flight plans with AQE off: it still returns correct
     results, but silently loses runtime coalescing/skew handling.
@@ -185,19 +216,19 @@ def pagerank(
             "left",
         ).select("_v_", F.coalesce("_out_", F.lit(False)).alias("_out_")).persist()
 
-        # ONE job resolves both the defining node count and whether any
-        # dangling node exists at all — when none does (cleaned web graphs
-        # mostly have none), the mass branch is EXACTLY zero by the
-        # recurrence, so every iteration skips its aggregate + broadcast
-        # (~2 AQE stages per iteration of pure scheduler tax on a bench
-        # host, and a real reduction at scale)
+        # ONE job resolves the node-row count (which picks the path)
+        # and whether any dangling node exists at all — when none does
+        # (cleaned web graphs mostly have none), the mass term is
+        # EXACTLY zero by the recurrence, so the distributed path skips
+        # its per-iteration aggregate + broadcast
         stats = base.agg(
             F.count("*").alias("_n_"),
             F.coalesce(
                 F.sum(F.when(~F.col("_out_"), F.lit(1))), F.lit(0)
             ).alias("_nd_"),
         ).first()
-        n = int(n_nodes) if n_nodes is not None else int(stats["_n_"])
+        rows = int(stats["_n_"])
+        n = int(n_nodes) if n_nodes is not None else rows
         has_dangling = int(stats["_nd_"]) > 0
         if n <= 0:
             trans.unpersist(blocking=True)
@@ -208,26 +239,37 @@ def pagerank(
             ).where(F.lit(False))
 
         d = int(damping_pct)
+        node_type = raw.schema["_v_"].dataType
+        if (
+            lineage == "eager"
+            and rows <= broadcast_nodes_max
+            and _same_key_domain(node_type, trans.schema["_d_"].dataType)
+        ):
+            try:
+                # the node table is collected only once its size is known
+                return _driver_ranks(
+                    trans,
+                    base.toArrow(),
+                    node_col=node_col,
+                    node_type=node_type,
+                    n=n,
+                    d=d,
+                    iterations=iterations,
+                    scale=scale,
+                )
+            finally:
+                trans.unpersist(blocking=True)
+                base.unpersist(blocking=True)
+
         teleport = ((100 - d) * scale) // (100 * n)  # exact Python bigint div
-        # node-sized frames broadcast below the threshold (see the
-        # broadcast_nodes_max doc note); F.broadcast only HINTS a join
-        # strategy, so results are identical on both paths
-        small = n <= broadcast_nodes_max
-
-        def _node_sized(df: DataFrame) -> DataFrame:
-            return F.broadcast(df) if small else df
-
         ranks = base.withColumn("_r_", F.lit(scale // n).cast("long"))
         for _ in range(iterations):
             contrib = (
-                trans.join(
-                    _node_sized(ranks.select(F.col("_v_").alias("_s_"), "_r_")),
-                    "_s_",
-                )
+                trans.join(ranks.select(F.col("_v_").alias("_s_"), "_r_"), "_s_")
                 .groupBy(F.col("_d_").alias("_v_"))
                 .agg(F.expr("sum((_r_ * _w_) div _tot_)").cast("long").alias("_c_"))
             )
-            nxt = base.join(_node_sized(contrib), "_v_", "left")
+            nxt = base.join(contrib, "_v_", "left")
             mass_term = F.lit(0).cast("long")
             if has_dangling:
                 mass = ranks.where(~F.col("_out_")).agg(
@@ -247,21 +289,11 @@ def pagerank(
             )
             if lineage == "eager":
                 ranks = ranks.localCheckpoint(eager=True)
-        # cache ownership: with eager checkpoints the final rank frame is
-        # already materialized and references neither persisted frame, so
-        # both release here; iterations == 0 leaves ranks reading base
+        # with eager checkpoints the final rank frame is already
+        # materialized and references neither persisted frame, so both
+        # release here; iterations == 0 leaves ranks reading base
         # directly (trans is unused either way). Under "keep" the
-        # returned plan still reads them — the CALLER owns the release
-        # after its final action (the similarity.py ownership contract).
-        # NOTE the bench consequence: Spark's cache is keyed by the
-        # semantic logical plan, so before this release landed,
-        # back-to-back bench passes of the same query silently REUSED the
-        # previous pass's cached transition/base blocks and read ~33
-        # jobs/call; with the release every pass rebuilds cold (~44
-        # jobs/call) — the steadier regression signal, and the only
-        # correct behavior for a long-lived session running many queries
-        # (the 152-query driver sim). blocking=True keeps the next
-        # same-plan persist from racing the deferred drop.
+        # returned plan still reads them: the CALLER releases.
         if lineage == "eager":
             trans.unpersist(blocking=True)
             if iterations > 0:
@@ -269,3 +301,70 @@ def pagerank(
         return ranks.select(
             F.col("_v_").alias(node_col), F.col("_r_").alias("rank_fp")
         )
+
+
+def _driver_ranks(
+    trans: DataFrame,
+    table: pa.Table,
+    *,
+    node_col: str,
+    node_type: T.DataType,
+    n: int,
+    d: int,
+    iterations: int,
+    scale: int,
+) -> DataFrame:
+    """The iterations with the node state on the driver. ``table`` is
+    the collected (``_v_``, ``_out_``) node table, one row per node
+    row; ``trans`` the persisted transition frame. Each iteration is
+    ONE distributed pass (transition ⋈ broadcast ranks, summed by dst);
+    the rest of the recurrence is int64 Arrow arithmetic on the
+    driver, overflow-checked like Spark's ANSI BIGINT."""
+    spark = trans.sparkSession
+    out = T.StructType(
+        [T.StructField(node_col, node_type), T.StructField("rank_fp", T.LongType())]
+    )
+    v = table.column("_v_").combine_chunks()
+    dangling = pc.invert(table.column("_out_").combine_chunks())
+    rank_schema = T.StructType(
+        [T.StructField("_s_", node_type), T.StructField("_r_", T.LongType())]
+    )
+    # contributions keyed in the node type, so they look up by value;
+    # _same_key_domain admits only types this cast cannot merge
+    dst = F.col("_d_")
+    if trans.schema["_d_"].dataType != node_type:
+        dst = dst.try_cast(node_type)
+    teleport = ((100 - d) * scale) // (100 * n)
+    r = pa.repeat(pa.scalar(scale // n, pa.int64()), len(v))
+    for _ in range(iterations):
+        ranks = local_frame(spark, pa.table([v, r], names=["_s_", "_r_"]), rank_schema)
+        contrib = (
+            trans.join(F.broadcast(ranks), "_s_")
+            .groupBy(dst.alias("_v_"))
+            .agg(F.expr("sum((_r_ * _w_) div _tot_)").cast("long").alias("_c_"))
+            .toArrow()
+        )
+        at = pc.index_in(v, value_set=contrib.column("_v_"))
+        c = pc.fill_null(pc.take(contrib.column("_c_").combine_chunks(), at), 0)
+        mass = pc.sum(pc.filter(r, dangling)).as_py() or 0  # null when none
+        r = pc.add_checked(
+            pc.divide(pc.multiply_checked(c, d), 100),
+            teleport + (d * (mass // n)) // 100,
+        )
+    return local_frame(spark, pa.table([v, r], names=[node_col, "rank_fp"]), out)
+
+
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _same_key_domain(node_type: T.DataType, dst_type: T.DataType) -> bool:
+    """Whether the driver path's dst lookup (dst cast to the node type,
+    matched by value) pairs exactly the (node, dst) keys that Spark's
+    coerced join pairs on the distributed path: equal types other than
+    floating point (Spark's join equates -0.0 with 0.0), or two
+    integral types (the cast is exact, or out of range and NULL)."""
+    if isinstance(node_type, _INTEGRAL) and isinstance(dst_type, _INTEGRAL):
+        return True
+    return node_type == dst_type and not isinstance(
+        node_type, (T.FloatType, T.DoubleType)
+    )

@@ -10978,10 +10978,11 @@ def q152_supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     No reference counterpart (the reference has no graph operators);
     LLM-pipeline extension. Scale shape: the transition frame is
-    persisted once per mode and each iteration is one equi-join + one
-    hash agg + a 1-row broadcast (graph.py's 100 TB contract); the
-    co-occurrence self-join keys on l_orderkey so it never leaves the
-    order's partition group."""
+    persisted once per mode, the supplier ranks stay on the driver, and
+    each iteration is one pass over the transition frame (a join with
+    the broadcast rank table + one hash agg by dst; graph.py's 100 TB
+    contract); the co-occurrence self-join keys on l_orderkey so it
+    never leaves the order's partition group."""
     from demy_spark.operators.graph import pagerank
 
     t = _t(spark, sf_dir)
@@ -11026,9 +11027,11 @@ def q152_supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs.count()
     # the two modes are independent graphs over the same edge frame —
     # overlap them so the second mode's jobs back-fill the scheduler
-    # gaps of the first's eager per-iteration checkpoints (the
-    # optimization guide's concurrent-jobs recipe; pagerank's
-    # aqe_disabled hold is refcounted for exactly this). InheritableThread
+    # gaps of the first's per-iteration driver round trips (each
+    # iteration reads its contributions back and updates the ranks on
+    # the driver before the next pass starts). This is the optimization
+    # guide's concurrent-jobs recipe; pagerank's aqe_disabled hold is
+    # refcounted for exactly this. InheritableThread
     # propagates the caller's job group/description, keeping the bench
     # job-count stamp attributed (r13: wall 5.1 s -> 3.2 s, job count
     # unchanged).
@@ -11055,8 +11058,8 @@ def q152_supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             if isinstance(out[mode], BaseException):
                 raise out[mode]
     finally:
-        # pagerank's default eager lineage has materialized both modes
-        # by now, so the shared edge frame releases here (cache
+        # pagerank has materialized both modes by now (a driver-built
+        # rank table), so the shared edge frame releases here (cache
         # hygiene: the driver sim runs 152 queries in ONE session;
         # blocking for the same same-plan re-persist race graph.py
         # documents). In the finally so a failing mode cannot leak the

@@ -97,21 +97,22 @@ def test_quiet_calib_override_moves_class_bands_in_lockstep():
 # dictionary-sized refined codebook, so the corpus-scale training
 # subtree executes once instead of three times (dsub probe, LUT
 # broadcast, codes argmin).
-# pagerank is the one BAND pin: its eager per-iteration checkpoints
-# make each mode's query SEQUENCE deterministic (graph.py's
-# ``lineage`` contract — a lazy checkpoint's materialization races
-# and reads lower, variably), and the operator's cache release means
-# every bench pass rebuilds COLD (no cross-pass plan-cache reuse —
-# the review-r13 hygiene fix). r13 optimization moved the count from
-# 83-92 to ~48: session.aqe_disabled pins AQE off inside the loop (each
-# checkpoint is ONE job instead of one per materialized exchange)
-# and q152 overlaps its two modes on InheritableThreads (job COUNT
-# unchanged by the overlap; the pairs pre-materialization adds its
-# own few AQE jobs, which still vary with shuffle partitioning —
-# hence a band, not an exact pin). The band catches GROSS
-# job-structure regressions — a lost persist or duplicated action
-# roughly doubles the count, runaway extra jobs overshoot the
-# ceiling. Iteration count and checkpoint SEMANTICS do not need the
+# pagerank is the one BAND pin. Its default path keeps the rank vector
+# on the driver (graph.py): two setup jobs (the node count, then the
+# node table), then per iteration one broadcast job for the rank table
+# and one pass over the persisted transition frame, with no checkpoint
+# — 12 jobs per mode, the same on every pass. The operator's cache
+# release means every bench pass rebuilds COLD (no cross-pass
+# plan-cache reuse — the review-r13 hygiene fix). The rest of q152 —
+# the pairs pre-materialization and its broadcast builds, run with AQE
+# on before the two modes overlap on InheritableThreads, and the final
+# write — varies with shuffle partitioning, hence a band, not an exact
+# pin. History: r13 moved the count from 83-92 to ~48
+# (session.aqe_disabled inside the loop, so each eager per-iteration
+# checkpoint was ONE job); the driver-side rank vector moved it to 35.
+# The band catches GROSS job-structure regressions — a lost persist or
+# duplicated action roughly doubles the count, runaway extra jobs
+# overshoot the ceiling. Iteration count and semantics do not need the
 # band: a skipped iteration changes VALUES and fails test_graph's
 # exact-equality cases and the q152 oracle.
 
@@ -167,7 +168,7 @@ EXTRA_JOB_TABLE = {
 
 # inclusive (lo, hi) job-count bands for the AQE-sensitive extras
 EXTRA_JOB_BANDS = {
-    "pagerank": (42, 56),
+    "pagerank": (31, 40),
 }
 
 # job counts the r14 optimizations intentionally moved: committed
@@ -187,6 +188,13 @@ PRE_R14_PINS = {
 PRE_LOCAL_FRAME_PINS = {
     "phrase_search": 18,
     "quantile_sketch": 12,
+}
+
+# the band before pagerank kept its rank vector on the driver (eager
+# per-iteration checkpoints; BENCH_r14 reads 48): the overlay for
+# artifacts stamped up to r14
+PRE_DRIVER_RANKS_BANDS = {
+    "pagerank": (42, 56),
 }
 
 # the extras BASELINE.md's multi-job note names — these get a LIVE
@@ -278,6 +286,7 @@ def test_latest_bench_artifact_job_counts_match_table():
         pytest.skip("no committed bench artifact carries extra_jobs yet")
     rnd, jobs = max(stamped)
     banded = {n: jobs.pop(n) for n in list(EXTRA_JOB_BANDS) if n in jobs}
+    bands = dict(EXTRA_JOB_BANDS)
     expected = dict(EXTRA_JOB_TABLE)
     if rnd < 14:
         # pre-r14 artifacts were stamped before this round's re-pins
@@ -286,9 +295,10 @@ def test_latest_bench_artifact_job_counts_match_table():
         expected.update(
             {n: v for n, v in PRE_LOCAL_FRAME_PINS.items() if n in expected}
         )
+        bands.update(PRE_DRIVER_RANKS_BANDS)
     assert jobs == expected
     for n, v in banded.items():
-        lo, hi = EXTRA_JOB_BANDS[n]
+        lo, hi = bands[n]
         assert lo <= v <= hi, (n, v, (lo, hi))
 
 

@@ -9,6 +9,7 @@ bit-replayable, so the tests hold it to equality, not tolerance.
 from __future__ import annotations
 
 import random
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,7 +20,10 @@ SCALE = 10**12
 
 
 def ref_pagerank(edges, nodes, *, iterations=5, damping_pct=85, scale=SCALE):
-    """The documented recurrence, driver-side: exact Python bigints."""
+    """The documented recurrence, driver-side: exact Python bigints.
+    Duplicate node rows follow the relational semantics: N counts
+    rows, and every copy holds the same rank and feeds every out-edge
+    of its node (so its floored per-edge terms count once per copy)."""
     agg: dict[tuple, int] = {}
     for s, t, w in edges:
         if s is None or t is None or w is None or w <= 0:
@@ -29,6 +33,7 @@ def ref_pagerank(edges, nodes, *, iterations=5, damping_pct=85, scale=SCALE):
     for (s, _), w in agg.items():
         tot[s] = tot.get(s, 0) + w
     nodes = [v for v in nodes if v is not None]
+    copies = Counter(nodes)
     n = len(nodes)
     if n == 0:
         return {}
@@ -40,7 +45,7 @@ def ref_pagerank(edges, nodes, *, iterations=5, damping_pct=85, scale=SCALE):
         c: dict[object, int] = {}
         for (s, t), w in agg.items():
             if s in r:
-                c[t] = c.get(t, 0) + (r[s] * w) // tot[s]
+                c[t] = c.get(t, 0) + copies[s] * ((r[s] * w) // tot[s])
         r = {
             v: ((100 - d) * scale) // (100 * n)
             + (d * (mass // n)) // 100
@@ -50,21 +55,33 @@ def ref_pagerank(edges, nodes, *, iterations=5, damping_pct=85, scale=SCALE):
     return r
 
 
+# broadcast_nodes_max settings: the default (driver-held ranks) and 0
+# (the distributed path every graph above the bound takes)
+PATHS = ({}, {"broadcast_nodes_max": 0})
+
+
 def run(spark, edges, nodes, *, weighted=True, **kw):
+    """Ranks by node. Unless ``kw`` picks a path, runs both PATHS and
+    asserts they agree exactly."""
     schema = "s long, t long, w long" if weighted else "s long, t long"
     rows = edges if edges else []
     edf = spark.createDataFrame(rows, schema)
     ndf = spark.createDataFrame([(v,) for v in nodes], "node long")
-    out = pagerank(
-        edf,
-        ndf,
-        src="s",
-        dst="t",
-        node_col="node",
-        weight_col="w" if weighted else None,
-        **kw,
-    )
-    return {r["node"]: r["rank_fp"] for r in out.collect()}
+    got = []
+    for path in [{}] if "broadcast_nodes_max" in kw else PATHS:
+        out = pagerank(
+            edf,
+            ndf,
+            src="s",
+            dst="t",
+            node_col="node",
+            weight_col="w" if weighted else None,
+            **path,
+            **kw,
+        )
+        got.append({r["node"]: r["rank_fp"] for r in out.collect()})
+    assert all(g == got[0] for g in got), got
+    return got[0]
 
 
 def test_two_node_cycle_is_uniform(spark):
@@ -122,10 +139,13 @@ def test_null_and_nonpositive_edges_are_dropped(spark):
 def test_null_node_ids_are_dropped(spark):
     edf = spark.createDataFrame([(1, 2, 1)], "s long, t long, w long")
     ndf = spark.createDataFrame([(1,), (2,), (None,)], "node long")
-    out = pagerank(edf, ndf, src="s", dst="t", node_col="node", weight_col="w")
-    got = {r["node"]: r["rank_fp"] for r in out.collect()}
-    assert set(got) == {1, 2}
-    assert got == ref_pagerank([(1, 2, 1)], [1, 2])
+    for path in PATHS:
+        out = pagerank(
+            edf, ndf, src="s", dst="t", node_col="node", weight_col="w", **path
+        )
+        got = {r["node"]: r["rank_fp"] for r in out.collect()}
+        assert set(got) == {1, 2}
+        assert got == ref_pagerank([(1, 2, 1)], [1, 2])
 
 
 def test_empty_edges_is_all_dangling_uniform(spark):
@@ -137,9 +157,12 @@ def test_empty_edges_is_all_dangling_uniform(spark):
 def test_empty_nodes_returns_empty(spark):
     edf = spark.createDataFrame([(1, 2, 1)], "s long, t long, w long")
     ndf = spark.createDataFrame([], "node long")
-    out = pagerank(edf, ndf, src="s", dst="t", node_col="node", weight_col="w")
-    assert out.columns == ["node", "rank_fp"]
-    assert out.count() == 0
+    for path in PATHS:
+        out = pagerank(
+            edf, ndf, src="s", dst="t", node_col="node", weight_col="w", **path
+        )
+        assert out.columns == ["node", "rank_fp"]
+        assert out.count() == 0
 
 
 def test_zero_iterations_returns_uniform_init(spark):
@@ -179,8 +202,16 @@ def test_duplicate_node_rows_follow_relational_semantics(spark):
     # the Spark result against a reference run on the EXPANDED frame.
     edf = spark.createDataFrame([(1, 2, 1), (2, 1, 1)], "s long, t long, w long")
     ndf = spark.createDataFrame([(1,), (1,), (2,)], "node long")
-    out = pagerank(edf, ndf, src="s", dst="t", node_col="node", weight_col="w")
-    rows = sorted((r["node"], r["rank_fp"]) for r in out.collect())
+    rows, shuffled = (
+        sorted(
+            (r["node"], r["rank_fp"])
+            for r in pagerank(
+                edf, ndf, src="s", dst="t", node_col="node", weight_col="w", **path
+            ).collect()
+        )
+        for path in PATHS
+    )
+    assert rows == shuffled
     # N counts ROWS (3); node 1's two copies stay identical; node 2
     # receives BOTH copies' contributions
     n, d = 3, 85
@@ -225,9 +256,9 @@ def test_randomized_graphs_match_reference_exactly(spark):
 
 
 def test_plan_has_no_cartesian_and_broadcasts_mass(spark):
-    # the 1-row dangling-mass aggregate must enter as a broadcast
-    # nested-loop join, never a CartesianProduct; the per-iteration
-    # rank join must be an equi-join
+    # the distributed path's 1-row dangling-mass aggregate must enter
+    # as a broadcast nested-loop join, never a CartesianProduct; the
+    # per-iteration rank join must be an equi-join
     def plan_of(edges):
         edf = spark.createDataFrame(edges, "s long, t long, w long")
         ndf = spark.createDataFrame([(1,), (2,), (3,)], "node long")
@@ -240,6 +271,7 @@ def test_plan_has_no_cartesian_and_broadcasts_mass(spark):
             weight_col="w",
             iterations=2,
             lineage="keep",  # keep the iterated plan inspectable
+            broadcast_nodes_max=0,  # the distributed path builds this plan
         )
         return out._sc._jvm.PythonSQLUtils.explainString(
             out._jdf.queryExecution(), "formatted"
@@ -269,8 +301,8 @@ def test_rank_column_is_bigint(spark):
 
 
 def test_broadcast_and_shuffle_paths_agree_exactly(spark):
-    """broadcast_nodes_max only HINTS the per-iteration join strategy
-    (r13): the broadcast default and the forced co-keyed shuffle path
+    """broadcast_nodes_max picks where the node state lives, never
+    the result: the default driver-held ranks and the distributed path
     (broadcast_nodes_max=0) must produce identical BIGINT ranks, both
     equal to the reference recurrence."""
     random.seed(13)
@@ -282,6 +314,106 @@ def test_broadcast_and_shuffle_paths_agree_exactly(spark):
     a = run(spark, edges, nodes)
     b = run(spark, edges, nodes, broadcast_nodes_max=0)
     assert a == b == ref_pagerank(edges, nodes)
+
+
+def test_driver_path_is_one_edge_pass_per_iteration_and_leaves_no_blocks(spark):
+    """The default path keeps the rank vector on the driver: after two
+    setup jobs (the node count, then the node table), each iteration
+    is one distributed pass over the persisted transition frame (plus
+    the broadcast of the rank table), with no per-iteration checkpoint,
+    and the call releases everything it persisted. A seeded multigraph
+    with sinks, duplicate node rows and out-of-node edges, large enough
+    that the node table comes back in several Arrow batches; the
+    default path, the distributed path and the reference must agree
+    exactly."""
+    rng = random.Random(152)
+    n, iters = 5000, 4
+    sinks = set(rng.sample(range(n), 250))
+    nodes = list(range(n)) + rng.sample(range(n), 60)  # 60 duplicate rows
+    edges = [
+        (s, rng.randrange(n + 100), rng.randint(1, 5))  # dst may be no node
+        for s in (rng.randrange(n + 100) for _ in range(40_000))
+        if s not in sinks
+    ]
+    edf = spark.createDataFrame(edges, "s long, t long, w long")
+    ndf = spark.createDataFrame([(v,) for v in nodes], "node long")
+
+    def call(**kw):
+        return pagerank(
+            edf, ndf, src="s", dst="t", node_col="node", weight_col="w",
+            iterations=iters, **kw,
+        )
+
+    sc = spark.sparkContext
+    jsc, cache = sc._jsc, spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    held = set(jsc.getPersistentRDDs().keySet().toArray())
+    group = "pagerank-driver-path"
+    sc.setJobGroup(group, "pagerank driver path")
+    try:
+        rows = call().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 2 * iters + 2, jobs
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) <= held
+    assert cache.isEmpty()
+
+    assert len(rows) == len(nodes)
+    got = {r["node"]: r["rank_fp"] for r in rows}
+    shuffled = {r["node"]: r["rank_fp"] for r in call(broadcast_nodes_max=0).collect()}
+    assert got == shuffled == ref_pagerank(edges, nodes, iterations=iters)
+
+
+def test_int_nodes_over_long_edges_agree_on_both_paths(spark):
+    # the driver path compares keys in the node column's type: a long
+    # dst beyond the int range matches no node, as in Spark's join.
+    # String nodes over long edges join as Spark coerces them ('001'
+    # meets 1) on both paths.
+    edges = [(1, 2, 1), (2, 3, 2), (3, 1, 1), (2, 2**40, 5)]
+    edf = spark.createDataFrame(edges, "s long, t long, w long")
+    want = ref_pagerank(edges, [1, 2, 3])
+    for nodes, ddl in (([1, 2, 3], "node int"), (["001", "2", "3"], "node string")):
+        ndf = spark.createDataFrame([(v,) for v in nodes], ddl)
+
+        def ranks(**kw):
+            out = pagerank(
+                edf, ndf, src="s", dst="t", node_col="node", weight_col="w", **kw
+            )
+            assert dict(out.dtypes)["node"] == ddl.split()[1]
+            return {int(r["node"]): r["rank_fp"] for r in out.collect()}
+
+        assert ranks() == ranks(broadcast_nodes_max=0) == want, ddl
+
+
+def test_graph_above_the_bound_never_collects_its_node_table(spark, monkeypatch):
+    """The node-row count is read before anything is collected: a
+    graph with more node rows than broadcast_nodes_max takes the
+    distributed path without shipping its node table to the driver."""
+    cls = type(spark.range(1))
+    collected = []
+    to_arrow = cls.toArrow
+
+    def spy(df):
+        table = to_arrow(df)
+        collected.append(table.column_names)
+        return table
+
+    monkeypatch.setattr(cls, "toArrow", spy)
+    rng = random.Random(7)
+    edges = [
+        (rng.randrange(12), rng.randrange(12), rng.randint(1, 3)) for _ in range(40)
+    ]
+    nodes = list(range(12))
+    assert run(spark, edges, nodes, broadcast_nodes_max=11) == ref_pagerank(
+        edges, nodes
+    )
+    assert collected == []
+    # at the bound the node table comes to the driver, once
+    assert run(spark, edges, nodes, broadcast_nodes_max=12) == ref_pagerank(
+        edges, nodes
+    )
+    assert collected.count(["_v_", "_out_"]) == 1
 
 
 def test_iteration_conf_restores_aqe_and_refcounts(spark):

@@ -66,7 +66,14 @@ def _python_fed_scans(df) -> list[str]:
 
 @pytest.mark.parametrize(
     "name",
-    ["q117_bm25_search", "q134_phrase_search", "q138_hybrid_rrf", "q151_quantile_sketch"],
+    [
+        "q117_bm25_search",
+        "q134_phrase_search",
+        "q138_hybrid_rrf",
+        "q151_quantile_sketch",
+        # the result is a driver-built rank table, like every iteration's
+        "q152_supplier_pagerank",
+    ],
 )
 def test_constant_tables_start_no_python_worker(name, spark, sf_dir):
     df = Q.REGISTRY[name].fn(spark, sf_dir)
@@ -112,4 +119,12 @@ def test_local_frame_matches_create_dataframe(shape, spark):
     assert got.select("*").schema == want.select("*").schema
     assert got.collect() == want.collect()
     plan = got._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    # a toArrow() result goes back in by column position
+    table = got.toArrow()
+    table = table.rename_columns([f"c{i}" for i in range(table.num_columns)])
+    again = local_frame(spark, table, schema)
+    assert again.schema == want.schema
+    assert again.collect() == want.collect()
+    plan = again._jdf.queryExecution().optimizedPlan()
     assert plan.getClass().getSimpleName() == "LocalRelation"
