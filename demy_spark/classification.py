@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from demy_spark.functions.calibration import raw_prediction_to_score
+from demy_spark.session import keep, owned
 
 __all__ = [
     "raw_prediction_to_score",
@@ -58,9 +59,9 @@ def fit_one_vs_rest(
     (DiscreteVectorClassifier.scala:19-150). ``features_col`` must be an
     ml-vector column; ``labels_col`` an array<int> of length n_labels.
     Fits run through a thread pool to overlap Spark job scheduling."""
-    base = df.select(features_col, F.col(labels_col).alias("_labels_")).cache()
-    base.count()  # materialize once; every component fit reuses it
-    try:
+    with owned():
+        base = keep(df.select(features_col, F.col(labels_col).alias("_labels_")))
+        base.count()  # materialize once; every component fit reuses it
         with ThreadPoolExecutor(max_workers=parallelism) as pool:
             models = list(
                 pool.map(
@@ -68,8 +69,6 @@ def fit_one_vs_rest(
                     range(n_labels),
                 )
             )
-    finally:
-        base.unpersist()
     return models
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from demy_spark.functions.textstats import norm_tokens
+from demy_spark.session import keep
 
 
 def explode_tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -162,13 +163,12 @@ def refine_entities(
     Returns the refined dictionary: (entity, synonym, round_added)
     with round_added = 0 for seeds.
     """
-    d = (
+    d = keep(
         entities.select(
             F.col(entity_col).alias("entity"),
             F.lower(F.col(synonym_col)).alias("synonym"),
         )
         .withColumn("round_added", F.lit(0))
-        .persist()
     )
     for r in range(1, rounds + 1):
         matches = match_entities(
@@ -196,8 +196,8 @@ def refine_entities(
             )
             .withColumn("round_added", F.lit(r))
         )
-        prev, d = d, d.unionByName(accepted).persist()
-        prev.unpersist()
+        prev, d = d, keep(d.unionByName(accepted))
+        prev.unpersist()  # early release: the next round reads only d
     return d
 
 

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from demy_spark.io import local_frame
+from demy_spark.session import keep, owned
 
 
 def _population_df(spark, population: list[list[list[float]]]) -> DataFrame:
@@ -158,7 +159,6 @@ def evolve_prototypes_replay(
         [int(u() * npool) for _ in range(k)] for _ in range(pop_size)
     ]
     elite_n = max(2, pop_size // 2)
-    base = df.select(id_col, vec_col).persist()
     history: list[float] = []
 
     def fitnesses() -> list[float]:
@@ -168,7 +168,8 @@ def evolve_prototypes_replay(
             for f in score_population(base, id_col, vec_col, vecs)
         ]
 
-    try:
+    with owned():
+        base = keep(df.select(id_col, vec_col))
         for _ in range(generations):
             fitness = fitnesses()
             order = sorted(range(pop_size), key=lambda i: (-fitness[i], i))
@@ -192,8 +193,6 @@ def evolve_prototypes_replay(
         best = max(range(pop_size), key=lambda i: fitness[i])
         history.append(fitness[best])
         return [pool[i] for i in pop_idx[best]], fitness[best], history
-    finally:
-        base.unpersist()
 
 
 def evolve_prototypes(
@@ -221,9 +220,9 @@ def evolve_prototypes(
     population = [
         [pool[rng.randrange(len(pool))] for _ in range(k)] for _ in range(pop_size)
     ]
-    base = df.select(id_col, vec_col).persist()
     history: list[float] = []
-    try:
+    with owned():
+        base = keep(df.select(id_col, vec_col))
         for _ in range(generations):
             fitness = score_population(base, id_col, vec_col, population)
             order = sorted(range(pop_size), key=lambda i: -fitness[i])
@@ -241,5 +240,3 @@ def evolve_prototypes(
         best = max(range(pop_size), key=lambda i: fitness[i])
         history.append(fitness[best])
         return population[best], fitness[best], history
-    finally:
-        base.unpersist()

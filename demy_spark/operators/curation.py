@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from demy_spark.operators.dedup import _md5_long
 from demy_spark.operators.sampling import knuth_unit
+from demy_spark.session import keep
 
 __all__ = [
     "contamination_check",
@@ -210,18 +211,20 @@ def contamination_check(
     # one tokenize+hash pass over the train corpus serves BOTH the
     # shingle set and the fingerprint set (persisted; two separate
     # scans would re-run the normalization twice over 100 TB)
-    tr = train.select(sh.alias("_shs_"), fp.alias("_fp_")).persist()
+    tr = keep(train.select(sh.alias("_shs_"), fp.alias("_fp_")))
     train_sh = tr.select(F.explode("_shs_").alias("_sh_")).distinct()
     train_fp = tr.select("_fp_").distinct()
 
     # the test-side shingle/fingerprint frame feeds three consumers
     # (shingle pairs, the exact semi-join, the final select) — persist
     # it so the tokenize+hash pipeline runs once, not three times
-    t = test.select(
-        F.col(id_col).alias("_id_"),
-        sh.alias("_shs_"),
-        fp.alias("_fp_"),
-    ).persist()
+    t = keep(
+        test.select(
+            F.col(id_col).alias("_id_"),
+            sh.alias("_shs_"),
+            fp.alias("_fp_"),
+        )
+    )
     pairs = t.select("_id_", F.explode_outer("_shs_").alias("_sh_"))
     hits = (
         pairs.join(train_sh, "_sh_", "left_semi")
@@ -399,13 +402,12 @@ def source_overlap_matrix(
     the worst case, with G dictionary-sized by contract); per-group
     totals are a G-row aggregate joined back broadcast-sized.
     """
-    gs = (
+    gs = keep(
         docs.select(
             F.col(group_col).alias("_g_"),
             F.explode(shingle_hashes(F.col(text_col), n)).alias("_sh_"),
         )
         .distinct()
-        .persist()
     )
     totals = gs.groupBy("_g_").agg(F.count(F.lit(1)).alias("_n_"))
     a = gs.select(F.col("_g_").alias("_ga_"), "_sh_")

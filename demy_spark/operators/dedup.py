@@ -31,6 +31,7 @@ from demy_spark.functions.textstats import (
     norm_tokens,
     rolling_hash_shingles,
 )
+from demy_spark.session import aqe_disabled, keep, owned
 
 
 def _md5_long(s: Column, start: int, length: int = 15) -> Column:
@@ -189,10 +190,7 @@ def _minhash_bands(
     ``minhash_lsh_dedup``, whose bucket SELF-join reads ``banded``
     once per side, and for ``minhash_probe(include_intra_batch=True)``,
     whose self-join + second verify would otherwise re-run the whole
-    signature pipeline 4-5x per epoch. Cached entries are pinned by
-    the session CacheManager until clearCache/unpersist/session end
-    (DataFrame.persist is NOT ContextCleaner-reclaimed — ADVICE r13);
-    the caller owns the release after its final action.
+    signature pipeline 4-5x per epoch.
 
     ``persist=False`` (r14) still shares the SHINGLE-HASH rows:
     ``banded`` and ``base`` both derive from ``sh_rows``, and every
@@ -207,13 +205,10 @@ def _minhash_bands(
     fastest (persist 2.245 s vs rescan 2.508 vs lazy localCheckpoint
     2.697 on the q101 probe: the columnar cache write is cheaper than
     RDD checkpoint blocks and kills the duplicate hashing either way).
-    Reclamation is the same caller-owned contract as ``persist=True``
-    above: the CacheManager entry lives until clearCache/session end —
-    at index scale a production pipeline writes the index to parquet
-    anyway (the minhash_index contract) instead of holding it cached.
+    Owner of both caches: ``session.owned``.
     """
     rows_per_band = num_hashes // bands
-    sh_rows = _shingle_rows(df, text_col, id_col, shingle_k, with_h2=True).persist()
+    sh_rows = keep(_shingle_rows(df, text_col, id_col, shingle_k, with_h2=True))
     # shingle sets per doc, for exact-jaccard verification of candidates
     # (groupBy reuses sh_rows' partitioning — no extra shuffle)
     base = sh_rows.groupBy("_id_").agg(F.collect_set("_s_").alias("_sh_"))
@@ -268,7 +263,7 @@ def _minhash_bands(
         "_id_", (F.col("_i_") / rows_per_band).cast("int").alias("_band_")
     ).agg(F.sort_array(F.collect_list(F.struct("_i_", "_slot_"))).alias("_key_"))
     if persist:
-        banded = banded.persist()
+        banded = keep(banded)
     return banded, base
 
 
@@ -523,20 +518,22 @@ def simhash_dedup(
     # persisted: the chunk self-join below would otherwise re-execute
     # the whole fingerprint pipeline once per join side (chunk rows are
     # 3 longs per doc × 4)
-    chunked = base.select(
-        "_id_",
-        "_sim_",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("_sim_"), i * chunk_bits).bitwiseAND(
-                        F.lit((1 << chunk_bits) - 1).cast("long")
-                    )
-                    for i in range(4)
-                ]
-            )
-        ).alias("_chunk_", "_ckey_"),
-    ).persist()
+    chunked = keep(
+        base.select(
+            "_id_",
+            "_sim_",
+            F.posexplode(
+                F.array(
+                    *[
+                        F.shiftright(F.col("_sim_"), i * chunk_bits).bitwiseAND(
+                            F.lit((1 << chunk_bits) - 1).cast("long")
+                        )
+                        for i in range(4)
+                    ]
+                )
+            ).alias("_chunk_", "_ckey_"),
+        )
+    )
     a, b = chunked.alias("a"), chunked.alias("b")
     pairs = (
         a.join(
@@ -574,11 +571,10 @@ def ngram_jaccard_pairs(
     Jaccard ≥ ~0.5 shares its min shingle with probability ≥ Jaccard.
     Returns (doc_a, doc_b, jaccard)."""
     # persisted: consumed twice by the self-join below
-    base = (
+    base = keep(
         _shingle_rows(df, text_col, id_col, shingle_k)
         .groupBy("_id_")
         .agg(F.collect_set("_s_").alias("_sh_"), F.min("_s_").alias("_block_"))
-        .persist()
     )
     a, b = base.alias("a"), base.alias("b")
     inter = F.size(F.array_intersect("a._sh_", "b._sh_")).cast("double")
@@ -615,13 +611,12 @@ def embedding_cosine_pairs(
 
     # persisted: the bucket computation (num_planes interpreted
     # aggregate lambdas per row) is consumed twice by the self-join
-    base = (
+    base = keep(
         df.select(
             F.col(id_col).alias("_id_"),
             F.col(vec_col).alias("_v_"),
         )
         .withColumn("_bucket_", hyperplane_bucket(F.col("_v_"), num_planes, seed))
-        .persist()
     )
     a, b = base.alias("a"), base.alias("b")
     return (
@@ -662,8 +657,7 @@ def assign_clusters(
     exchange — and a lazily returned plan would execute AFTER the conf
     was restored, getting no benefit). NOTE the conf is session-global
     while held (graph.py documents the blast radius); the persisted
-    edge frame is released before returning, so the long-lived driver
-    session leaks nothing.
+    edge frame is released before returning (``session.owned``).
 
     ``broadcast_ids_max``: below this many ids (counted once — one
     job) the node-sized frames (labels, per-iteration neighbor minima)
@@ -674,16 +668,13 @@ def assign_clusters(
     rationale). Larger corpora fall back to the co-keyed shuffle join;
     pass 0 to force it. Results are identical on both paths
     (F.broadcast only hints a strategy)."""
-    from demy_spark.session import aqe_disabled
-
-    with aqe_disabled(pairs.sparkSession):
-        edges = (
+    with aqe_disabled(pairs.sparkSession), owned():
+        edges = keep(
             pairs.select(F.col("doc_a").alias("_x_"), F.col("doc_b").alias("_y_"))
             .unionByName(
                 pairs.select(F.col("doc_b").alias("_x_"), F.col("doc_a").alias("_y_"))
             )
             .distinct()
-            .persist()
         )
         labels = ids.select(
             F.col(id_col).alias("_x_"), F.col(id_col).alias("_lbl_")
@@ -711,11 +702,6 @@ def assign_clusters(
                 )
                 .localCheckpoint(eager=True)
             )
-        # the final label frame is materialized and references neither
-        # the edge frame nor upstream lineage — release the persisted
-        # edges here (the pagerank cache-ownership contract; before
-        # r14 this persist leaked for the session lifetime)
-        edges.unpersist(blocking=True)
     return labels.select(
         F.col("_x_").alias(id_col), F.col("_lbl_").alias("cluster_id")
     )
@@ -791,9 +777,9 @@ def semdedup(
         n_lists = derived_n_lists(corpus.count(), target_cluster_size)
     _, assigned = ivf_build(
         corpus, vec_col, id_col, n_lists=n_lists, train_iters=train_iters,
-        own_persist=True,  # released below once base is materialized
+        own_persist=True,  # released early below once base is materialized
     )
-    base = (
+    base = keep(
         corpus.select(
             F.col(id_col).alias("_id_"),
             F.col(vec_col).cast("array<double>").alias("_v_"),
@@ -809,11 +795,10 @@ def semdedup(
             ),
             "_id_",
         )
-        .persist()
     )
     # materialize base (its cache now carries the assignment), then
-    # release ivf_build's persisted assignment frame — the ownership
-    # contract ivf_build documents; base is its only consumer here
+    # release ivf_build's cached assignment early: base is its only
+    # consumer here
     base.count()
     assigned.unpersist()
     tau_micro = int(round(float(tau) * 1_000_000))

@@ -60,6 +60,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from demy_spark.session import keep
+
 K1 = 1.2
 B = 0.75
 EXACT_BOOST = 4.0
@@ -163,9 +165,8 @@ class FuzzyIndex:
       fuzzy candidate generator.
 
     A built index persists its row-id-stamped ``right`` at
-    construction (lazily; the first action fills it). The caller
-    releases it (``index.right.unpersist()`` or clearCache) with the
-    index.
+    construction (lazily; the first action fills it); its owner:
+    ``session.owned``.
     """
 
     def __init__(
@@ -184,7 +185,7 @@ class FuzzyIndex:
         # differently per plan), so an unpersisted stamp hands the
         # same row different ids in different frames (and in save()'s
         # four writes)
-        self.right = right.withColumn(RID, F.monotonically_increasing_id()).persist()
+        self.right = keep(right.withColumn(RID, F.monotonically_increasing_id()))
         toks = _tokenize(F.col(text_col), token_pattern)
         if boost_acronyms:
             toks = _double_acronyms(toks)
@@ -215,8 +216,7 @@ class FuzzyIndex:
 
     def persist(self) -> "FuzzyIndex":
         for df in (self.right, self.scored_postings, self.vocab):
-            if not df.is_cached:
-                df.cache()
+            keep(df)
         return self
 
     def save(self, path: str) -> None:

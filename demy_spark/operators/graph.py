@@ -54,6 +54,8 @@ multigraphs).
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -61,7 +63,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from demy_spark.io import local_frame
-from demy_spark.session import aqe_disabled
+from demy_spark.session import aqe_disabled, keep, owned
 
 __all__ = ["pagerank"]
 
@@ -153,15 +155,10 @@ def pagerank(
     ``"keep"`` always takes the distributed path, since the driver
     path has no iterated plan to keep.
 
-    Cache ownership: the default driver path and ``"eager"`` release
-    every internal persisted frame before returning (the driver path's
-    result is a ``LocalRelation``; the eager path's final rank frame
-    is materialized), so the call leaves no cached block behind. Under
-    ``"keep"`` the returned plan still reads them, so the caller
-    releases (``spark.catalog.clearCache()`` or session end) after its
-    final action. blocking=True on every release keeps the next
-    same-plan persist (the next bench pass, the next query in a
-    long-lived session) from racing the deferred drop.
+    Cache ownership (``session.owned``): the default driver path and
+    ``"eager"`` release their cached frames before returning; under
+    ``"keep"`` the returned plan still reads them, so the caller's
+    scope owns them.
 
     SESSION-GLOBAL CONF WHILE RUNNING: the call holds
     ``session.aqe_disabled`` — AQE is disabled for the WHOLE
@@ -191,7 +188,8 @@ def pagerank(
     if scale <= 0:
         raise ValueError(f"scale must be positive, got {scale}")
 
-    with aqe_disabled(edges.sparkSession):
+    scope = owned() if lineage == "eager" else nullcontext()
+    with aqe_disabled(edges.sparkSession), scope:
         w_expr = (
             F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
         )
@@ -203,18 +201,20 @@ def pagerank(
         agg = e.groupBy("_s_", "_d_").agg(F.sum("_w_").alias("_w_"))
         tot = agg.groupBy("_s_").agg(F.sum("_w_").alias("_tot_"))
         # (src, dst, w, out_total): persisted once, joined every iteration
-        trans = agg.join(tot, "_s_").persist()
+        trans = keep(agg.join(tot, "_s_"))
 
         raw = nodes.select(F.col(node_col).alias("_v_")).where(
             F.col("_v_").isNotNull()
         )
         # dangling flag resolved ONCE (the edge set is static); distinct
         # before the join so duplicate src rows cannot fan the node frame
-        base = raw.join(
-            trans.select("_s_").distinct().withColumn("_out_", F.lit(True)),
-            raw["_v_"] == F.col("_s_"),
-            "left",
-        ).select("_v_", F.coalesce("_out_", F.lit(False)).alias("_out_")).persist()
+        base = keep(
+            raw.join(
+                trans.select("_s_").distinct().withColumn("_out_", F.lit(True)),
+                raw["_v_"] == F.col("_s_"),
+                "left",
+            ).select("_v_", F.coalesce("_out_", F.lit(False)).alias("_out_"))
+        )
 
         # ONE job resolves the node-row count (which picks the path)
         # and whether any dangling node exists at all — when none does
@@ -231,8 +231,6 @@ def pagerank(
         n = int(n_nodes) if n_nodes is not None else rows
         has_dangling = int(stats["_nd_"]) > 0
         if n <= 0:
-            trans.unpersist(blocking=True)
-            base.unpersist(blocking=True)
             return raw.select(
                 F.col("_v_").alias(node_col),
                 F.lit(0).cast("long").alias("rank_fp"),
@@ -245,21 +243,17 @@ def pagerank(
             and rows <= broadcast_nodes_max
             and _same_key_domain(node_type, trans.schema["_d_"].dataType)
         ):
-            try:
-                # the node table is collected only once its size is known
-                return _driver_ranks(
-                    trans,
-                    base.toArrow(),
-                    node_col=node_col,
-                    node_type=node_type,
-                    n=n,
-                    d=d,
-                    iterations=iterations,
-                    scale=scale,
-                )
-            finally:
-                trans.unpersist(blocking=True)
-                base.unpersist(blocking=True)
+            # the node table is collected only once its size is known
+            return _driver_ranks(
+                trans,
+                base.toArrow(),
+                node_col=node_col,
+                node_type=node_type,
+                n=n,
+                d=d,
+                iterations=iterations,
+                scale=scale,
+            )
 
         teleport = ((100 - d) * scale) // (100 * n)  # exact Python bigint div
         ranks = base.withColumn("_r_", F.lit(scale // n).cast("long"))
@@ -289,15 +283,6 @@ def pagerank(
             )
             if lineage == "eager":
                 ranks = ranks.localCheckpoint(eager=True)
-        # with eager checkpoints the final rank frame is already
-        # materialized and references neither persisted frame, so both
-        # release here; iterations == 0 leaves ranks reading base
-        # directly (trans is unused either way). Under "keep" the
-        # returned plan still reads them: the CALLER releases.
-        if lineage == "eager":
-            trans.unpersist(blocking=True)
-            if iterations > 0:
-                base.unpersist(blocking=True)
         return ranks.select(
             F.col("_v_").alias(node_col), F.col("_r_").alias("rank_fp")
         )

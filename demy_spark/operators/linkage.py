@@ -28,6 +28,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from demy_spark.session import keep
+
 __all__ = ["record_linkage", "field_similarity_micro", "sorted_neighborhood_pairs"]
 
 _MICRO = 1_000_000
@@ -156,17 +158,21 @@ def sorted_neighborhood_pairs(
     the (sort_col, id) total order. Candidates come from a co-keyed
     self-join on position buckets of width ``window`` (each row joins
     its own and the next bucket), fan-out bounded by 2*window per
-    row. The position frame is persisted for its three join branches
-    and released by the ContextCleaner with the result's lifetime.
+    row. The position frame is persisted for its three join branches;
+    the ContextCleaner does not free it (the CacheManager holds it), so
+    with ``order_positions``' own frame it belongs to the caller's
+    ``session.owned`` scope.
     """
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
     from demy_spark.operators.topk import order_positions
 
-    pos = order_positions(
-        df.select(F.col(id_col).alias("_id_"), F.col(sort_col).alias("_k_")),
-        [F.col("_k_").asc(), F.col("_id_").asc()],
-    ).persist()
+    pos = keep(
+        order_positions(
+            df.select(F.col(id_col).alias("_id_"), F.col(sort_col).alias("_k_")),
+            [F.col("_k_").asc(), F.col("_id_").asc()],
+        )
+    )
     a = pos.select(
         F.col("_id_").alias("id_a"),
         F.col("_pos_").alias("pos_a"),

@@ -39,7 +39,6 @@ iteration count by construction.
 
 from __future__ import annotations
 
-import re
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Window
@@ -47,61 +46,26 @@ from pyspark.sql import functions as F
 
 from demy_spark.functions.textstats import norm_tokens
 from demy_spark.io import local_frame
-from demy_spark.session import aqe_disabled
+from demy_spark.session import aqe_disabled, checkpoint_dir_set, keep
 
 __all__ = ["apply_merges", "bpe_encode", "bpe_train", "phrase_merges"]
 
 
 @contextmanager
-def _checkpoint_dir(spark, checkpoint_dir: str | None):
-    """Set the reliable-checkpoint directory for the duration, then
-    put a pre-existing one back (if none was set the new one stays —
-    Spark has no public unset). A lazy ``checkpoint()`` keeps the
-    directory that was set when it was CALLED, so restoring before
-    its first action is safe."""
-    prev_ckpt = spark.sparkContext.getCheckpointDir()
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-    try:
-        yield
-    finally:
-        if checkpoint_dir is not None and prev_ckpt is not None:
-            # getCheckpointDir() returns the RESOLVED path — the
-            # user-supplied root plus a per-set UUID component. Restore
-            # the root, not the resolved path: re-setting the resolved
-            # path would nest a fresh UUID one level deeper on every
-            # call (root/uuid1/uuid2/... growing unboundedly).
-            spark.sparkContext.setCheckpointDir(_strip_ckpt_uuid(prev_ckpt))
-
-
-@contextmanager
 def _training_loop_conf(spark, checkpoint_dir: str | None):
     """Session settings for an eager merge-round loop, restored on
-    exit: the reliable-checkpoint directory (``_checkpoint_dir``), and
-    AQE off for the duration — every round's frames are vocab-sized,
-    where adaptive replanning adds a scheduler job per exchange and
-    optimizes nothing (measured in PLANS.md round-5: 37 → 13 jobs for
+    exit: the reliable-checkpoint directory
+    (``session.checkpoint_dir_set``), and AQE off for the duration —
+    every round's frames are vocab-sized, where adaptive replanning
+    adds a scheduler job per exchange and optimizes nothing (measured in PLANS.md round-5: 37 → 13 jobs for
     6 BPE rounds). The AQE flip is the refcounted
     ``session.aqe_disabled`` hold pagerank uses, so a trainer that
     overlaps a pagerank call neither re-enables AQE under the other's
     loop nor leaves it off. Other queries the caller runs
     CONCURRENTLY with training would plan with AQE off too — the
     documented tradeoff of both mutations being session-global."""
-    with _checkpoint_dir(spark, checkpoint_dir), aqe_disabled(spark):
+    with checkpoint_dir_set(spark, checkpoint_dir), aqe_disabled(spark):
         yield
-
-
-_CKPT_UUID_RE = re.compile(
-    r"/[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}/?$"
-)
-
-
-def _strip_ckpt_uuid(resolved: str) -> str:
-    """Undo SparkContext's UUID suffixing of a checkpoint root so a
-    restored directory doesn't nest (``setCheckpointDir(d)`` resolves
-    to ``d/<uuid>``; restoring the resolved value and setting again
-    would yield ``d/<uuid>/<uuid2>``)."""
-    return _CKPT_UUID_RE.sub("", resolved) or resolved
 
 
 def _argmax_pair(counts: DataFrame):
@@ -389,7 +353,7 @@ def _replay_merges(
     reliable checkpoint into ``checkpoint_dir`` when it is set; the
     session's previous directory is back on return). Shared by
     ``apply_merges`` (word level) and ``bpe_encode`` (char level)."""
-    with _checkpoint_dir(t.sparkSession, checkpoint_dir):
+    with checkpoint_dir_set(t.sparkSession, checkpoint_dir):
         for w1, w2 in merge_list:
             paired = t.withColumn("_wn_", F.lead("_w_").over(wdoc)).withColumns(
                 {"_w1_": F.lit(w1), "_w2_": F.lit(w2)}
@@ -479,7 +443,7 @@ def bpe_train(
         # exchange + sort of the freq side per round for a value that
         # is constant per word. Carried as a passenger column, a round
         # is exactly one groupBy exchange + the argmax.
-        freqs = vocab.persist()
+        freqs = keep(vocab)
         t = _char_rows(freqs, end_of_word, carry=("_freq_",)).localCheckpoint(
             eager=False
         )
@@ -573,7 +537,7 @@ def bpe_encode(
     vocab = F.broadcast(
         vocab_symbols.select(F.col("word").alias("_word_"), "symbols")
     )
-    joined = words.join(vocab, "_word_", "left").persist()
+    joined = keep(words.join(vocab, "_word_", "left"))
     hit = joined.where(F.col("symbols").isNotNull())
     miss = joined.where(F.col("symbols").isNull()).select("_did_", "_p_", "_word_")
     out_cols = [

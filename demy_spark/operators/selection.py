@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from demy_spark.functions.textstats import norm_tokens as _tokens
 from demy_spark.operators.dedup import _md5_long
+from demy_spark.session import keep
 
 __all__ = [
     "bigram_lm_scores",
@@ -209,7 +210,7 @@ def dsir_scores(
     # ONE tokenize+hash pass over the raw corpus feeds both the cr
     # counts and the per-doc probe below (persisted: two DAG branches
     # — without it the dominant corpus scan runs twice per action)
-    raw_keyed = buckets(raw, with_id=True).persist()
+    raw_keyed = keep(buckets(raw, with_id=True))
     cr = raw_keyed.groupBy("_b_").agg(F.count(F.lit(1)).alias("_cr_"))
     nt = ct.agg(F.sum("_ct_").alias("_nt_"))
     nr = cr.agg(F.sum("_cr_").alias("_nr_"))

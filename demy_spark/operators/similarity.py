@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from demy_spark.functions.vectors import cosine_similarity, dot, l2_norm
 from demy_spark.io import local_frame
+from demy_spark.session import keep, owned
 
 
 def _hoisted_cosine() -> Column:
@@ -209,17 +210,10 @@ def ivf_build(
     uncapped builder, e.g. for an oracle replay that pins the
     quantizer).
 
-    Persist contract (``own_persist``): by default NOTHING stays
-    cached — the cap's internal multi-pass work uses a transient
-    persist and drops it before returning, so lazy wrappers
-    (ivf_cosine_topk with index=None) cannot leak one cached
-    corpus-scale frame per call; the caller's first use re-derives
-    the assignment once (a corpus scan + k broadcast cosines).
-    Callers that will consume the assignments repeatedly AND can
-    release them (semdedup folds them into its own persisted frame)
-    pass ``own_persist=True`` to receive the still-cached frame and
-    MUST unpersist it. With ``max_list_factor=None`` nothing is
-    cached either way."""
+    ``own_persist=True`` returns the assignment still cached (semdedup
+    reads it repeatedly); otherwise nothing stays cached. Ownership of
+    a cached frame: ``session.owned``. With ``max_list_factor=None``
+    nothing is cached either way."""
     from demy_spark.operators.dedup import _md5_long
     from demy_spark.topic import seeded_kmeans
 
@@ -280,18 +274,20 @@ def _split_hot_lists(
     dictionary-sized: the per-list histogram (n_lists rows) and the
     sub-centroid matrix (n_new × dim).
 
-    Persist contract (ADVICE r6 + code-review r7): the assignment is
-    persisted TRANSIENTLY for this function's own multi-pass work
-    (histogram + sub-centroid job). With ``own_persist=False`` (the
-    default) every cache is dropped before returning — lazy wrappers
-    cannot leak — at the cost of the caller's first use re-deriving
-    the assignment once (a corpus scan + k broadcast cosines). With
-    ``own_persist=True`` the RETURNED frame stays cached (the
-    histogram just materialized it; dropping it measured +27% on
-    semdedup end-to-end) and the caller MUST unpersist it once folded
-    into its own persisted state."""
+    The assignment is cached for this function's own passes (the
+    histogram and the sub-centroid job). With ``own_persist=True`` the
+    returned frame stays cached (the histogram just materialized it;
+    dropping it measured +27% on semdedup end-to-end), owned as
+    ``session.owned`` describes; otherwise the call releases every
+    cache it made before returning."""
+    if not own_persist:
+        with owned():
+            return _split_hot_lists(
+                corpus, vec_col, id_col, centers, assigned, max_list_factor,
+                own_persist=True,
+            )
     n_lists = len(centers)
-    assigned = assigned.persist()
+    assigned = keep(assigned)
     sizes = {
         r["cluster"]: r["_sz_"]
         for r in assigned.groupBy("cluster")
@@ -299,15 +295,9 @@ def _split_hot_lists(
         .collect()
     }
     total = sum(sizes.values())
-    if total == 0:
-        if not own_persist:
-            assigned.unpersist()
-        return centers, assigned
     bound = max(1, -(-int(max_list_factor * total) // n_lists))
     hot = {c: sz for c, sz in sizes.items() if sz > bound}
     if not hot:
-        if not own_persist:
-            assigned.unpersist()
         return centers, assigned
     # (cluster, n_sublists, first extra codebook id); extras enumerate
     # ascending-cluster so the mapping is a pure function of the
@@ -326,7 +316,7 @@ def _split_hot_lists(
     )
     from demy_spark.operators.dedup import _md5_long
 
-    resplit = (
+    resplit = keep(
         assigned.join(F.broadcast(split_map), "cluster", "left")
         .withColumn(
             "_sub_",
@@ -349,7 +339,7 @@ def _split_hot_lists(
             .cast("int"),
         )
         .select(id_col, "cluster", "sim")
-    ).persist()
+    )
     # re-center: element-wise means of each new sublist (hot members
     # only — everything else keeps its Lloyd centroid)
     hot_ids = list(plan)
@@ -372,11 +362,8 @@ def _split_hot_lists(
     for r in sub_rows:
         out[r["cluster"]][r["_d_"]] = r["_m_"]
     # the sub-centroid job above materialized resplit's cache; the
-    # pre-split assignment has no remaining consumer — drop it. The
-    # returned frame stays cached only under own_persist=True.
+    # pre-split assignment has no remaining consumer — drop it early
     assigned.unpersist()
-    if not own_persist:
-        resplit.unpersist()
     return out, resplit
 
 
@@ -579,18 +566,12 @@ def pq_build(
     # pq_adc_topk alone runs it three times (the dsub probe, the
     # broadcast LUT build, and again inside the codes argmin), i.e.
     # three full corpus passes for one training result (r13, guide
-    # §2.4). Reclamation honesty (ADVICE r13): DataFrame.persist pins
-    # the InMemoryRelation in the session's CacheManager — it is NOT
-    # ContextCleaner-reclaimed when the frames are dropped. The pinned
-    # entry is dictionary-sized (KBs), the bench clearCache()s between
-    # extras, and a long-lived session releases it with
-    # spark.catalog.clearCache() / unpersist after the final action —
-    # the caller-owned release contract ivf_build documents.
-    cent1 = (
+    # §2.4). Its owner: ``session.owned``.
+    cent1 = keep(
         pts.join(assign0, ["_id_", "_sub_"])
         .groupBy("_sub_", "_c_", "_dl_")
         .agg(F.avg("_x_").alias("_m_"))
-    ).persist()
+    )
     codes = _l2_argmin(pts, cent1).select(
         F.col("_id_").alias(id_col),
         F.col("_sub_").alias("sub"),

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from demy_spark.functions.textstats import norm_tokens, zs_trim
 from demy_spark.operators.dedup import _md5_long
+from demy_spark.session import keep
 
 __all__ = ["line_dedup", "duplicated_spans", "strip_duplicated_spans"]
 
@@ -254,7 +255,7 @@ def strip_duplicated_spans(
     """
     # one tokenize+explode scan feeds BOTH the coverage discovery and
     # the strip join (persisted: two DAG branches consume it)
-    t = _token_rows(docs, id_col, text_col).persist()
+    t = keep(_token_rows(docs, id_col, text_col))
     # renamed output columns: covered derives from t, so keeping _id_
     # would make the join a self-join with ambiguous attributes
     covered = _covered_positions(t, k=k, min_count=min_count).select(

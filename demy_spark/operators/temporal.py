@@ -38,6 +38,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from demy_spark.session import keep
+
 _GRAIN_ORDER = ("minute", "hour", "day", "week", "month", "quarter", "year")
 
 
@@ -205,10 +207,9 @@ def time_rollup(
     names = list(metrics)
     gcols = list(group_by)
 
-    finest = (
+    finest = keep(
         df.groupBy(F.date_trunc(gs[0], F.col(ts)).alias("bucket"), *gcols)
         .agg(*[m.alias(n) for n, m in metrics.items()])
-        .persist()
     )
     levels = {gs[0]: finest}
     for prev, g in zip(gs, gs[1:]):

@@ -19,6 +19,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from demy_spark.session import keep
+
 
 def top_k_per_group(
     df: DataFrame,
@@ -114,14 +116,15 @@ def order_positions(
     re-executed the exchange independently (e.g. exchange reuse
     disabled) they could sample DIFFERENT bounds and silently corrupt
     positions. One materialization = one set of bounds, by
-    construction. The cached frame is released by Spark's
-    ContextCleaner when the result goes out of scope.
+    construction. The cached frame is NOT freed by the ContextCleaner:
+    the session's CacheManager holds it until its owner releases it
+    (``session.owned``).
     """
     n_parts = df.sparkSession.sparkContext.defaultParallelism
-    part = (
-        df.repartitionByRange(n_parts, *order_cols)
-        .withColumn("_pid_", F.spark_partition_id())
-        .persist()
+    part = keep(
+        df.repartitionByRange(n_parts, *order_cols).withColumn(
+            "_pid_", F.spark_partition_id()
+        )
     )
     part.count()
     ranked = part.withColumn(

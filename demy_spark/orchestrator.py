@@ -31,6 +31,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from demy_spark.session import keep
+
 
 @dataclass
 class Step:
@@ -124,7 +126,7 @@ class Model:
             if step.repartition:
                 df = df.repartition(step.repartition)
             if step.cache:
-                df = df.cache()
+                df = keep(df)
             if step.snapshot:
                 if not self.snapshot_dir:
                     raise ValueError(f"step {step.name}: snapshot needs snapshot_dir")

@@ -25,6 +25,7 @@ from demy_spark.io import load_tables, local_frame, spread_narrow_scan
 from demy_spark.functions import textstats
 from demy_spark.functions.vectors import cosine_similarity
 from demy_spark.operators.topk import top_k_per_group
+from demy_spark.session import keep, owned
 
 
 @dataclass
@@ -1799,7 +1800,7 @@ def q54_binary_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("score"),
         y.alias("y"),
     )
-    sweep = threshold_sweep(scored, "score", "y", bins=20).persist()
+    sweep = keep(threshold_sweep(scored, "score", "y", bins=20))
     auc = roc_auc_from_sweep(sweep)
     w = Window.orderBy(F.desc("f1"), F.asc("threshold"))
     best = (
@@ -11004,7 +11005,6 @@ def q152_supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("a.ok") == F.col("b.ok")) & (F.col("a.s") != F.col("b.s")),
         )
         .select(F.col("a.s").alias("src"), F.col("b.s").alias("dst"))
-        .persist()  # derived once, consumed by both modes
     )
     nodes = t["supplier"].where(F.col("s_suppkey").isNotNull()).select(
         "s_suppkey"
@@ -11021,10 +11021,6 @@ def q152_supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             scale=_Q152_SCALE,
         ).select(F.lit(mode).alias("mode"), "s_suppkey", "rank_fp")
 
-    # materialize the shared edge frame ONCE before the modes start:
-    # both overlapped calls would otherwise race its first-touch cache
-    # build and redundantly compute the same partitions
-    pairs.count()
     # the two modes are independent graphs over the same edge frame —
     # overlap them so the second mode's jobs back-fill the scheduler
     # gaps of the first's per-iteration driver round trips (each
@@ -11043,13 +11039,20 @@ def q152_supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         except BaseException as exc:  # re-raised on the caller thread
             out[mode] = exc
 
-    threads = [
-        InheritableThread(target=_mode, args=("full", pairs)),
-        InheritableThread(
-            target=_mode, args=("dag", pairs.where(F.col("src") < F.col("dst")))
-        ),
-    ]
-    try:
+    # both modes have materialized (driver-built rank tables) when the
+    # scope releases the shared edge frame (``session.owned``)
+    with owned():
+        # derived once, consumed by both modes, and materialized ONCE
+        # before they start: both overlapped calls would otherwise race
+        # its first-touch cache build and compute the same partitions
+        pairs = keep(pairs)
+        pairs.count()
+        threads = [
+            InheritableThread(target=_mode, args=("full", pairs)),
+            InheritableThread(
+                target=_mode, args=("dag", pairs.where(F.col("src") < F.col("dst")))
+            ),
+        ]
         for t in threads:
             t.start()
         for t in threads:
@@ -11057,14 +11060,6 @@ def q152_supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         for mode in ("full", "dag"):
             if isinstance(out[mode], BaseException):
                 raise out[mode]
-    finally:
-        # pagerank has materialized both modes by now (a driver-built
-        # rank table), so the shared edge frame releases here (cache
-        # hygiene: the driver sim runs 152 queries in ONE session;
-        # blocking for the same same-plan re-persist race graph.py
-        # documents). In the finally so a failing mode cannot leak the
-        # persisted edge frame for the rest of the session (ADVICE r13).
-        pairs.unpersist(blocking=True)
     return out["full"].unionByName(out["dag"])
 
 

@@ -1,5 +1,7 @@
-"""SparkSession factory, and the refcounted AQE hold of the eager
-iteration loops.
+"""SparkSession factory, and every session-scoped state change an
+operator makes: the refcounted AQE hold of the eager iteration loops,
+the checkpoint-directory hold of the trainers, and the ownership scope
+of cached intermediates (``keep`` / ``owned``).
 
 Parity: core/src/main/scala/Application.scala:10-54 (session bootstrap).
 The reference builds one session per spark-submit run; we expose a
@@ -9,10 +11,13 @@ factory with cluster-sane defaults that also behaves on local[N].
 from __future__ import annotations
 
 import os
+import re
 import threading
 from contextlib import contextmanager
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_parallelism() -> int:
@@ -111,3 +116,79 @@ def aqe_disabled(spark: SparkSession):
             if hold[0] == 0:
                 del _aqe_holds[key]
                 spark.conf.set("spark.sql.adaptive.enabled", hold[1])
+
+
+@contextmanager
+def checkpoint_dir_set(spark: SparkSession, path: str | None):
+    """Set the reliable-checkpoint directory for the duration, then
+    put a pre-existing one back (if none was set the new one stays —
+    Spark has no public unset). A lazy ``checkpoint()`` keeps the
+    directory that was set when it was CALLED, so restoring before
+    its first action is safe. ``path=None`` changes nothing."""
+    prev = spark.sparkContext.getCheckpointDir()
+    if path is not None:
+        spark.sparkContext.setCheckpointDir(path)
+    try:
+        yield
+    finally:
+        if path is not None and prev is not None:
+            # getCheckpointDir() returns the RESOLVED path — the
+            # user-supplied root plus a per-set UUID component. Restore
+            # the root, not the resolved path: re-setting the resolved
+            # path would nest a fresh UUID one level deeper on every
+            # call (root/uuid1/uuid2/... growing unboundedly).
+            spark.sparkContext.setCheckpointDir(_strip_ckpt_uuid(prev))
+
+
+_CKPT_UUID_RE = re.compile(
+    r"/[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}/?$"
+)
+
+
+def _strip_ckpt_uuid(resolved: str) -> str:
+    """Undo SparkContext's UUID suffixing of a checkpoint root so a
+    restored directory doesn't nest (``setCheckpointDir(d)`` resolves
+    to ``d/<uuid>``; restoring the resolved value and setting again
+    would yield ``d/<uuid>/<uuid2>``)."""
+    return _CKPT_UUID_RE.sub("", resolved) or resolved
+
+
+# the innermost open owned() scope of this context: the frames it releases
+_scope: ContextVar[list[DataFrame] | None] = ContextVar("demy_spark_owned", default=None)
+_keep_lock = threading.Lock()
+
+
+def keep(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and return it, owned by the innermost ``owned()``
+    scope open in this context; with none open, the caller releases it
+    (the ContextCleaner never frees a persisted DataFrame: the
+    CacheManager holds it). A plan the CacheManager already holds is
+    neither persisted again nor owned: its first keeper still owns it."""
+    with _keep_lock:  # two keepers of one plan: only the first owns it
+        if df.storageLevel != StorageLevel.NONE:
+            return df
+        df.persist()
+    frames = _scope.get()
+    if frames is not None:
+        frames.append(df)
+    return df
+
+
+@contextmanager
+def owned():
+    """Unpersist (``blocking=True``) every frame ``keep`` registers in
+    the block when it exits, by exception too. Scopes nest and are
+    per-context (a ``ContextVar``): threads on one session each release
+    only their own frames, and a new thread starts outside every scope.
+    An operator whose result no longer reads its caches wraps its body
+    in one; a caller that runs its final action inside one gets the
+    cache back as it found it. ``localCheckpoint`` blocks stay the
+    ContextCleaner's: freeing them early would break a re-run."""
+    frames: list[DataFrame] = []
+    token = _scope.set(frames)
+    try:
+        yield
+    finally:
+        _scope.reset(token)
+        for df in frames:
+            df.unpersist(blocking=True)

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from demy_spark.io import local_frame
+from demy_spark.session import keep, owned
 
 
 def _explode_dims(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -249,8 +250,8 @@ def seeded_kmeans(
     _update_centers), plus one final pass for the returned
     assignment."""
     k, dim = len(centers), len(centers[0])
-    base = df.select(id_col, vec_col).persist()
-    try:
+    with owned():
+        base = keep(df.select(id_col, vec_col))
         it = 0
         for it in range(1, max_iters + 1):
             new_centers = _update_centers(base, vec_col, centers, k, dim)
@@ -263,8 +264,6 @@ def seeded_kmeans(
             if shift < tol:
                 break
         return assign_to_centers(base, id_col, vec_col, centers), centers, it
-    finally:
-        base.unpersist()
 
 
 def online_center_updates(
@@ -557,20 +556,20 @@ def grow_topic_tree(
 
     ex = base.select("_id_", "_v_", F.posexplode(tw).alias("_ip_", "_w_"))
     cos = cosine_similarity(F.col("_v_"), F.col("_w_"))
-    sims = ex.select(
-        "_id_",
-        "_ip_",
-        F.round((cos + 1.0) / 2.0, sim_decimals).alias("_s_"),
-    ).persist()
-
     results: list[tuple] = []
-    persisted: list[DataFrame] = []
     # frontier: node path -> (global topword indices, rows frame of _id_)
     frontier: list[tuple[str, list[int], DataFrame, bool]] = [
         ("root", list(range(k)), base.select("_id_"), True)
     ]
     depth = 0
-    try:
+    with owned():
+        sims = keep(
+            ex.select(
+                "_id_",
+                "_ip_",
+                F.round((cos + 1.0) / 2.0, sim_decimals).alias("_s_"),
+            )
+        )
         while frontier and depth <= max_depth:
             nxt: list[tuple[str, list[int], DataFrame, bool]] = []
             for node, indices, rows, parent_ok in frontier:
@@ -584,7 +583,7 @@ def grow_topic_tree(
                 w_rank = Window.partitionBy("_id_").orderBy(
                     F.desc("_s_"), F.asc("_ip_")
                 )
-                best = (
+                best = keep(
                     rows.join(sims, "_id_")
                     .join(mdf, "_ip_")
                     .withColumn("_rk_", F.row_number().over(w_rank))
@@ -594,9 +593,7 @@ def grow_topic_tree(
                         (F.col("_j_") % n_centers).alias("_ic_"),
                         "_s_",
                     )
-                    .persist()
                 )
-                persisted.append(best)
                 stats = best.groupBy("_ic_").agg(
                     F.count(F.lit(1)).alias("n"),
                     F.sum("_s_").alias("ps"),
@@ -638,10 +635,6 @@ def grow_topic_tree(
                         )
             frontier = nxt
             depth += 1
-    finally:
-        sims.unpersist()
-        for p in persisted:
-            p.unpersist()
 
     from pyspark.sql import types as T
 

@@ -24,6 +24,8 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from demy_spark.session import keep, owned
+
 # Knuth multiplicative hash constant (2^32 / phi). Chosen over F.hash /
 # xxhash64 deliberately: plain integer arithmetic reproduces bit-exactly
 # in any SQL engine (the DuckDB oracle), while remaining uniform enough
@@ -251,8 +253,8 @@ def binary_metrics(
     """The reference's BinaryOptimalEvaluator metric bundle: best-f1
     threshold row + areaUnderROC + chi-square (statistic and p-value)
     at the best threshold. One constant-size sweep feeds everything."""
-    sweep = threshold_sweep(df, score_col, label_col, bins=bins).persist()
-    try:
+    with owned():
+        sweep = keep(threshold_sweep(df, score_col, label_col, bins=bins))
         best = best_threshold(sweep)
         auc = roc_auc_from_sweep(sweep).collect()[0]["auc"]
         stat_row = (
@@ -267,5 +269,3 @@ def binary_metrics(
             "chi2": chi2,
             "p_value": chi_square_p(chi2) if chi2 is not None else None,
         }
-    finally:
-        sweep.unpersist()

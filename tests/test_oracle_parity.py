@@ -13,6 +13,7 @@ import duckdb
 import pytest
 
 from demy_spark import queries as Q
+from demy_spark.session import owned
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -153,7 +154,25 @@ SLOW_PARITY = {"q69_center_hierarchy", "q46_pos_tag", "q66_pos_tag_greedy"}
     ],
 )
 def test_oracle_parity(name, spark, sf_dir, ddb):
-    assert_query_parity(name, spark, sf_dir, ddb)
+    """Oracle parity, and the leak gate: run with its final action
+    inside ``session.owned``, a query leaves the CacheManager as it
+    found it, and every RDD it leaves persisted is a checkpoint RDD
+    (``localCheckpoint`` blocks, which the ContextCleaner frees)."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    jsc = spark.sparkContext._jsc
+    entries = cache.cachedData().size()
+    held = set(jsc.getPersistentRDDs().keySet().toArray())
+    with owned():
+        assert_query_parity(name, spark, sf_dir, ddb)
+    assert cache.cachedData().size() == entries, f"{name}: left a cached plan"
+    left = {
+        rdd_id: rdd.rdd()
+        for rdd_id, rdd in jsc.getPersistentRDDs().items()
+        if rdd_id not in held
+    }
+    assert all(rdd.isLocallyCheckpointed() for rdd in left.values()), (
+        f"{name}: left persisted RDDs {[rdd.toDebugString() for rdd in left.values()]}"
+    )
 
 
 ROWS_ONLY_QUERIES = sorted(n for n, q in Q.REGISTRY.items() if not q.oracle)

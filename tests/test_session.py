@@ -1,4 +1,5 @@
-"""Session factory settings and the session-scoped conf holds."""
+"""Session factory settings, the session-scoped conf holds and the
+ownership scope of cached intermediates."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ import threading
 
 from demy_spark.operators.phrases import _training_loop_conf
 from demy_spark.queries import REGISTRY
-from demy_spark.session import aqe_disabled
+from demy_spark.session import _scope, aqe_disabled, keep, owned
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 AQE = "spark.sql.adaptive.enabled"
@@ -133,3 +134,116 @@ def test_aqe_hold_threaded_stress(spark):
     finally:
         sys.setswitchinterval(switch)
         spark.conf.set(AQE, prev)
+
+
+def _frame(spark, tag: int):
+    """A small frame whose plan is unique to ``tag`` (so no other test's
+    cache entry can stand in for it)."""
+    return spark.range(8).selectExpr(f"id * {tag} AS v")
+
+
+def _cached(df) -> bool:
+    return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+
+def test_owned_releases_its_frames_on_error(spark):
+    df = _frame(spark, 7001)
+    try:
+        with owned():
+            keep(df).count()
+            assert _cached(df)
+            raise RuntimeError("boom")
+    except RuntimeError:
+        pass
+    assert not _cached(df)
+
+
+def test_keep_does_not_own_a_plan_cached_before_it(spark):
+    df = _frame(spark, 7002).persist()
+    try:
+        with owned():
+            keep(_frame(spark, 7002)).count()  # same plan, another frame
+        assert _cached(df)
+    finally:
+        df.unpersist(blocking=True)
+
+
+def test_keep_without_a_scope_leaves_the_frame_to_the_caller(spark):
+    df = keep(_frame(spark, 7003))
+    try:
+        df.count()
+        assert _cached(df)
+    finally:
+        df.unpersist(blocking=True)
+
+
+def test_inner_scope_releases_at_its_own_exit(spark):
+    outer, inner = _frame(spark, 7004), _frame(spark, 7005)
+    with owned():
+        keep(outer)
+        with owned():
+            keep(inner)
+        assert not _cached(inner)
+        assert _cached(outer)
+    assert not _cached(outer)
+
+
+def test_scopes_on_two_threads_release_only_their_own_frames(spark):
+    """Two threads on ONE session, each in its own scope: the first to
+    leave releases its frame only; the other's stays cached until its
+    own scope ends."""
+    frames = {name: _frame(spark, tag) for name, tag in (("a", 7006), ("b", 7007))}
+    both_kept = threading.Barrier(2)
+    a_left = threading.Event()
+    seen: dict[str, bool] = {}
+
+    def run(name: str) -> None:
+        with owned():
+            keep(frames[name]).count()
+            both_kept.wait(timeout=60)
+            if name == "b":
+                a_left.wait(timeout=60)
+                seen["b_after_a_left"] = _cached(frames["b"])
+                seen["a_after_a_left"] = _cached(frames["a"])
+        if name == "a":
+            a_left.set()
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in frames]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=120)
+    assert not any(t.is_alive() for t in threads)
+    assert seen == {"b_after_a_left": True, "a_after_a_left": False}
+    assert not _cached(frames["b"])
+
+
+def test_concurrent_keeps_of_one_plan_have_one_owner(spark):
+    """More threads than cores keep the SAME plan, each in its own
+    scope: exactly one scope owns it (a check-then-persist without the
+    lock lets several see it uncached and all claim it), and it is
+    released once every scope has ended."""
+    n = 2 * (os.cpu_count() or 4)
+    start = threading.Barrier(n)
+    owners: list[int] = []
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+
+    def worker(i: int) -> None:
+        with owned():
+            start.wait(timeout=60)
+            keep(_frame(spark, 7008))
+            owners.append(len(_scope.get()))
+            start.wait(timeout=60)  # no scope exits before all have kept
+
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        assert len(owners) == n and sum(owners) == 1
+        assert not _cached(_frame(spark, 7008))
+    finally:
+        sys.setswitchinterval(switch)
