@@ -272,11 +272,16 @@ def checkpoint(
     this is the resumable-pipeline primitive: a step's output survives
     driver restarts, unlike ``df.cache()``.
     """
-    spark = df.sparkSession
+    reader = df.sparkSession.read
     marker = os.path.join(path, "_SUCCESS")
     if not (reuse_existing and os.path.exists(marker)):
-        writer = escape_columns(df).write.mode("overwrite")
+        escaped = escape_columns(df)
+        writer = escaped.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
+        else:
+            # the schema just written is known: reading with it skips
+            # the footer-inference job
+            reader = reader.schema(escaped.schema)
         writer.parquet(path)
-    return unescape_columns(spark.read.parquet(path))
+    return unescape_columns(reader.parquet(path))

@@ -648,16 +648,11 @@ def assign_clusters(
     clusters are shallow in practice, so ``max_iters``=5 suffices.
     Returns (id, cluster_id).
 
-    r14: this runs the pagerank iteration shape (session.aqe_disabled
-    — the exact loop this operator's idiom seeded). The call is EAGER:
+    r14: this runs the pagerank iteration shape. The call is EAGER:
     each iteration's label frame is materialized by a synchronous
-    localCheckpoint INSIDE the loop-scoped AQE-off conf (every
-    per-iteration frame is node-sized or persisted; adaptive
-    replanning optimizes nothing there yet costs one scheduler job per
-    exchange — and a lazily returned plan would execute AFTER the conf
-    was restored, getting no benefit). NOTE the conf is session-global
-    while held (graph.py documents the blast radius); the persisted
-    edge frame is released before returning (``session.owned``).
+    localCheckpoint inside ``session.aqe_disabled`` (which states why
+    and the cost); the persisted edge frame is released before
+    returning (``session.owned``).
 
     ``broadcast_ids_max``: below this many ids (counted once — one
     job) the node-sized frames (labels, per-iteration neighbor minima)

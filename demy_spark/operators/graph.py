@@ -160,24 +160,9 @@ def pagerank(
     ``"keep"`` the returned plan still reads them, so the caller's
     scope owns them.
 
-    SESSION-GLOBAL CONF WHILE RUNNING: the call holds
-    ``session.aqe_disabled`` — AQE is disabled for the WHOLE
-    SparkSession for the duration of the iteration loop and restored
-    on exit. Why: every per-iteration frame is node-sized or already
-    persisted, yet AQE materializes every exchange as its own
-    scheduler job (measured r13 at sf0.1: q152's two 5-iteration calls
-    read 83 jobs with AQE on vs 43 off on the broadcast path, 29 on the
-    shuffle path — OPTIMIZATION_r13.md). The driver path keeps the
-    hold for the same reason: with AQE on, q152 at sf0.01 ran 58 jobs
-    instead of 35 and its median wall rose from 1.89 to 2.10 s. Any
-    UNRELATED query another thread runs on the same session while this
-    call is in flight plans with AQE off: it still returns correct
-    results, but silently loses runtime coalescing/skew handling.
-    Concurrent iterative calls are safe (the hold is refcounted; q152
-    overlaps two modes deliberately); callers that
-    interleave ranking with serving traffic should run the ranker on
-    its own ``spark.newSession()``, which insulates SQLConf entirely —
-    the ``phrase_merges`` trainer contract.
+    AQE is off session-wide while the loop runs, on both paths:
+    ``session.aqe_disabled`` states the cost and how to insulate other
+    queries.
     """
     if lineage not in ("eager", "keep"):
         raise ValueError(f"lineage must be eager|keep, got {lineage!r}")

@@ -18,8 +18,9 @@ Design (both engines of the oracle gate replay it bit-for-bit):
   as the tuning thresholds; the earlier all-in-plan formulation cost
   ~7 jobs/round vs 2 and re-executed every argmax on output
   evaluation (PLANS.md round-5). Each round truncates lineage with
-  ``localCheckpoint`` (or a reliable ``checkpoint`` when
-  ``checkpoint_dir`` is passed), so plans stay bounded.
+  ``localCheckpoint`` (or, when ``checkpoint_dir`` is passed, a
+  parquet write and re-read through ``io.checkpoint``), so plans stay
+  bounded.
 - Merges apply left-to-right without overlap. For a self-adjacent
   pair (w,w) inside a run of equal tokens, the classic convention is
   to merge greedily from the run's start — position parity inside the
@@ -30,8 +31,9 @@ Design (both engines of the oracle gate replay it bit-for-bit):
   row_number, which both engines compute identically.
 
 Scale notes: per iteration — one pair-count aggregation (map-side
-combined, shuffle carries (pair, count) rows), a TakeOrdered argmax,
-and per-document windows over the token stream; no driver state, no
+combined, shuffle carries (pair, count) rows), a one-row ``min_by``
+argmax collected to the driver (one (w1, w2, count) triple per round
+of driver state), and per-document windows over the token stream; no
 global window, no array materialization of the corpus. Cost is
 O(iterations × corpus tokens); real tokenizer training runs a bounded
 iteration count by construction.
@@ -39,33 +41,33 @@ iteration count by construction.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+import uuid
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from demy_spark.functions.textstats import norm_tokens
-from demy_spark.io import local_frame
-from demy_spark.session import aqe_disabled, checkpoint_dir_set, keep
+from demy_spark.io import checkpoint, local_frame
+from demy_spark.session import aqe_disabled, keep
 
 __all__ = ["apply_merges", "bpe_encode", "bpe_train", "phrase_merges"]
 
 
-@contextmanager
-def _training_loop_conf(spark, checkpoint_dir: str | None):
-    """Session settings for an eager merge-round loop, restored on
-    exit: the reliable-checkpoint directory
-    (``session.checkpoint_dir_set``), and AQE off for the duration —
-    every round's frames are vocab-sized, where adaptive replanning
-    adds a scheduler job per exchange and optimizes nothing (measured in PLANS.md round-5: 37 → 13 jobs for
-    6 BPE rounds). The AQE flip is the refcounted
-    ``session.aqe_disabled`` hold pagerank uses, so a trainer that
-    overlaps a pagerank call neither re-enables AQE under the other's
-    loop nor leaves it off. Other queries the caller runs
-    CONCURRENTLY with training would plan with AQE off too — the
-    documented tradeoff of both mutations being session-global."""
-    with checkpoint_dir_set(spark, checkpoint_dir), aqe_disabled(spark):
-        yield
+def _run_dir(checkpoint_dir: str | None) -> str | None:
+    """This call's own directory under ``checkpoint_dir``: two calls
+    that share one never overwrite the rounds the other's returned
+    frame still reads."""
+    return None if checkpoint_dir is None else f"{checkpoint_dir}/{uuid.uuid4().hex}"
+
+
+def _truncate(t: DataFrame, run_dir: str | None, rnd: int) -> DataFrame:
+    """Cut a round's lineage: a lazy ``localCheckpoint`` (executor-local
+    blocks), or with a ``run_dir`` a reliable one — ``io.checkpoint``
+    writes the round as parquet under ``run_dir/rnd`` now and re-reads
+    it. The session's checkpoint directory is never touched."""
+    if run_dir is None:
+        return t.localCheckpoint(eager=False)
+    return checkpoint(t, f"{run_dir}/{rnd}", reuse_existing=False)
 
 
 def _argmax_pair(counts: DataFrame):
@@ -183,40 +185,33 @@ def phrase_merges(
     executor loss: a lost executor fails the job instead of
     recomputing. Fine for short interactive runs; for long
     many-iteration production runs pass ``checkpoint_dir`` (an
-    HDFS-compatible path) and each round uses a RELIABLE
-    ``checkpoint`` instead — slower (one distributed write per
-    round) but survives executor loss.
+    HDFS-compatible path) and each round is written as parquet under
+    ``checkpoint_dir/<call id>/<round>`` and re-read
+    (``io.checkpoint``) — slower (one write per round, and the next
+    round re-shuffles the stream by document) but survives executor
+    loss. The session's checkpoint directory is left as it was.
 
     The call is EAGER: rounds are inherently sequential (each round's
     pair depends on the previous round's stream), so the training
-    loop runs its Spark jobs inside this function — each round is ONE
-    TakeOrdered argmax (a single collected row: dictionary-sized
-    driver state, same contract as the tuning thresholds) plus the
-    round's count, and the returned ``merges`` frame is literal rows.
-    The earlier all-in-plan formulation re-executed every round's
-    argmax when the output was evaluated and paid a broadcast-
-    materialization job per round (~7 jobs/round vs 2 — measured in
-    PLANS.md round-5); the collected row also lets a pair-exhausted
-    corpus stop scheduling work for the remaining rounds entirely.
+    loop runs its Spark jobs inside this function — each round is a
+    single-row ``min_by`` argmax collected to the driver (``_argmax_pair``:
+    dictionary-sized driver state, same contract as the tuning
+    thresholds) plus the round's count, and the returned ``merges``
+    frame is literal rows. The earlier all-in-plan formulation
+    re-executed every round's argmax when the output was evaluated and
+    paid a broadcast-materialization job per round (~7 jobs/round vs
+    2 — measured in PLANS.md round-5); the collected row also lets a
+    pair-exhausted corpus stop scheduling work for the remaining
+    rounds entirely.
 
-    NOTE on session-global side effects: ``sparkContext
-    .setCheckpointDir`` is session-global; a pre-existing checkpoint
-    ROOT is restored before returning (if none was set, the directory
-    stays set — Spark has no public unset). AQE
-    (``spark.sql.adaptive.enabled``) is likewise disabled for the
-    duration of the call and restored on exit — any query another
-    thread runs on the SAME session while training is in flight plans
-    with AQE off. Callers who interleave training with serving
-    traffic should run the trainer on its own session; the config
-    mutations are SparkSession-scoped (SQLConf), so a sibling
-    ``spark.newSession()`` running the concurrent queries is fully
-    insulated (checkpoint dir is SparkContext-wide, but only trainers
-    write checkpoints).
+    AQE is off session-wide while the loop runs: ``session.aqe_disabled``
+    states the cost and how to insulate other queries.
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     spark = docs.sparkSession
-    with _training_loop_conf(spark, checkpoint_dir):
+    run_dir = _run_dir(checkpoint_dir)
+    with aqe_disabled(spark):
         t = docs.select(
             F.col(id_col).alias("_id_"),
             F.posexplode(norm_tokens(F.col(text_col))).alias("_p_", "_w_"),
@@ -241,10 +236,10 @@ def phrase_merges(
                     exhausted = True
                     tokens_after = t.count()
                 else:
-                    # localCheckpoint truncates the per-round lineage —
-                    # without it later rounds re-execute every earlier
-                    # round's window chain (measured 2.5× wall at 10×
-                    # data), and the plan depth grows per iteration
+                    # truncate the per-round lineage: without it
+                    # later rounds re-execute every earlier round's
+                    # window chain (measured 2.5× wall at 10× data),
+                    # and the plan depth grows per iteration
                     t = _merge_pass(
                         paired.withColumns(
                             {
@@ -255,13 +250,9 @@ def phrase_merges(
                         joiner,
                         wdoc,
                     )
-                    t = (
-                        t.checkpoint(eager=False)
-                        if checkpoint_dir is not None
-                        else t.localCheckpoint(eager=False)
-                    )
-                    # the count doubles as the round's checkpoint
-                    # materialization barrier
+                    t = _truncate(t, run_dir, it)
+                    # the count doubles as the round's local
+                    # checkpoint materialization barrier
                     tokens_after = t.count()
                     merge_rows.append(
                         (it, best["_w_"], best["_wn_"], best["_cnt_"], tokens_after)
@@ -303,9 +294,9 @@ def apply_merges(
     vocabularies are 10k-100k pairs; each pair becomes two literals
     in the plan — for very long lists, batch the calls). Same
     per-round lineage-truncation contract as ``phrase_merges``
-    (``checkpoint_dir`` for reliable checkpoints on long runs); the
-    session's checkpoint directory is set only while the rounds are
-    planned, and a pre-existing one is restored before returning.
+    (``checkpoint_dir`` for reliable checkpoints on long runs). With
+    ``checkpoint_dir`` the rounds are written during this call, not at
+    the caller's first action; without it the result stays lazy.
     """
     t = docs.select(
         F.col(id_col).alias("_id_"),
@@ -349,21 +340,14 @@ def _replay_merges(
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Apply a FROZEN merge list in rank order — one _merge_pass round
-    per pair, lineage truncated per round (localCheckpoint, or a
-    reliable checkpoint into ``checkpoint_dir`` when it is set; the
-    session's previous directory is back on return). Shared by
+    per pair, lineage truncated per round (``_truncate``). Shared by
     ``apply_merges`` (word level) and ``bpe_encode`` (char level)."""
-    with checkpoint_dir_set(t.sparkSession, checkpoint_dir):
-        for w1, w2 in merge_list:
-            paired = t.withColumn("_wn_", F.lead("_w_").over(wdoc)).withColumns(
-                {"_w1_": F.lit(w1), "_w2_": F.lit(w2)}
-            )
-            t = _merge_pass(paired, joiner, wdoc)
-            t = (
-                t.checkpoint(eager=False)
-                if checkpoint_dir is not None
-                else t.localCheckpoint(eager=False)
-            )
+    run_dir = _run_dir(checkpoint_dir)
+    for rnd, (w1, w2) in enumerate(merge_list, 1):
+        paired = t.withColumn("_wn_", F.lead("_w_").over(wdoc)).withColumns(
+            {"_w1_": F.lit(w1), "_w2_": F.lit(w2)}
+        )
+        t = _truncate(_merge_pass(paired, joiner, wdoc), run_dir, rnd)
     return t
 
 
@@ -411,25 +395,22 @@ def bpe_train(
     parity islands — self-adjacent pairs like ('a','a') in 'aaa'
     merge greedily from the left, the reference BPE convention).
     Per-round lineage truncates with localCheckpoint, or a RELIABLE
-    checkpoint when ``checkpoint_dir`` is set — real tokenizer runs
-    are 10k-100k rounds, exactly the executor-loss exposure the
-    word-level twins document.
+    parquet checkpoint under ``checkpoint_dir`` when it is set (see
+    ``phrase_merges``) — real tokenizer runs are 10k-100k rounds,
+    exactly the executor-loss exposure the word-level twins document.
 
     Like ``phrase_merges``, the call is EAGER with a driver-side
     1-row argmax per round (rounds are inherently sequential;
     2 jobs/round instead of ~7, pair-exhausted corpora stop
     scheduling entirely, and ``merge_table`` is literal rows that
-    never re-execute training). A pre-existing session checkpoint
-    ROOT is restored before returning when ``checkpoint_dir`` is set,
-    and AQE is disabled session-wide for the duration of the call
-    (restored on exit) — run the trainer on its own
-    ``spark.newSession()`` when serving queries share the session
-    (see ``phrase_merges``).
+    never re-execute training). AQE is off session-wide while the
+    loop runs (``session.aqe_disabled``).
     """
     if merges < 1:
         raise ValueError(f"merges must be >= 1, got {merges}")
     spark = docs.sparkSession
-    with _training_loop_conf(spark, checkpoint_dir):
+    run_dir = _run_dir(checkpoint_dir)
+    with aqe_disabled(spark):
         vocab = (
             docs.select(F.explode(norm_tokens(F.col(text_col))).alias("_id_"))
             .groupBy("_id_")
@@ -473,17 +454,8 @@ def bpe_train(
                 wdoc,
                 extra=("_freq_",),
             )
-            t = (
-                t.checkpoint(eager=False)
-                if checkpoint_dir is not None
-                else t.localCheckpoint(eager=False)
-            )
+            t = _truncate(t, run_dir, rank)
             merge_rows.append((rank, best["_w_"], best["_wn_"], best["_cnt_"]))
-        if checkpoint_dir is not None:
-            # the final round's reliable checkpoint must materialize
-            # while OUR directory is still set (every earlier round
-            # materialized through the next round's argmax)
-            t.count()
     merge_table = local_frame(
         spark, merge_rows, "rank int, sym1 string, sym2 string, pair_freq long"
     )

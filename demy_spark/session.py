@@ -1,7 +1,8 @@
-"""SparkSession factory, and every session-scoped state change an
-operator makes: the refcounted AQE hold of the eager iteration loops,
-the checkpoint-directory hold of the trainers, and the ownership scope
-of cached intermediates (``keep`` / ``owned``).
+"""SparkSession factory, the one session-state change an operator
+makes (``aqe_disabled``, the refcounted AQE hold of the eager
+iteration loops), and the ownership scope of cached intermediates
+(``keep`` / ``owned``). No operator sets the SparkContext checkpoint
+directory: reliable checkpoints write through ``io.checkpoint``.
 
 Parity: core/src/main/scala/Application.scala:10-54 (session bootstrap).
 The reference builds one session per spark-submit run; we expose a
@@ -11,7 +12,6 @@ factory with cluster-sane defaults that also behaves on local[N].
 from __future__ import annotations
 
 import os
-import re
 import threading
 from contextlib import contextmanager
 from contextvars import ContextVar
@@ -82,7 +82,7 @@ def get_spark(
 
 
 _aqe_lock = threading.Lock()
-_aqe_holds: dict = {}  # JVM session -> [depth, caller's AQE value]
+_aqe_holds: dict = {}  # JVM session -> [depth, caller's AQE value or None if unset]
 
 
 @contextmanager
@@ -90,22 +90,37 @@ def aqe_disabled(spark: SparkSession):
     """AQE off on ``spark`` while held, the caller's value restored
     when the LAST concurrent holder exits.
 
-    The eager iteration loops (pagerank, assign_clusters, the BPE and
-    phrase trainers) work on node- or vocab-sized frames where adaptive
-    replanning optimizes nothing yet costs one scheduler job per
-    exchange. The hold is refcounted per session, so overlapping calls
-    (q152 runs its two pagerank modes on threads; a trainer may run
-    beside them) neither restore early nor leave AQE off: a set/restore
-    pair per call would let the first exit turn AQE back on under a
-    running loop, and the last exit restore the ``false`` it saved.
-    Session-global while held — any unrelated query on the same session
-    plans with AQE off; run it on a sibling ``spark.newSession()``,
-    which has its own SQLConf and its own count here."""
+    Why: the eager iteration loops (``graph.pagerank``,
+    ``dedup.assign_clusters``, the phrase and BPE trainers) work on
+    node- or vocab-sized or already persisted frames, where adaptive
+    replanning optimizes nothing yet materializes every exchange as its
+    own scheduler job. Measured: q152's two 5-iteration pagerank calls
+    at sf0.1 ran 83 jobs with AQE on vs 43 off on the broadcast path
+    (OPTIMIZATION_r13.md); pagerank's driver path at sf0.01 ran 58 jobs
+    instead of 35 and its median wall rose from 1.89 to 2.10 s; six
+    BPE rounds ran 37 jobs instead of 13 (PLANS.md round-5). A loop
+    materializes its frames inside the hold: a lazily returned plan
+    would run after the restore and gain nothing.
+
+    Concurrency: the hold is refcounted per session, so overlapping
+    calls (q152 runs its two pagerank modes on threads; a trainer may
+    run beside them) neither restore early nor leave AQE off: a
+    set/restore pair per call would let the first exit turn AQE back on
+    under a running loop, and the last exit restore the ``false`` it
+    saved. A session that never set the key gets it unset again, not
+    set to Spark's default.
+
+    Blast radius: the conf is session-global while held. Any unrelated
+    query another thread runs on the same session meanwhile plans with
+    AQE off — correct results, but no runtime coalescing or skew
+    handling. Callers that interleave these operators with serving
+    traffic should run them on a sibling ``spark.newSession()``, which
+    has its own SQLConf and its own count here."""
     key = spark._jsparkSession
     with _aqe_lock:
         hold = _aqe_holds.get(key)
         if hold is None:
-            hold = _aqe_holds[key] = [0, spark.conf.get("spark.sql.adaptive.enabled", "true")]
+            hold = _aqe_holds[key] = [0, spark.conf.get("spark.sql.adaptive.enabled", None)]
             spark.conf.set("spark.sql.adaptive.enabled", "false")
         hold[0] += 1
     try:
@@ -115,42 +130,10 @@ def aqe_disabled(spark: SparkSession):
             hold[0] -= 1
             if hold[0] == 0:
                 del _aqe_holds[key]
-                spark.conf.set("spark.sql.adaptive.enabled", hold[1])
-
-
-@contextmanager
-def checkpoint_dir_set(spark: SparkSession, path: str | None):
-    """Set the reliable-checkpoint directory for the duration, then
-    put a pre-existing one back (if none was set the new one stays —
-    Spark has no public unset). A lazy ``checkpoint()`` keeps the
-    directory that was set when it was CALLED, so restoring before
-    its first action is safe. ``path=None`` changes nothing."""
-    prev = spark.sparkContext.getCheckpointDir()
-    if path is not None:
-        spark.sparkContext.setCheckpointDir(path)
-    try:
-        yield
-    finally:
-        if path is not None and prev is not None:
-            # getCheckpointDir() returns the RESOLVED path — the
-            # user-supplied root plus a per-set UUID component. Restore
-            # the root, not the resolved path: re-setting the resolved
-            # path would nest a fresh UUID one level deeper on every
-            # call (root/uuid1/uuid2/... growing unboundedly).
-            spark.sparkContext.setCheckpointDir(_strip_ckpt_uuid(prev))
-
-
-_CKPT_UUID_RE = re.compile(
-    r"/[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}/?$"
-)
-
-
-def _strip_ckpt_uuid(resolved: str) -> str:
-    """Undo SparkContext's UUID suffixing of a checkpoint root so a
-    restored directory doesn't nest (``setCheckpointDir(d)`` resolves
-    to ``d/<uuid>``; restoring the resolved value and setting again
-    would yield ``d/<uuid>/<uuid2>``)."""
-    return _CKPT_UUID_RE.sub("", resolved) or resolved
+                if hold[1] is None:
+                    spark.conf.unset("spark.sql.adaptive.enabled")
+                else:
+                    spark.conf.set("spark.sql.adaptive.enabled", hold[1])
 
 
 # the innermost open owned() scope of this context: the frames it releases

@@ -45,6 +45,22 @@ def test_checkpoint_escapes_bad_column_names(spark, tmp_path):
     assert out.count() == 3
 
 
+def test_checkpoint_reread_matches_inferred_schema(spark, tmp_path):
+    # a fresh write re-reads with the schema it wrote (no inference
+    # job); it must read back what a footer-inferred reuse reads
+    df = spark.sql(
+        "SELECT id, CAST(id AS DECIMAL(12, 2)) AS `price $`, TIMESTAMP'2024-01-02 03:04:05' AS ts,"
+        " TIMESTAMP_NTZ'2024-01-02 03:04:05' AS ntz, array(id, NULL) AS xs,"
+        " named_struct('a', id, 'b', map('k', CAST(id AS STRING))) AS s FROM range(3)"
+    )
+    path = os.path.join(str(tmp_path), "snap")
+    fresh = checkpoint(df, path, reuse_existing=False)
+    reused = checkpoint(df, path)
+    assert fresh.dtypes == reused.dtypes == df.dtypes
+    rows = lambda d: sorted(d.collect())  # noqa: E731
+    assert rows(fresh) == rows(reused) == rows(df)
+
+
 def test_orc_roundtrip_pushdown(spark, tmp_path):
     # ORC sink/scan preserves values and the scan prunes: the filter
     # must reach the OrcScan as a pushed filter and the read schema

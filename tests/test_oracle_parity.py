@@ -155,15 +155,23 @@ SLOW_PARITY = {"q69_center_hierarchy", "q46_pos_tag", "q66_pos_tag_greedy"}
 )
 def test_oracle_parity(name, spark, sf_dir, ddb):
     """Oracle parity, and the leak gate: run with its final action
-    inside ``session.owned``, a query leaves the CacheManager as it
-    found it, and every RDD it leaves persisted is a checkpoint RDD
+    inside ``session.owned``, a query leaves the session conf and the
+    SparkContext checkpoint dir as it found them (an AQE hold must be
+    released, a directory never set), the CacheManager as it found
+    it, and every RDD it leaves persisted is a checkpoint RDD
     (``localCheckpoint`` blocks, which the ContextCleaner frees)."""
     cache = spark._jsparkSession.sharedState().cacheManager()
     jsc = spark.sparkContext._jsc
+    conf = spark.conf.getAll
+    ckpt_dir = spark.sparkContext.getCheckpointDir()
     entries = cache.cachedData().size()
     held = set(jsc.getPersistentRDDs().keySet().toArray())
     with owned():
         assert_query_parity(name, spark, sf_dir, ddb)
+    after = spark.conf.getAll
+    drift = sorted(k for k in conf.keys() | after.keys() if conf.get(k) != after.get(k))
+    assert not drift, f"{name}: changed session conf {drift}"
+    assert spark.sparkContext.getCheckpointDir() == ckpt_dir, f"{name}: moved the checkpoint dir"
     assert cache.cachedData().size() == entries, f"{name}: left a cached plan"
     left = {
         rdd_id: rdd.rdd()

@@ -1,5 +1,9 @@
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from demy_spark.operators.phrases import apply_merges, phrase_merges
 
 
@@ -74,78 +78,148 @@ def test_phrase_merges_reliable_checkpoint_dir(spark, tmp_path):
     assert got == [("new", "york"), ("new@@york", "is")]
     assert tokens.count() == 4
     # the reliable checkpoint actually wrote to the requested dir
-    import os
-
     assert any(os.scandir(tmp_path / "ckpt"))
 
 
-def test_training_restores_session_checkpoint_dir_and_aqe(spark, tmp_path):
-    """The eager trainers set the session checkpoint dir and disable
-    AQE for the duration of the loop; a PRE-EXISTING checkpoint dir
-    and the AQE setting must both be back (even though the trainer's
-    own dir stays set when none existed before — documented)."""
+def _set_ckpt_field(sc, value) -> None:
+    # PySpark has no unset: the JVM field's setter is the only way back
+    # to "no directory" on the shared test session
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(value)
+
+
+@pytest.fixture
+def ckpt_states(spark, tmp_path):
+    """Session checkpoint-dir states to run under: unset, then a prior
+    directory. Yields a generator that moves the session to each state
+    and yields ``getCheckpointDir()`` there; the test's starting state
+    is back afterwards."""
+    sc = spark.sparkContext
+    prev = sc._jsc.sc().checkpointDir()
+
+    def states():
+        _set_ckpt_field(sc, sc._jvm.scala.Option.empty())
+        yield sc.getCheckpointDir()
+        sc.setCheckpointDir(str(tmp_path / "prior"))
+        yield sc.getCheckpointDir()
+
+    yield states()
+    _set_ckpt_field(sc, prev)
+
+
+def _round_dirs(root):
+    """{call dir: sorted round numbers} of the parquet rounds under a
+    ``checkpoint_dir``."""
+    return {
+        call: sorted(int(r) for r in os.listdir(root / call) if (root / call / r / "_SUCCESS").exists())
+        for call in sorted(os.listdir(root))
+    }
+
+
+def test_training_restores_session_checkpoint_dir_and_aqe(spark, tmp_path, ckpt_states):
+    """Trainers with a checkpoint_dir write their rounds under it and
+    never move the session checkpoint dir: unset stays unset, a prior
+    dir stays byte-identical. AQE is back, and the results match the
+    localCheckpoint path."""
     from demy_spark.operators.phrases import bpe_train
 
     sc = spark.sparkContext
-    prior = str(tmp_path / "prior")
-    sc.setCheckpointDir(prior)
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    docs = spark.createDataFrame([("ab ab",)], "text string")
-    mt, _ = bpe_train(docs, "text", merges=1, checkpoint_dir=str(tmp_path / "mine"))
-    assert mt.count() == 1
-    # setCheckpointDir nests a UUID subdir per call, so the restored
-    # dir is UNDER the prior root (not under the trainer's dir)
-    got = sc.getCheckpointDir()
-    assert got is not None and "/prior/" in got and "/mine" not in got
-    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
+    docs = spark.createDataFrame([(1, "ab ab new york new york")], "doc_id long, text string")
+    key = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
+    plain_bpe = [key(f) for f in bpe_train(docs, "text", merges=2)]
+    plain_pm = [key(f) for f in phrase_merges(docs, "doc_id", "text", iterations=2)]
+    for i, before in enumerate(ckpt_states):
+        bpe_dir, pm_dir = tmp_path / f"bpe{i}", tmp_path / f"pm{i}"
+        got_bpe = bpe_train(docs, "text", merges=2, checkpoint_dir=str(bpe_dir))
+        got_pm = phrase_merges(docs, "doc_id", "text", iterations=2, checkpoint_dir=str(pm_dir))
+        assert [key(f) for f in got_bpe] == plain_bpe
+        assert [key(f) for f in got_pm] == plain_pm
+        assert sc.getCheckpointDir() == before
+        assert list(_round_dirs(bpe_dir).values()) == [[1, 2]]
+        assert list(_round_dirs(pm_dir).values()) == [[1, 2]]
+        assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
 
 
-def test_training_checkpoint_restore_does_not_nest(spark, tmp_path):
-    """Restoring the ROOT, not the resolved UUID path: getCheckpointDir
-    returns root/<uuid>, and re-setting that resolved value would nest
-    a fresh UUID per trainer call (root/uuid1/uuid2/... growing
-    unboundedly). After any number of trainer calls the resolved dir
-    must sit DIRECTLY under the original root."""
+def test_training_checkpoint_restore_does_not_nest(spark, tmp_path, ckpt_states):
+    """Three trainer calls into one checkpoint_dir: the session's prior
+    dir is byte-identical afterwards (no restore, so no fresh UUID
+    component and no nesting), and each call wrote its rounds into
+    its own subdirectory."""
     from demy_spark.operators.phrases import bpe_train
 
     sc = spark.sparkContext
-    root = tmp_path / "prior"
-    sc.setCheckpointDir(str(root))
+    next(ckpt_states)  # unset
+    prior = next(ckpt_states)
+    assert prior is not None
     docs = spark.createDataFrame([("ab ab",)], "text string")
+    mine = tmp_path / "mine"
     for _ in range(3):
-        bpe_train(docs, "text", merges=1, checkpoint_dir=str(tmp_path / "mine"))
-    resolved = sc.getCheckpointDir()
-    assert resolved is not None
-    rel = resolved.split("/prior/", 1)[1].rstrip("/")
-    assert "/" not in rel, f"checkpoint dir nested: {resolved}"
+        bpe_train(docs, "text", merges=1, checkpoint_dir=str(mine))
+    assert sc.getCheckpointDir() == prior
+    assert list(_round_dirs(mine).values()) == [[1], [1], [1]]
 
 
-def test_apply_merges_restores_session_checkpoint_dir(spark, tmp_path):
-    """apply_merges(checkpoint_dir=...) sets the session checkpoint
-    dir only while it plans its rounds: afterwards the resolved dir
-    sits DIRECTLY under the caller's prior root, while the lazy
-    reliable checkpoints still land in the requested dir."""
-    import os
+def test_apply_merges_restores_session_checkpoint_dir(spark, tmp_path, ckpt_states):
+    """apply_merges(checkpoint_dir=...) writes its rounds under the
+    requested dir during the call and leaves the session checkpoint
+    dir as it found it, unset or set."""
+    sc = spark.sparkContext
+    docs = spark.createDataFrame([(1, "new york new york")], "doc_id long, text string")
+    for i, before in enumerate(ckpt_states):
+        mine = tmp_path / f"mine{i}"
+        for _ in range(2):
+            out = apply_merges(
+                docs, "doc_id", "text", [("new", "york"), ("zz", "qq")],
+                checkpoint_dir=str(mine),
+            )
+            assert [r["token"] for r in out.orderBy("pos").collect()] == [
+                "new@@york",
+                "new@@york",
+            ]
+        assert sc.getCheckpointDir() == before
+        assert list(_round_dirs(mine).values()) == [[1, 2], [1, 2]]
+
+
+def test_concurrent_apply_merges_keep_their_own_checkpoint_dirs(spark, tmp_path):
+    """Two apply_merges calls at once, each with its own checkpoint_dir:
+    each returns its own tokens, writes only under its own dir, and
+    the session checkpoint dir does not move."""
+    import threading
 
     sc = spark.sparkContext
-    root = tmp_path / "prior"
-    sc.setCheckpointDir(str(root))
-    docs = spark.createDataFrame([(1, "new york new york")], "doc_id long, text string")
-    for _ in range(2):
-        out = apply_merges(
-            docs, "doc_id", "text", [("new", "york")],
-            checkpoint_dir=str(tmp_path / "mine"),
-        )
-        assert [r["token"] for r in out.orderBy("pos").collect()] == [
-            "new@@york",
-            "new@@york",
-        ]
-    resolved = sc.getCheckpointDir()
-    assert resolved is not None and "/prior/" in resolved, resolved
-    rel = resolved.split("/prior/", 1)[1].rstrip("/")
-    assert "/" not in rel, f"checkpoint dir nested: {resolved}"
-    written = [d for _, dirs, _ in os.walk(tmp_path / "mine") for d in dirs]
-    assert any(d.startswith("rdd-") for d in written), written
+    cases = {
+        "a": ("new york is big new york", [("new", "york"), ("new@@york", "is")],
+              ["new@@york@@is", "big", "new@@york"]),
+        "b": ("a b c a b c", [("b", "c"), ("a", "b@@c")], ["a@@b@@c", "a@@b@@c"]),
+    }
+    before = sc.getCheckpointDir()
+    start = threading.Barrier(len(cases))
+    got: dict = {}
+
+    def run(name: str) -> None:
+        text, merges, _ = cases[name]
+        docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
+        start.wait(timeout=60)
+        try:
+            out = apply_merges(docs, "doc_id", "text", merges, checkpoint_dir=str(tmp_path / name))
+            got[name] = [r["token"] for r in out.orderBy("pos").collect()]
+        except BaseException as exc:  # re-raised below
+            got[name] = exc
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in cases]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert got == {name: want for name, (_, _, want) in cases.items()}
+    assert sc.getCheckpointDir() == before
+    for name in cases:
+        rounds = _round_dirs(tmp_path / name)
+        assert list(rounds.values()) == [[1, 2]], (name, rounds)
+        (call,) = rounds
+        last = spark.read.parquet(str(tmp_path / name / call / "2"))
+        assert sorted(r["_w_"] for r in last.collect()) == sorted(cases[name][2])
 
 
 def test_phrase_merges_greedy_argmax_chain(spark):

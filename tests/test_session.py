@@ -8,8 +8,8 @@ import random
 import subprocess
 import sys
 import threading
+from contextlib import ExitStack
 
-from demy_spark.operators.phrases import _training_loop_conf
 from demy_spark.queries import REGISTRY
 from demy_spark.session import _scope, aqe_disabled, keep, owned
 
@@ -71,7 +71,7 @@ def test_aqe_hold_survives_pagerank_bpe_interleave(spark):
     spark.conf.set(AQE, "true")
     try:
         pagerank_hold = aqe_disabled(spark)
-        bpe_hold = _training_loop_conf(spark, None)
+        bpe_hold = aqe_disabled(spark)
         pagerank_hold.__enter__()
         assert spark.conf.get(AQE) == "false"
         bpe_hold.__enter__()
@@ -94,7 +94,7 @@ def test_aqe_hold_is_counted_per_session(spark):
     other.conf.set(AQE, "true")
     try:
         with aqe_disabled(spark):
-            with _training_loop_conf(other, None):
+            with aqe_disabled(other):
                 assert spark.conf.get(AQE) == "false"
                 assert other.conf.get(AQE) == "false"
             assert other.conf.get(AQE) == "true"
@@ -104,10 +104,23 @@ def test_aqe_hold_is_counted_per_session(spark):
         spark.conf.set(AQE, prev)
 
 
+def test_aqe_hold_leaves_an_unset_key_unset(spark):
+    """A session that never set AQE (a plain driver session): the key is
+    unset again after the hold, not pinned to Spark's default."""
+    other = spark.newSession()
+    other.conf.unset(AQE)
+    assert AQE not in other.conf.getAll
+    with aqe_disabled(other):
+        assert other.conf.get(AQE) == "false"
+    assert AQE not in other.conf.getAll
+    assert other.conf.get(AQE) == "true"
+
+
 def test_aqe_hold_threaded_stress(spark):
-    """More threads than cores enter and leave pagerank's hold and the
-    trainer's at random points: every holder sees AQE off, and the
-    caller's value is back once all have left."""
+    """More threads than cores enter and leave the hold (pagerank's and
+    the trainers' are the same one) at random points, some nested two
+    deep: every holder sees AQE off, and the caller's value is back
+    once all have left."""
     prev = spark.conf.get(AQE, "true")
     spark.conf.set(AQE, "true")
     switch = sys.getswitchinterval()
@@ -117,8 +130,9 @@ def test_aqe_hold_threaded_stress(spark):
     def worker(seed: int) -> None:
         rng = random.Random(seed)
         for _ in range(25):
-            hold = aqe_disabled(spark) if rng.random() < 0.5 else _training_loop_conf(spark, None)
-            with hold:
+            with ExitStack() as holds:
+                for _ in range(rng.randint(1, 2)):
+                    holds.enter_context(aqe_disabled(spark))
                 if spark.conf.get(AQE) != "false":
                     seen_on.append(seed)
 
