@@ -64,10 +64,19 @@ def _truncate(t: DataFrame, run_dir: str | None, rnd: int) -> DataFrame:
     """Cut a round's lineage: a lazy ``localCheckpoint`` (executor-local
     blocks), or with a ``run_dir`` a reliable one — ``io.checkpoint``
     writes the round as parquet under ``run_dir/rnd`` now and re-reads
-    it. The session's checkpoint directory is never touched."""
+    it, then deletes round ``rnd - 1``, which was read only to write
+    this one (rounds are numbered 1, 2, ... per call). The deletion
+    goes through the Hadoop FileSystem API, so it reaches any
+    ``checkpoint_dir`` scheme Spark writes to. The session's checkpoint
+    directory is never touched."""
     if run_dir is None:
         return t.localCheckpoint(eager=False)
-    return checkpoint(t, f"{run_dir}/{rnd}", reuse_existing=False)
+    out = checkpoint(t, f"{run_dir}/{rnd}", reuse_existing=False)
+    if rnd > 1:
+        spark = out.sparkSession
+        prev = spark._jvm.org.apache.hadoop.fs.Path(f"{run_dir}/{rnd - 1}")
+        prev.getFileSystem(spark._jsc.hadoopConfiguration()).delete(prev, True)
+    return out
 
 
 def _argmax_pair(counts: DataFrame):
@@ -189,7 +198,9 @@ def phrase_merges(
     ``checkpoint_dir/<call id>/<round>`` and re-read
     (``io.checkpoint``) — slower (one write per round, and the next
     round re-shuffles the stream by document) but survives executor
-    loss. The session's checkpoint directory is left as it was.
+    loss. Only the last round stays on disk: each round's directory is
+    deleted once the next one is written. The session's checkpoint
+    directory is left as it was.
 
     The call is EAGER: rounds are inherently sequential (each round's
     pair depends on the previous round's stream), so the training

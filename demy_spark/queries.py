@@ -10979,11 +10979,13 @@ def q152_supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     No reference counterpart (the reference has no graph operators);
     LLM-pipeline extension. Scale shape: the transition frame is
-    persisted once per mode, the supplier ranks stay on the driver, and
-    each iteration is one pass over the transition frame (a join with
-    the broadcast rank table + one hash agg by dst; graph.py's 100 TB
-    contract); the co-occurrence self-join keys on l_orderkey so it
-    never leaves the order's partition group."""
+    persisted once per mode; the supplier ranks and (within
+    ``broadcast_nodes_max`` rows, as here) the transition frame are
+    collected to the driver, and every iteration runs there in pyarrow
+    with no Spark job (graph.py's 100 TB contract: larger edge sets get
+    one pass over the transition frame per iteration); the co-occurrence
+    self-join keys on l_orderkey so it never leaves the order's
+    partition group."""
     from demy_spark.operators.graph import pagerank
 
     t = _t(spark, sf_dir)
@@ -11023,9 +11025,8 @@ def q152_supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the two modes are independent graphs over the same edge frame —
     # overlap them so the second mode's jobs back-fill the scheduler
-    # gaps of the first's per-iteration driver round trips (each
-    # iteration reads its contributions back and updates the ranks on
-    # the driver before the next pass starts). This is the optimization
+    # gaps of the first's driver-side work (collecting its tables and
+    # running its iterations in pyarrow). This is the optimization
     # guide's concurrent-jobs recipe; pagerank's aqe_disabled hold is
     # refcounted for exactly this. InheritableThread
     # propagates the caller's job group/description, keeping the bench

@@ -96,8 +96,10 @@ def aqe_disabled(spark: SparkSession):
     replanning optimizes nothing yet materializes every exchange as its
     own scheduler job. Measured: q152's two 5-iteration pagerank calls
     at sf0.1 ran 83 jobs with AQE on vs 43 off on the broadcast path
-    (OPTIMIZATION_r13.md); pagerank's driver path at sf0.01 ran 58 jobs
-    instead of 35 and its median wall rose from 1.89 to 2.10 s; six
+    (OPTIMIZATION_r13.md); with pagerank's iterations on the driver,
+    q152 at sf0.01 still ran 30 jobs instead of 17 and a median wall of
+    1.90 instead of 1.66 s when the hold covered only the Spark-iterating
+    passes, not its setup jobs; six
     BPE rounds ran 37 jobs instead of 13 (PLANS.md round-5). A loop
     materializes its frames inside the hold: a lazily returned plan
     would run after the restore and gain nothing.

@@ -97,24 +97,30 @@ def test_quiet_calib_override_moves_class_bands_in_lockstep():
 # dictionary-sized refined codebook, so the corpus-scale training
 # subtree executes once instead of three times (dsub probe, LUT
 # broadcast, codes argmin).
-# pagerank is the one BAND pin. Its default path keeps the rank vector
-# on the driver (graph.py): two setup jobs (the node count, then the
-# node table), then per iteration one broadcast job for the rank table
-# and one pass over the persisted transition frame, with no checkpoint
-# — 12 jobs per mode, the same on every pass. The operator's cache
-# release means every bench pass rebuilds COLD (no cross-pass
-# plan-cache reuse — the review-r13 hygiene fix). The rest of q152 —
-# the pairs pre-materialization and its broadcast builds, run with AQE
-# on before the two modes overlap on InheritableThreads, and the final
-# write — varies with shuffle partitioning, hence a band, not an exact
-# pin. History: r13 moved the count from 83-92 to ~48
-# (session.aqe_disabled inside the loop, so each eager per-iteration
-# checkpoint was ONE job); the driver-side rank vector moved it to 35.
-# The band catches GROSS job-structure regressions — a lost persist or
-# duplicated action roughly doubles the count, runaway extra jobs
-# overshoot the ceiling. Iteration count and semantics do not need the
-# band: a skipped iteration changes VALUES and fails test_graph's
-# exact-equality cases and the q152 oracle.
+# pagerank is the one BAND pin. When both the node table and the
+# transition frame fit under broadcast_nodes_max (q152 at every bench
+# SF), its default path holds both on the driver (graph.py): three setup
+# jobs per mode (the stats job with both row counts, the node table,
+# the transition table), after the builds of the two persisted frames,
+# and no Spark job at all per iteration, so the count does not move
+# with the iteration count. The operator's cache release means every
+# bench pass rebuilds COLD (no cross-pass plan-cache reuse — the
+# review-r13 hygiene fix). The rest of q152 — the pairs
+# pre-materialization and its broadcast builds, run with AQE on before
+# the two modes overlap on InheritableThreads, and the final write —
+# could vary with shuffle partitioning, hence a band, not an exact pin;
+# measured live, 17 at local[8] / 8 partitions (the test session) and
+# at local[32] / 16 (bench.py's session), both at sf0.1. History: r13
+# moved the count from 83-92 to ~48 (session.aqe_disabled inside the
+# loop, so each eager per-iteration checkpoint was ONE job); the
+# driver-side rank vector moved it to 35 (two jobs per iteration per
+# mode); the driver-held transition frame to 17. The band catches
+# GROSS job-structure regressions — a lost persist or duplicated
+# action roughly doubles the count, a per-iteration job that comes
+# back adds ten, runaway extra jobs overshoot the ceiling. Iteration
+# count and semantics do not need the band: a skipped iteration
+# changes VALUES and fails test_graph's exact-equality cases and the
+# q152 oracle.
 
 # r13 optimization note: line_dedup / knn_classify / repetition_profile
 # / c4_filters each gained exactly +1 job — the conditional
@@ -168,7 +174,7 @@ EXTRA_JOB_TABLE = {
 
 # inclusive (lo, hi) job-count bands for the AQE-sensitive extras
 EXTRA_JOB_BANDS = {
-    "pagerank": (31, 40),
+    "pagerank": (15, 19),
 }
 
 # job counts the r14 optimizations intentionally moved: committed
@@ -195,6 +201,15 @@ PRE_LOCAL_FRAME_PINS = {
 # artifacts stamped up to r14
 PRE_DRIVER_RANKS_BANDS = {
     "pagerank": (42, 56),
+}
+
+# the band while pagerank's driver path ran a broadcast edge pass every
+# iteration (35 jobs): the overlay for artifacts stamped before the
+# driver held the transition frame. The overlays apply newest first,
+# so an older artifact gets the older band: every committed artifact
+# (up to r14) predates both changes and reads PRE_DRIVER_RANKS_BANDS.
+PRE_HELD_TRANSITION_BANDS = {
+    "pagerank": (31, 40),
 }
 
 # the extras BASELINE.md's multi-job note names — these get a LIVE
@@ -295,6 +310,7 @@ def test_latest_bench_artifact_job_counts_match_table():
         expected.update(
             {n: v for n, v in PRE_LOCAL_FRAME_PINS.items() if n in expected}
         )
+        bands.update(PRE_HELD_TRANSITION_BANDS)
         bands.update(PRE_DRIVER_RANKS_BANDS)
     assert jobs == expected
     for n, v in banded.items():

@@ -317,15 +317,15 @@ def test_broadcast_and_shuffle_paths_agree_exactly(spark):
 
 
 def test_driver_path_is_one_edge_pass_per_iteration_and_leaves_no_blocks(spark):
-    """The default path keeps the rank vector on the driver: after two
-    setup jobs (the node count, then the node table), each iteration
-    is one distributed pass over the persisted transition frame (plus
-    the broadcast of the rank table), with no per-iteration checkpoint,
-    and the call releases everything it persisted. A seeded multigraph
-    with sinks, duplicate node rows and out-of-node edges, large enough
-    that the node table comes back in several Arrow batches; the
-    default path, the distributed path and the reference must agree
-    exactly."""
+    """The default path holds the rank vector AND the transition frame
+    on the driver when both fit: after three setup jobs (the stats job
+    with both row counts, the node table, the transition table), an
+    iteration runs no Spark job, so the call's job count does not
+    depend on ``iterations``, and the call releases everything it
+    persisted. A seeded multigraph with sinks, duplicate node rows and
+    out-of-node edges, large enough that both tables come back in
+    several Arrow batches; the default path, the distributed path and
+    the reference must agree exactly."""
     rng = random.Random(152)
     n, iters = 5000, 4
     sinks = set(rng.sample(range(n), 250))
@@ -340,29 +340,100 @@ def test_driver_path_is_one_edge_pass_per_iteration_and_leaves_no_blocks(spark):
 
     def call(**kw):
         return pagerank(
-            edf, ndf, src="s", dst="t", node_col="node", weight_col="w",
-            iterations=iters, **kw,
+            edf, ndf, src="s", dst="t", node_col="node", weight_col="w", **kw
         )
 
     sc = spark.sparkContext
     jsc, cache = sc._jsc, spark._jsparkSession.sharedState().cacheManager()
     spark.catalog.clearCache()
     held = set(jsc.getPersistentRDDs().keySet().toArray())
-    group = "pagerank-driver-path"
-    sc.setJobGroup(group, "pagerank driver path")
-    try:
-        rows = call().collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= 2 * iters + 2, jobs
+
+    def jobs_of(k):
+        group = f"pagerank-driver-path-{k}"
+        sc.setJobGroup(group, "pagerank driver path")
+        try:
+            rows = call(iterations=k).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), rows
+
+    jobs_one, _ = jobs_of(1)
+    jobs, rows = jobs_of(iters)
+    assert jobs == jobs_one, (jobs, jobs_one)
     assert set(jsc.getPersistentRDDs().keySet().toArray()) <= held
     assert cache.isEmpty()
 
     assert len(rows) == len(nodes)
     got = {r["node"]: r["rank_fp"] for r in rows}
-    shuffled = {r["node"]: r["rank_fp"] for r in call(broadcast_nodes_max=0).collect()}
+    shuffled = {
+        r["node"]: r["rank_fp"]
+        for r in call(iterations=iters, broadcast_nodes_max=0).collect()
+    }
     assert got == shuffled == ref_pagerank(edges, nodes, iterations=iters)
+
+
+def test_three_regimes_agree_with_reference(spark):
+    """broadcast_nodes_max bounds every table the driver holds, so one
+    graph runs in all three regimes: both tables held (the default),
+    node rows held but transition rows over the bound (a per-iteration
+    broadcast pass), and nothing held (0). Int nodes with duplicate
+    rows over long edges, one src and one dst beyond the int range (they
+    pair with no node, as in Spark's join); all three equal the
+    reference."""
+    nodes = [1, 2, 3, 4, 5, 6, 2, 5]  # 6 is a sink; 2 and 5 twice
+    edges = [
+        (1, 2, 1), (1, 3, 2), (2, 3, 1), (2, 4, 3), (3, 1, 1), (3, 5, 1),
+        (4, 1, 2), (4, 6, 1), (5, 1, 1), (5, 2, 4), (5, 6, 1), (2, 2**40, 5),
+        (2**40, 3, 2), (1, 99, 1),
+    ]
+    assert len({(s, t) for s, t, _ in edges}) > len(nodes)  # the middle regime
+    edf = spark.createDataFrame(edges, "s long, t long, w long")
+    ndf = spark.createDataFrame([(v,) for v in nodes], "node int")
+    want = ref_pagerank(edges, nodes)
+    for bound in (4_000_000, len(nodes), 0):
+        out = pagerank(
+            edf, ndf, src="s", dst="t", node_col="node", weight_col="w",
+            broadcast_nodes_max=bound,
+        )
+        rows = out.collect()
+        assert len(rows) == len(nodes), bound
+        assert {r["node"]: r["rank_fp"] for r in rows} == want, bound
+
+
+@pytest.mark.parametrize(
+    "nodes, edges, kw, bounds",
+    [
+        # dangling mass 3 * 2**62 (three isolated nodes), at the default
+        # damping and at 1%, where no later product overflows either
+        ([1, 2, 3], [], {"damping_pct": 85}, (4_000_000, 0)),
+        ([1, 2, 3], [], {"damping_pct": 1}, (4_000_000, 0)),
+        # per-dst sum: node 3 receives 2**62 twice (terms fit, sum not)
+        (
+            [1, 2, 3],
+            [(1, 3, 1), (2, 3, 1), (3, 1, 1), (3, 2, 1)],
+            {"damping_pct": 1},
+            (4_000_000, 3, 0),
+        ),
+        # per-edge product 2**62 * 4
+        ([1, 2], [(1, 2, 4), (2, 1, 1)], {"damping_pct": 1}, (4_000_000, 0)),
+    ],
+    ids=["dangling-mass", "dangling-mass-d1", "per-dst-sum", "per-edge-product"],
+)
+def test_overflow_raises_on_every_path(spark, nodes, edges, kw, bounds):
+    """Ranks are exact int64: a rank term past 2**63 raises on every
+    path, as Spark's ANSI BIGINT does, instead of wrapping (Arrow's
+    ``sum`` wraps silently, so every driver-side sum is checked). Spark
+    raises ARITHMETIC_OVERFLOW (wrapped when a broadcast build fails),
+    the driver-side arithmetic an Arrow overflow error."""
+    edf = spark.createDataFrame(edges, "s long, t long, w long")
+    ndf = spark.createDataFrame([(v,) for v in nodes], "node long")
+    for bound in bounds:
+        with pytest.raises(Exception, match="(?i)overflow"):
+            pagerank(
+                edf, ndf, src="s", dst="t", node_col="node", weight_col="w",
+                scale=2**62, n_nodes=1, iterations=1, broadcast_nodes_max=bound,
+                **kw,
+            ).collect()
 
 
 def test_int_nodes_over_long_edges_agree_on_both_paths(spark):
@@ -386,10 +457,26 @@ def test_int_nodes_over_long_edges_agree_on_both_paths(spark):
         assert ranks() == ranks(broadcast_nodes_max=0) == want, ddl
 
 
+def test_struct_node_ids_take_the_distributed_path(spark):
+    # Arrow can neither join nor look up nested keys, so struct node
+    # ids rank where Spark joins them, equal to the reference
+    edges = [(1, 2, 1), (2, 3, 2), (3, 1, 1), (1, 3, 1)]
+    edf = spark.createDataFrame(edges, "s long, t long, w long").select(
+        *(F.struct(F.col(c).alias("h")).alias(c) for c in ("s", "t")), "w"
+    )
+    ndf = spark.createDataFrame([(v,) for v in (1, 2, 3, 4)], "h long").select(
+        F.struct("h").alias("node")
+    )
+    out = pagerank(edf, ndf, src="s", dst="t", node_col="node", weight_col="w")
+    got = {r["node"]["h"]: r["rank_fp"] for r in out.collect()}
+    assert got == ref_pagerank(edges, [1, 2, 3, 4])
+
+
 def test_graph_above_the_bound_never_collects_its_node_table(spark, monkeypatch):
-    """The node-row count is read before anything is collected: a
-    graph with more node rows than broadcast_nodes_max takes the
-    distributed path without shipping its node table to the driver."""
+    """Both row counts are read before anything is collected: a graph
+    with more node rows than broadcast_nodes_max takes the distributed
+    path without shipping its node table to the driver, and one whose
+    transition rows exceed it never ships its transition frame."""
     cls = type(spark.range(1))
     collected = []
     to_arrow = cls.toArrow
@@ -409,11 +496,19 @@ def test_graph_above_the_bound_never_collects_its_node_table(spark, monkeypatch)
         edges, nodes
     )
     assert collected == []
-    # at the bound the node table comes to the driver, once
+    # at the bound the node table comes to the driver, once; the
+    # transition frame, above it, never does
+    trans = ["_s_", "_d_", "_w_", "_tot_"]
+    assert len({(s, t) for s, t, _ in edges}) > 12
     assert run(spark, edges, nodes, broadcast_nodes_max=12) == ref_pagerank(
         edges, nodes
     )
     assert collected.count(["_v_", "_out_"]) == 1
+    assert trans not in collected
+    # under the default bound both tables come to the driver, once each
+    collected.clear()
+    assert run(spark, edges, nodes) == ref_pagerank(edges, nodes)
+    assert collected == [["_v_", "_out_"], trans]
 
 
 def test_iteration_conf_restores_aqe_and_refcounts(spark):

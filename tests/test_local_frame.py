@@ -71,7 +71,8 @@ def _python_fed_scans(df) -> list[str]:
         "q134_phrase_search",
         "q138_hybrid_rrf",
         "q151_quantile_sketch",
-        # the result is a driver-built rank table, like every iteration's
+        # the result is a driver-built rank table; its iterations run
+        # on the driver, over driver-held node and transition tables
         "q152_supplier_pagerank",
     ],
 )

@@ -107,19 +107,23 @@ def ckpt_states(spark, tmp_path):
 
 
 def _round_dirs(root):
-    """{call dir: sorted round numbers} of the parquet rounds under a
-    ``checkpoint_dir``."""
-    return {
-        call: sorted(int(r) for r in os.listdir(root / call) if (root / call / r / "_SUCCESS").exists())
+    """{call dir: sorted round numbers} of the round directories left
+    under a ``checkpoint_dir``; each one left must be a complete
+    parquet write."""
+    rounds = {
+        call: sorted(int(r) for r in os.listdir(root / call))
         for call in sorted(os.listdir(root))
     }
+    for call, rnds in rounds.items():
+        assert all((root / call / str(r) / "_SUCCESS").exists() for r in rnds)
+    return rounds
 
 
 def test_training_restores_session_checkpoint_dir_and_aqe(spark, tmp_path, ckpt_states):
-    """Trainers with a checkpoint_dir write their rounds under it and
-    never move the session checkpoint dir: unset stays unset, a prior
-    dir stays byte-identical. AQE is back, and the results match the
-    localCheckpoint path."""
+    """Trainers with a checkpoint_dir write their rounds under it, keep
+    only the last one, and never move the session checkpoint dir: unset
+    stays unset, a prior dir stays byte-identical. AQE is back, and the
+    results match the localCheckpoint path."""
     from demy_spark.operators.phrases import bpe_train
 
     sc = spark.sparkContext
@@ -135,8 +139,8 @@ def test_training_restores_session_checkpoint_dir_and_aqe(spark, tmp_path, ckpt_
         assert [key(f) for f in got_bpe] == plain_bpe
         assert [key(f) for f in got_pm] == plain_pm
         assert sc.getCheckpointDir() == before
-        assert list(_round_dirs(bpe_dir).values()) == [[1, 2]]
-        assert list(_round_dirs(pm_dir).values()) == [[1, 2]]
+        assert list(_round_dirs(bpe_dir).values()) == [[2]]
+        assert list(_round_dirs(pm_dir).values()) == [[2]]
         assert spark.conf.get("spark.sql.adaptive.enabled") == aqe_before
 
 
@@ -161,8 +165,8 @@ def test_training_checkpoint_restore_does_not_nest(spark, tmp_path, ckpt_states)
 
 def test_apply_merges_restores_session_checkpoint_dir(spark, tmp_path, ckpt_states):
     """apply_merges(checkpoint_dir=...) writes its rounds under the
-    requested dir during the call and leaves the session checkpoint
-    dir as it found it, unset or set."""
+    requested dir during the call, keeps only the last one, and leaves
+    the session checkpoint dir as it found it, unset or set."""
     sc = spark.sparkContext
     docs = spark.createDataFrame([(1, "new york new york")], "doc_id long, text string")
     for i, before in enumerate(ckpt_states):
@@ -177,7 +181,7 @@ def test_apply_merges_restores_session_checkpoint_dir(spark, tmp_path, ckpt_stat
                 "new@@york",
             ]
         assert sc.getCheckpointDir() == before
-        assert list(_round_dirs(mine).values()) == [[1, 2], [1, 2]]
+        assert list(_round_dirs(mine).values()) == [[2], [2]]
 
 
 def test_concurrent_apply_merges_keep_their_own_checkpoint_dirs(spark, tmp_path):
@@ -216,7 +220,7 @@ def test_concurrent_apply_merges_keep_their_own_checkpoint_dirs(spark, tmp_path)
     assert sc.getCheckpointDir() == before
     for name in cases:
         rounds = _round_dirs(tmp_path / name)
-        assert list(rounds.values()) == [[1, 2]], (name, rounds)
+        assert list(rounds.values()) == [[2]], (name, rounds)
         (call,) = rounds
         last = spark.read.parquet(str(tmp_path / name / call / "2"))
         assert sorted(r["_w_"] for r in last.collect()) == sorted(cases[name][2])
