@@ -203,15 +203,6 @@ PRE_DRIVER_RANKS_BANDS = {
     "pagerank": (42, 56),
 }
 
-# the band while pagerank's driver path ran a broadcast edge pass every
-# iteration (35 jobs): the overlay for artifacts stamped before the
-# driver held the transition frame. The overlays apply newest first,
-# so an older artifact gets the older band: every committed artifact
-# (up to r14) predates both changes and reads PRE_DRIVER_RANKS_BANDS.
-PRE_HELD_TRANSITION_BANDS = {
-    "pagerank": (31, 40),
-}
-
 # the extras BASELINE.md's multi-job note names — these get a LIVE
 # probe (the artifact check below covers the rest at zero cost)
 MULTI_JOB_EXTRAS = (
@@ -310,7 +301,6 @@ def test_latest_bench_artifact_job_counts_match_table():
         expected.update(
             {n: v for n, v in PRE_LOCAL_FRAME_PINS.items() if n in expected}
         )
-        bands.update(PRE_HELD_TRANSITION_BANDS)
         bands.update(PRE_DRIVER_RANKS_BANDS)
     assert jobs == expected
     for n, v in banded.items():

@@ -55,20 +55,41 @@ def ref_pagerank(edges, nodes, *, iterations=5, damping_pct=85, scale=SCALE):
     return r
 
 
-# broadcast_nodes_max settings: the default (driver-held ranks) and 0
-# (the distributed path every graph above the bound takes)
+# broadcast_nodes_max settings: the default (node table and transition
+# frame both held on the driver) and 0 (the distributed path every graph
+# above the bound takes). The middle regime (node table held, a
+# broadcast edge pass per iteration) needs a bound between the two row
+# counts, so ``paths`` adds it per case.
 PATHS = ({}, {"broadcast_nodes_max": 0})
 
 
+def paths(edges, nodes, weighted=True):
+    """PATHS, plus a bound of the node-row count whenever the case has
+    more transition rows (distinct (src, dst) of the routable edges)
+    than node rows, so the broadcast edge pass runs too."""
+    live = [v for v in nodes if v is not None]
+    trans = {
+        (e[0], e[1])
+        for e in edges
+        if e[0] is not None
+        and e[1] is not None
+        and (not weighted or (e[2] is not None and e[2] > 0))
+    }
+    if live and len(trans) > len(live):
+        return (*PATHS, {"broadcast_nodes_max": len(live)})
+    return PATHS
+
+
 def run(spark, edges, nodes, *, weighted=True, **kw):
-    """Ranks by node. Unless ``kw`` picks a path, runs both PATHS and
-    asserts they agree exactly."""
+    """Ranks by node. Unless ``kw`` picks a path, runs every path of
+    ``paths`` and asserts they agree exactly."""
     schema = "s long, t long, w long" if weighted else "s long, t long"
     rows = edges if edges else []
     edf = spark.createDataFrame(rows, schema)
     ndf = spark.createDataFrame([(v,) for v in nodes], "node long")
     got = []
-    for path in [{}] if "broadcast_nodes_max" in kw else PATHS:
+    cases = paths(rows, nodes, weighted)
+    for path in [{}] if "broadcast_nodes_max" in kw else cases:
         out = pagerank(
             edf,
             ndf,
@@ -507,7 +528,9 @@ def test_graph_above_the_bound_never_collects_its_node_table(spark, monkeypatch)
     assert trans not in collected
     # under the default bound both tables come to the driver, once each
     collected.clear()
-    assert run(spark, edges, nodes) == ref_pagerank(edges, nodes)
+    assert run(spark, edges, nodes, broadcast_nodes_max=4_000_000) == ref_pagerank(
+        edges, nodes
+    )
     assert collected == [["_v_", "_out_"], trans]
 
 
