@@ -217,6 +217,21 @@ def local_frame(
     return spark.createDataFrame(table, schema)
 
 
+def arrow_exact_key(dtype: T.DataType) -> bool:
+    """Whether pyarrow's hash joins, group-bys and lookups pair values
+    of the Spark type ``dtype`` exactly as Spark's equi-joins and
+    groupings do: every atomic type but floating point (Spark equates
+    -0.0 with 0.0 and every NaN with every other; Arrow hashes the bits)
+    and strings under a non-binary collation (Spark compares those by
+    the collation, Arrow by bytes). Arrow cannot hash nested (struct,
+    array, map) values at all."""
+    if isinstance(dtype, T.StringType):
+        return dtype.collation == "UTF8_BINARY"
+    return not isinstance(
+        dtype, (T.FloatType, T.DoubleType, T.StructType, T.ArrayType, T.MapType)
+    )
+
+
 def read_text_corpus(spark: SparkSession, path: str, *, line_col: str = "line") -> DataFrame:
     """Text scan (≈ text/Corpus.scala:27, Word2VecApplier.scala:94-98):
     one row per line."""

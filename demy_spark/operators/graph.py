@@ -35,7 +35,7 @@ Scale shape (the 100 TB contract):
   - up to ``broadcast_nodes_max`` transition rows too, a third setup
     job collects the transition frame, and an iteration runs NO Spark
     job: transition ⋈ ranks on src and the per-dst sum run in pyarrow
-    (measured up to the bound with ``scripts/pagerank_cutoff.py``: at
+    (measured up to the bound with ``scripts/held_cutoff.py``: at
     4M transition rows a held pass took 0.53 s against the broadcast
     pass's 2.8 s, for ~0.7 GB more driver Python RSS; see
     ``pagerank``);
@@ -75,7 +75,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from demy_spark.io import local_frame
+from demy_spark.io import arrow_exact_key, local_frame
 from demy_spark.session import aqe_disabled, keep, owned
 
 __all__ = ["pagerank"]
@@ -160,7 +160,7 @@ def pagerank(
     broadcast relation per node table, ~128 MB per transition table)
     is far under the broadcast hard cap and covers every host-graph
     ranking a 100 TB corpus needs. Its transition-row side is measured
-    (``scripts/pagerank_cutoff.py``: random graphs of 1M, 2M and 4M
+    (``scripts/held_cutoff.py pagerank``: random graphs of 1M, 2M and 4M
     edges over a tenth as many nodes, 4-core host, ``local[4]``, 5
     iterations): the held pass beat the broadcast pass at every size,
     0.12 vs 0.86 s, 0.22 vs 1.5 s and 0.53 vs 2.8 s per iteration (a
@@ -459,12 +459,9 @@ def _same_key_domain(node_type: T.DataType, key_type: T.DataType) -> bool:
     """Whether the driver regimes' lookup of an edge key (cast to the
     node type, matched by value in Arrow) pairs exactly the (node, key)
     pairs that Spark's coerced join pairs on the distributed path:
-    equal atomic types other than floating point (Spark's join equates
-    -0.0 with 0.0; Arrow cannot join or look up nested keys), or two
-    integral types (the cast is exact, or out of range and NULL)."""
+    equal types that Arrow keys exactly (``io.arrow_exact_key``: no
+    floating point, nothing nested), or two integral types (the cast is
+    exact, or out of range and NULL)."""
     if isinstance(node_type, _INTEGRAL) and isinstance(key_type, _INTEGRAL):
         return True
-    return node_type == key_type and not isinstance(
-        node_type,
-        (T.FloatType, T.DoubleType, T.StructType, T.ArrayType, T.MapType),
-    )
+    return node_type == key_type and arrow_exact_key(node_type)

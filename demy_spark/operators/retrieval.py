@@ -12,7 +12,7 @@ ranked by Okapi BM25 — the canonical retrieval scorer, and the
 standard "find the documents about X" primitive a corpus-curation
 pipeline uses for audits, targeted sampling and eval-set mining.
 
-Scale shape:
+Scale shape of ``bm25_search``:
 - One map-side-combined shuffle reduces the token stream to postings
   (doc, term, tf); per-document lengths ride a partition-only window
   over that REDUCED frame (never the token stream).
@@ -29,14 +29,29 @@ Scale shape:
   per-(query, doc) sum (partial-aggregation order independence — the
   oracle-gate convention), and the final top-k is a rank window per
   query id that Spark prunes with WindowGroupLimit.
+
+Scale shape of ``phrase_search``: the query side is prepared on the
+driver, and the positional token stream, filtered to the query words,
+is held once. Its size picks the regime. Up to ``held_rows_max``
+query-term postings, the stream is collected and the search finishes
+in pyarrow: a call runs a fixed handful of Spark jobs (6 for q134,
+against 17 for its distributed plan). Above the bound, the anchored
+distributed plan runs over the held stream, and nothing corpus-scale
+reaches the driver.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from demy_spark.functions.textstats import norm_tokens
+from demy_spark.io import arrow_exact_key, local_frame
+from demy_spark.session import keep
 
 __all__ = ["bm25_search", "phrase_search", "rrf_fuse"]
 
@@ -173,6 +188,7 @@ def phrase_search(
     *,
     k: int = 10,
     anchor: str = "rarest",
+    held_rows_max: int = 4_000_000,
 ) -> DataFrame:
     """Exact-phrase retrieval over a positional index: top ``k``
     documents per query ranked by how many times the query's tokens
@@ -183,8 +199,40 @@ def phrase_search(
     Instead of chaining one join per phrase position (m-way join, m-1
     shuffles), every match is ANCHORED: a posting (doc, pos, w) that
     equals phrase token i implies a candidate occurrence starting at
-    ``pos - i``. Two anchoring strategies (identical results — the
-    parity test replays both against one oracle):
+    ``pos - i``; an anchor whose m offsets are all present is one
+    occurrence. Documents group by id, a NULL id included: all
+    NULL-id documents form one document, as in a SQL ``GROUP BY``.
+
+    The query side is human-sized: its tokens are collected once, and
+    each phrase's length and anchor offset are chosen on the driver. The
+    positional token stream is the corpus's one wide frame: it is
+    filtered to the query words (an ``isin`` list, no join) and held
+    with ``session.keep``. One stats job reads each query word's
+    document frequency (df) from it, which picks the anchors and the
+    regime. Their sum is the stream's row count:
+
+    - up to ``held_rows_max`` rows (and document ids that Arrow keys
+      exactly, ``io.arrow_exact_key``: no floating point, nothing
+      nested), the stream is collected once and released, and the
+      rest — anchor, verify, the per-anchor distinct-offset count,
+      the count per (query, doc) and the top-k rank — runs in pyarrow
+      on dictionary codes, returned as a ``LocalRelation``
+      (``io.local_frame``). Measured with
+      ``scripts/held_cutoff.py phrase_search`` (4-core host,
+      ``local[4]``, 4 GB driver heap, 125 phrases over a Zipf-like
+      corpus, warm calls): at 1M postings a held call took 1.8-2.4 s
+      against 4.1-5.2 s distributed, at 4M 5.4-6.0 s against
+      11.1-12.3 s. The driver's Python process peaked at 416 and
+      1098 MB against 143 MB (~240 bytes per held posting), its JVM at
+      1.6 and 1.8 GB against 3.0 and 3.8 GB. Nothing above 4M is
+      measured, so the bound stays there;
+    - above it, or for other id types, the distributed plan below. Its
+      lazy result still reads the kept stream, so the caller's
+      ``session.owned()`` scope owns that cache.
+
+    ``anchor`` picks the distributed plan's strategy; both return the
+    same rows (the parity tests replay both against one oracle), and the
+    held regime always anchors on the rarest term:
 
     - ``anchor="all"``: every query-term posting fans out to every
       offset its token occupies; an anchor carrying all m distinct
@@ -193,57 +241,85 @@ def phrase_search(
     - ``anchor="rarest"`` (default): Lucene's PhraseQuery strategy
       (`mllib/src/main/scala/index/NgramStrategy.scala:197-290` is
       the reference's greedy-expansion analog) — only each phrase's
-      LOWEST-df term generates candidate anchors; the other offsets
-      are then verified with one positional equi-join against the
-      query-term postings. Shuffle volume is the query-term postings
-      (NO offset fan-out) + df_min(phrase) x (m-1) probe rows, so the
-      win over "all" is the df ratio between the rarest and the
-      average phrase term — large on Zipfian corpora where stopwords
-      dominate phrase offsets, ~nil on uniform vocabularies
-      (PLANS.md round-7/round-8 probes). Per-phrase term df is
-      computed from the token-filtered stream (query-term-sized
-      frame, never a full-vocabulary table); a phrase term absent
-      from the corpus gets df 0 and becomes the anchor, correctly
-      yielding zero candidates. Costs two extra scans of the
-      token-filtered positional stream (df agg + anchors + verify
-      are three consumers; a measured exchange-reuse variant was
-      slower — see the in-body note).
+      LOWEST-df term (ties to the earliest offset) generates candidate
+      anchors; the other offsets are then verified with one positional
+      equi-join, null-safe on the id, against the stream. Shuffle
+      volume is the query-term postings (NO offset fan-out) +
+      df_min(phrase) x (m-1) probe rows, so the win over "all" is the
+      df ratio between the rarest and the average phrase term — large
+      on Zipfian corpora where stopwords dominate phrase offsets, ~nil
+      on uniform vocabularies (PLANS.md round-7/round-8 probes). A
+      phrase term absent from the corpus has df 0 and becomes the
+      anchor, correctly yielding zero candidates.
 
-    Scale shape (both strategies):
-    - The positional token stream is the corpus's one wide frame; it
-      is filtered to query terms by a broadcast semi-join BEFORE any
-      shuffle, so every downstream frame is query-term-sized.
-    - Queries are human-sized and broadcast everywhere; nothing
-      corpus-scale is ever collected. The query-term postings are
-      broadcast into the verify join only when their size estimate
-      is under the broadcast threshold (small corpora); otherwise
-      that join shuffles both sides.
-    - Occurrence counting is shrinking hash aggregations, map-side
-      combined; the top-k is a WindowGroupLimit-prunable rank window.
+    Distributed scale shape: every query-side frame is a broadcast
+    ``LocalRelation``, nothing corpus-scale reaches the driver, the
+    verify join broadcasts the stream only when its size is under the
+    broadcast threshold, occurrence counting is shrinking hash
+    aggregations, map-side combined, and the top-k is a
+    WindowGroupLimit-prunable rank window.
 
     Returns (``query_id_col``, ``id_col``, n_occurrences, rk) with
-    ``rk`` in 1..k per query, ranked by occurrence count descending,
-    ties to ascending document id. Queries whose phrase never occurs
-    return no rows (retrieval convention, same as bm25_search).
+    ``rk`` (int) in 1..k per query, ranked by occurrence count
+    descending, ties to ascending document id (NULL first, as Spark
+    sorts). Queries whose phrase never occurs, and queries with a NULL
+    id, return no rows (retrieval convention, same as bm25_search).
+    Query ids are grouped on the driver, so they must be of a type
+    ``io.arrow_exact_key`` admits.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if anchor not in ("all", "rarest"):
         raise ValueError(f"unknown anchor strategy {anchor!r}")
-    dtok = docs.select(
-        F.col(id_col).alias("_id_"),
-        F.posexplode(norm_tokens(F.col(text_col))).alias("_pos_", "_w_"),
+    spark = docs.sparkSession
+    q_type = queries.schema[query_id_col].dataType
+    id_type = docs.schema[id_col].dataType
+    if not arrow_exact_key(q_type):
+        raise ValueError(f"query ids of type {q_type.simpleString()} cannot be grouped")
+    # a NULL query id would never meet its phrase length: no rows
+    qtok = (
+        queries.select(
+            F.col(query_id_col).alias("_qid_"),
+            F.posexplode(norm_tokens(F.col(query_text_col))).alias("_i_", "_w_"),
+        )
+        .where(F.col("_qid_").isNotNull())
+        .toArrow()
     )
-    qtok = queries.select(
-        F.col(query_id_col).alias("_qid_"),
-        F.posexplode(norm_tokens(F.col(query_text_col))).alias("_i_", "_w_"),
+    words = pc.unique(qtok.column("_w_"))
+    matched = keep(
+        docs.select(
+            F.col(id_col).alias("_id_"),
+            F.posexplode(norm_tokens(F.col(text_col))).alias("_pos_", "_w_"),
+        ).where(F.col("_w_").isin(words.to_pylist()))
     )
-    qlen = qtok.groupBy("_qid_").agg(F.count(F.lit(1)).alias("_m_"))
-    # query-term filter FIRST: the positional stream shrinks to rows
-    # whose token appears in some phrase before the anchor shuffle
-    matched = dtok.join(F.broadcast(qtok.select("_w_").distinct()), "_w_")
+    # the stats job: each query word's df (0 when absent from the
+    # corpus); their sum is the stream's row count
+    counts = matched.groupBy("_w_").count().toArrow()
+    at = pc.index_in(words, value_set=counts.column("_w_"))
+    df = pc.fill_null(pc.take(counts.column("count"), at), 0)
+    qt, qlen = _phrases(qtok, words, df)
+    if sum(df.to_pylist()) <= held_rows_max and arrow_exact_key(id_type):
+        try:
+            stream = matched.toArrow()
+        finally:
+            matched.unpersist(blocking=True)  # the result reads no cache
+        out = T.StructType(
+            [
+                T.StructField(query_id_col, q_type),
+                T.StructField(id_col, id_type),
+                T.StructField("n_occurrences", T.LongType()),
+                T.StructField("rk", T.IntegerType()),
+            ]
+        )
+        return local_frame(spark, _held_top_k(stream, words, qt, qlen, k), out)
+
+    def frame(table: pa.Table, **types: T.DataType) -> DataFrame:
+        schema = T.StructType([T.StructField(c, t) for c, t in types.items()])
+        return local_frame(spark, table.select(list(types)), schema)
+
+    tok = {"_qid_": q_type, "_i_": T.IntegerType(), "_w_": T.StringType()}
     if anchor == "all":
-        cand = matched.join(F.broadcast(qtok), "_w_").select(
+        cand = matched.join(F.broadcast(frame(qt, **tok)), "_w_").select(
             "_qid_",
             "_id_",
             (F.col("_pos_") - F.col("_i_")).alias("_a_"),
@@ -253,39 +329,9 @@ def phrase_search(
         # candidate with anchor < 0 can never cover offset 0, prune early
         covered = cand.where(F.col("_a_") >= 0)
     else:
-        # The rarest branch consumes the token-filtered stream THREE
-        # times (df agg, anchor join, verify join). r8 measured and
-        # rejected a repartition-based exchange-reuse variant (it
-        # regressed every probe load — the full shuffle + extra stage
-        # boundaries cost more than rescans, PLANS.md round-8). r14
-        # materializes the stream WITHOUT a shuffle instead (guide
-        # §2.4, the winnow_pairs idiom): a lazy localCheckpoint of the
-        # narrow (id, pos, w) rows — the first action runs the
-        # tokenize + broadcast filter once, the other two consumers
-        # read the blocks. RDD blocks are ContextCleaner-reclaimed
-        # with the plan; each fresh call re-materializes (nothing
-        # persists across runs).
-        matched = matched.localCheckpoint(eager=False)
-        # positional df per query term, from the FILTERED stream (the
-        # full-vocabulary df table is never built); terms absent from
-        # the corpus keep df 0 via the left join below
-        df_q = matched.groupBy("_w_").agg(F.count(F.lit(1)).alias("_df_"))
-        ranked = qtok.join(F.broadcast(df_q), "_w_", "left").withColumn(
-            "_df_", F.coalesce(F.col("_df_"), F.lit(0))
-        )
-        wr = Window.partitionBy("_qid_").orderBy(
-            F.col("_df_").asc(), F.col("_i_").asc()
-        )
-        # exactly one anchor offset per phrase: lowest df, ties to the
-        # earliest offset
-        anchors_q = (
-            ranked.withColumn("_rk_", F.row_number().over(wr))
-            .where(F.col("_rk_") == 1)
-            .select("_qid_", F.col("_i_").alias("_ai_"), "_w_")
-        )
-        others_q = ranked.join(
-            F.broadcast(anchors_q.select("_qid_", "_ai_")), "_qid_"
-        ).where(F.col("_i_") != F.col("_ai_"))
+        is_anchor = qt.column("_anchor_")
+        anchors_q = frame(qt.filter(is_anchor), **tok).withColumnRenamed("_i_", "_ai_")
+        others_q = frame(qt.filter(pc.invert(is_anchor)), **tok)
         # candidate anchors: postings of each phrase's rarest term only
         anchors = (
             matched.join(F.broadcast(anchors_q), "_w_")
@@ -298,10 +344,11 @@ def phrase_search(
             .where(F.col("_a_") >= 0)
         )
         # verify every other offset with ONE positional equi-join:
-        # probe (doc, token, anchor+i) against the filtered postings
+        # probe (doc, token, anchor+i) against the filtered postings,
+        # null-safe on the id so NULL-id documents verify like the rest
         probes = (
             anchors.select("_qid_", "_id_", "_a_")
-            .join(F.broadcast(others_q.select("_qid_", "_i_", "_w_")), "_qid_")
+            .join(F.broadcast(others_q), "_qid_")
             .select(
                 "_qid_",
                 "_id_",
@@ -310,17 +357,23 @@ def phrase_search(
                 "_w_",
                 (F.col("_a_") + F.col("_i_")).alias("_pos_"),
             )
+            .alias("p")
         )
-        verified = probes.join(matched, ["_id_", "_w_", "_pos_"]).select(
-            "_qid_", "_id_", "_a_", "_i_"
-        )
+        v = matched.alias("v")
+        verified = probes.join(
+            v,
+            F.col("p._id_").eqNullSafe(F.col("v._id_"))
+            & (F.col("p._w_") == F.col("v._w_"))
+            & (F.col("p._pos_") == F.col("v._pos_")),
+        ).select("p._qid_", "p._id_", "p._a_", "p._i_")
         covered = anchors.select(
             "_qid_", "_id_", "_a_", F.col("_ai_").alias("_i_")
         ).unionByName(verified)
+    qlen_f = frame(qlen, _qid_=q_type, _m_=T.LongType())
     hits = (
         covered.groupBy("_qid_", "_id_", "_a_")
         .agg(F.count_distinct(F.col("_i_")).alias("_c_"))
-        .join(F.broadcast(qlen), "_qid_")
+        .join(F.broadcast(qlen_f), "_qid_")
         .where(F.col("_c_") == F.col("_m_"))
     )
     agg = hits.groupBy("_qid_", "_id_").agg(
@@ -338,6 +391,105 @@ def phrase_search(
             "n_occurrences",
             "rk",
         )
+    )
+
+
+def _phrases(
+    qtok: pa.Table, words: pa.Array, df: pa.Array
+) -> tuple[pa.Table, pa.Table]:
+    """The driver-side query plan. ``qtok`` holds the (``_qid_``,
+    ``_i_``, ``_w_``) token rows and ``df`` each of ``words``' df.
+    Returns the token rows with ``_q_`` (the query's index in the
+    second table), ``_wc_`` (the word's index in ``words``) and
+    ``_anchor_`` (the phrase's one anchor offset: lowest df, ties to
+    the earliest offset), and the (``_qid_``, ``_m_``) phrase lengths,
+    one row per query id."""
+    qids = pc.dictionary_encode(qtok.column("_qid_").combine_chunks())
+    q = qids.indices.to_numpy(zero_copy_only=False)
+    wc = pc.index_in(qtok.column("_w_"), value_set=words)
+    i = qtok.column("_i_").to_numpy()
+    order = np.lexsort((i, pc.take(df, wc).to_numpy(), q))
+    first = np.ones(len(q), dtype=bool)
+    first[1:] = q[order][1:] != q[order][:-1]
+    is_anchor = np.zeros(len(q), dtype=bool)
+    is_anchor[order[first]] = True
+    qt = (
+        qtok.append_column("_q_", pa.array(q, pa.int32()))
+        .append_column("_wc_", wc)
+        .append_column("_anchor_", pa.array(is_anchor))
+    )
+    m = np.bincount(q, minlength=len(qids.dictionary))
+    return qt, pa.table({"_qid_": qids.dictionary, "_m_": pa.array(m, pa.int64())})
+
+
+def _held_top_k(
+    stream: pa.Table, words: pa.Array, qt: pa.Table, qlen: pa.Table, k: int
+) -> pa.Table:
+    """The rarest-anchored plan in pyarrow over the collected (``_id_``,
+    ``_pos_``, ``_w_``) stream: (query id, doc id, n_occurrences, rk).
+    Ids are dictionary codes throughout, NULL encoded as a code of its
+    own, since Arrow's joins never match NULL keys."""
+    ids = pc.dictionary_encode(
+        stream.column("_id_").combine_chunks(), null_encoding="encode"
+    )
+    s = pa.table(
+        {
+            "_d_": ids.indices,
+            "_pos_": stream.column("_pos_"),
+            "_wc_": pc.index_in(stream.column("_w_"), value_set=words),
+        }
+    )
+    is_anchor = qt.column("_anchor_")
+    aq = qt.filter(is_anchor).select(["_q_", "_i_", "_wc_"])
+    oq = qt.filter(pc.invert(is_anchor)).select(["_q_", "_i_", "_wc_"])
+    j = s.join(aq, "_wc_", join_type="inner")
+    anchors = pa.table(
+        {
+            "_q_": j.column("_q_"),
+            "_d_": j.column("_d_"),
+            "_a_": pc.subtract(j.column("_pos_"), j.column("_i_")),
+            "_i_": j.column("_i_"),
+        }
+    ).filter(pc.field("_a_") >= 0)
+    probes = anchors.select(["_q_", "_d_", "_a_"]).join(oq, "_q_", join_type="inner")
+    probes = probes.append_column(
+        "_pos_", pc.add(probes.column("_a_"), probes.column("_i_"))
+    )
+    verified = probes.join(s, ["_d_", "_wc_", "_pos_"], join_type="inner")
+    covered = pa.concat_tables(
+        [anchors, verified.select(anchors.column_names)]
+    )
+    hits = covered.group_by(["_q_", "_d_", "_a_"]).aggregate(
+        [("_i_", "count_distinct")]
+    )
+    m = pc.take(qlen.column("_m_"), hits.column("_q_"))
+    hits = hits.filter(pc.equal(hits.column("_i__count_distinct"), m))
+    n = hits.group_by(["_q_", "_d_"]).aggregate([("_a_", "count")])
+    ranked = pa.table(
+        {
+            "_q_": n.column("_q_"),
+            "_id_": pc.take(ids.dictionary, n.column("_d_")),
+            "_n_": n.column("_a__count"),
+        }
+    )
+    ranked = ranked.take(
+        pc.sort_indices(
+            ranked,
+            sort_keys=[("_q_", "ascending"), ("_n_", "descending"), ("_id_", "ascending")],
+            null_placement="at_start",
+        )
+    )
+    q = ranked.column("_q_").to_numpy()
+    rk = np.arange(len(q)) - np.searchsorted(q, q) + 1
+    top = rk <= k
+    return pa.table(
+        [
+            pc.take(qlen.column("_qid_"), pa.array(q[top])),
+            ranked.column("_id_").filter(top),
+            ranked.column("_n_").filter(top),
+            pa.array(rk[top], pa.int32()),
+        ],
+        names=["_qid_", "_id_", "_n_", "_rk_"],
     )
 
 

@@ -8965,7 +8965,9 @@ def q134_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     verify via one positional equi-join; no m-way positional join
     chain, nothing corpus-scale broadcast, and the oracle replays
     anchor arithmetic exactly (both anchoring strategies produce
-    identical rows — the probe asserts it)."""
+    identical rows — the probe asserts it). At every fixture scale the
+    query-term postings fit under ``held_rows_max``, so the call
+    finishes on the driver and returns a LocalRelation."""
     from demy_spark.operators.retrieval import phrase_search
 
     t = _t(spark, sf_dir)

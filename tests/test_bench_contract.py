@@ -145,6 +145,14 @@ def test_quiet_calib_override_moves_class_bands_in_lockstep():
 # - quantile_sketch 12 -> 10: each mode's percents cross join
 #   broadcasts the percents table, and the (group, p) rank window
 #   reuses the summary's group partitioning (8 -> 6 exchanges).
+# - phrase_search 17 -> 6: the filtered positional stream (a few
+#   thousand query-term postings at sf0.1) is under held_rows_max, so
+#   the call finishes on the driver (retrieval.py). Its jobs: the
+#   query-token collect, the kept stream's materialization, the two
+#   stages of the per-term count (the stats job), the stream collect
+#   and the sink write of the driver-built result. None depends on the
+#   shuffle partitioning: measured 6 at local[32] / 16 (bench.py's
+#   session) and at local[8] / 8 (the test session), both at sf0.1.
 EXTRA_JOB_TABLE = {
     "fuzzy_probe_10x": 8,
     "contamination": 8,
@@ -163,7 +171,7 @@ EXTRA_JOB_TABLE = {
     "winnow_pairs": 3,
     "script_profile": 1,
     "domain_rollup": 2,
-    "phrase_search": 17,
+    "phrase_search": 6,
     "c4_filters": 2,
     "hybrid_rrf": 13,
     "budget_select": 2,
@@ -214,6 +222,7 @@ MULTI_JOB_EXTRAS = (
     "incremental_probe",
     "fuzzy_probe_10x",
     "media_decode",
+    "phrase_search",
 )
 
 

@@ -8,11 +8,14 @@ operator naming don't produce false alarms.
 
 from __future__ import annotations
 
+import functools
 import re
 
 import pytest
 
 from demy_spark import queries as Q
+from demy_spark.operators import retrieval
+from demy_spark.session import owned
 from perfbench.probe import plan_digest
 
 # queries whose builder functions are pure plan constructors (no
@@ -75,11 +78,12 @@ PLANNABLE = [
     "q128_json_props",
     "q129_url_parse",
     "q130_script_profile",
-    # round-6 additions (all pure plan constructors)
+    # round-6 additions (q134 excluded: its builder collects the query
+    # side and the stream's term counts, and finishes on the driver
+    # when the stream fits; its pins read the distributed plan below)
     "q131_domain_rollup",
     "q132_domain_holdout",
     "q133_c4_filters",
-    "q134_phrase_search",
     "q135_bloom_gate",
     "q136_fim_split",
     # round-7 additions
@@ -93,21 +97,35 @@ PLANNABLE = [
 ]
 
 
+def _executed_plan(spark, sf_dir, name):
+    """``name``'s executed plan string, read inside ``owned()`` so a
+    frame the builder keeps is released once the plan is read. q134's
+    is its distributed plan (held_rows_max=0)."""
+    with pytest.MonkeyPatch.context() as mp, owned():
+        if name == "q134_phrase_search":
+            mp.setattr(
+                retrieval,
+                "phrase_search",
+                functools.partial(retrieval.phrase_search, held_rows_max=0),
+            )
+        df = Q.REGISTRY[name].fn(spark, sf_dir)
+        return df._jdf.queryExecution().executedPlan().toString()
+
+
+PLANNED = [*PLANNABLE, "q134_phrase_search"]
+
+
 @pytest.fixture(scope="module")
 def plans(spark, sf_dir):
-    out = {}
-    for name in PLANNABLE:
-        df = Q.REGISTRY[name].fn(spark, sf_dir)
-        out[name] = df._jdf.queryExecution().executedPlan().toString()
-    return out
+    return {name: _executed_plan(spark, sf_dir, name) for name in PLANNED}
 
 
-@pytest.mark.parametrize("name", PLANNABLE)
+@pytest.mark.parametrize("name", PLANNED)
 def test_no_cartesian_product(name, plans):
     assert "CartesianProduct" not in plans[name]
 
 
-@pytest.mark.parametrize("name", PLANNABLE)
+@pytest.mark.parametrize("name", PLANNED)
 def test_no_single_partition_data_window(name, plans):
     """A window over SinglePartition means all data on one reducer —
     the scale-killer operators/topk.py exists to avoid."""
@@ -129,6 +147,16 @@ def test_no_single_partition_data_window(name, plans):
 # broadcasts the percents table instead of the summary frame, so the
 # (group, p) rank window reuses the summary's group partitioning (one
 # exchange fewer per mode).
+#
+# q134 (11, 9, 0) -> (4, 5, 0), pinned on the distributed plan
+# (held_rows_max=0): the query side is prepared on the driver. The
+# per-term df aggregation and the anchor-choice window, each planned
+# once per consumer of the three that read them, and the phrase-length
+# aggregation left the plan (7 exchanges), and with them the three df
+# left joins and the join of the anchor table onto the other offsets
+# (4 broadcast joins). The four exchanges left are the occurrence
+# count's. The kept stream (an InMemoryRelation where the checkpoint
+# was a LogicalRDD) moves no count: its cached plan has no exchange.
 DIGEST_PINS = {
     "q89_pq_ann_topk": (8, 2, 0),
     "q96_line_dedup": (5, 1, 0),
@@ -137,7 +165,7 @@ DIGEST_PINS = {
     "q124_repetition_profile": (1, 0, 0),
     "q127_winnow_pairs": (1, 1, 0),
     "q133_c4_filters": (1, 0, 0),
-    "q134_phrase_search": (11, 9, 0),
+    "q134_phrase_search": (4, 5, 0),
     "q138_hybrid_rrf": (8, 4, 0),
     "q151_quantile_sketch": (6, 2, 0),
 }
@@ -148,10 +176,10 @@ def test_plan_digest_pins(name, spark, sf_dir):
     # built on a cleared cache: a frame another test left persisted
     # would replace a subtree (and its exchanges) with a cached scan
     spark.catalog.clearCache()
-    plan = Q.REGISTRY[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
-    d = plan_digest(plan.toString())
+    plan = _executed_plan(spark, sf_dir, name)
+    d = plan_digest(plan)
     got = (d["plan.exchanges"], d["plan.broadcast_joins"], d["plan.sort_merge_joins"])
-    assert got == DIGEST_PINS[name], plan.toString()
+    assert got == DIGEST_PINS[name], plan
 
 
 def test_small_dims_broadcast(plans):
@@ -319,9 +347,9 @@ def test_winnow_pairs_cokeyed_join_partial_agg(plans):
 
 
 def test_phrase_search_is_anchored_broadcast(plans):
-    # q134's rarest-anchored plan: the query-token and phrase-length
-    # frames broadcast onto the positional postings (never shuffle
-    # them), the top-k rank window prunes with WindowGroupLimit, and
+    # q134's rarest-anchored distributed plan: the query-token and
+    # phrase-length frames broadcast onto the positional postings (never
+    # shuffle them), the top-k rank window prunes with WindowGroupLimit, and
     # there is no m-way positional join chain — the only join allowed
     # to shuffle is the single positional VERIFY join on
     # (_id_, _w_, _pos_) (corpus vs corpus; r8 rarest-term anchoring)

@@ -12,6 +12,7 @@ from __future__ import annotations
 import math
 
 import pytest
+from pyspark.sql import functions as F
 
 from demy_spark.operators.retrieval import bm25_search
 
@@ -92,11 +93,28 @@ def test_no_match_query_absent_and_bad_k(spark):
 from demy_spark.operators.retrieval import phrase_search  # noqa: E402
 
 
+# held_rows_max settings: the default (the filtered stream held on the
+# driver and finished in pyarrow) and 0 (the distributed plan), each
+# under both anchor strategies
+PATHS = [
+    {"anchor": a, "held_rows_max": h} for a in ("rarest", "all") for h in (4_000_000, 0)
+]
+
+
 def _phrases(spark, docs, queries, **kw):
+    """Rows by (query, rank). Runs every path of PATHS and asserts they
+    agree exactly."""
     ddf = spark.createDataFrame(docs, "doc_id long, text string")
     qdf = spark.createDataFrame(queries, "query_id long, qtext string")
-    out = phrase_search(ddf, "doc_id", "text", qdf, "query_id", "qtext", **kw)
-    return [tuple(r) for r in out.orderBy("query_id", "rk").collect()]
+    got = []
+    for path in PATHS:
+        out = phrase_search(
+            ddf, "doc_id", "text", qdf, "query_id", "qtext", **path, **kw
+        )
+        assert dict(out.dtypes)["rk"] == "int", path
+        got.append([tuple(r) for r in out.orderBy("query_id", "rk").collect()])
+    assert all(g == got[0] for g in got), got
+    return got[0]
 
 
 def test_phrase_requires_adjacency_and_order(spark):
@@ -138,6 +156,150 @@ def test_phrase_single_token_equals_term_count(spark):
     assert rows == [(1, 1, 3, 1)]
 
 
+def test_phrase_null_ids_group_as_one_document(spark):
+    # every NULL-id document is one document, as in the oracle's GROUP
+    # BY: the rarest-anchored verify join is null-safe on the id, and
+    # the held regime gives NULL a dictionary code of its own. A NULL
+    # query id returns nothing.
+    docs = [(None, "a b a b"), (1, "a b"), (2, "x a")]
+    rows = _phrases(spark, docs, [(1, "a b"), (2, "a"), (None, "a")])
+    assert rows == [
+        (1, None, 2, 1),
+        (1, 1, 1, 2),
+        (2, None, 2, 1),
+        (2, 1, 1, 2),
+        (2, 2, 1, 3),
+    ]
+
+
+def test_phrase_duplicate_doc_ids_merge(spark):
+    # rows sharing an id are one document's postings: their occurrences
+    # add up, and a phrase may span two rows at consecutive positions
+    # (the oracle's GROUP BY (qid, id, anchor))
+    docs = [(1, "a b"), (1, "x a b"), (2, "b a b"), (3, "a"), (3, "x b")]
+    rows = _phrases(spark, docs, [(1, "a b")])
+    assert rows == [(1, 1, 2, 1), (1, 2, 1, 2), (1, 3, 1, 3)]
+
+
+def test_phrase_empty_query_frame(spark):
+    assert _phrases(spark, [(1, "a b")], []) == []
+
+
+def test_phrase_stream_above_the_bound_is_never_collected(spark, monkeypatch):
+    """The stats job reads the filtered stream's row count before
+    anything corpus-sized reaches the driver: above held_rows_max the
+    stream is never collected, at the bound it is collected once."""
+    cls = type(spark.range(1))
+    collected = []
+    to_arrow = cls.toArrow
+
+    def spy(df):
+        table = to_arrow(df)
+        collected.append(table.column_names)
+        return table
+
+    monkeypatch.setattr(cls, "toArrow", spy)
+    ddf = spark.createDataFrame(
+        [(1, "a b c a b"), (2, "b a b"), (3, "c c")], "doc_id long, text string"
+    )
+    qdf = spark.createDataFrame([(1, "a b")], "query_id long, qtext string")
+    stream = ["_id_", "_pos_", "_w_"]  # 7 rows: the a and b postings
+    for bound, times in ((6, 0), (7, 1)):
+        collected.clear()
+        out = phrase_search(
+            ddf, "doc_id", "text", qdf, "query_id", "qtext", held_rows_max=bound
+        )
+        rows = [tuple(r) for r in out.orderBy("rk").collect()]
+        assert rows == [(1, 1, 2, 1), (1, 2, 1, 2)], bound
+        assert collected.count(stream) == times, (bound, collected)
+
+
+def test_phrase_inexact_doc_ids_take_the_distributed_path(spark):
+    # Spark groups -0.0 with 0.0, and 'A' with 'a' under UTF8_LCASE,
+    # where Arrow compares bits and bytes, so such document ids never
+    # take the held regime: each pair is one document. Query ids are
+    # grouped on the driver, so a nested query id is refused.
+    qdf = spark.createDataFrame([(1, "a b")], "query_id long, qtext string")
+    floats = spark.createDataFrame(
+        [(0.0, "a b"), (-0.0, "x a b")], "doc_id double, text string"
+    )
+    lcase = spark.createDataFrame(
+        [("A", "a b"), ("a", "x a b")], "doc_id string, text string"
+    ).withColumn("doc_id", F.collate("doc_id", "UTF8_LCASE"))
+    for ddf in (floats, lcase):
+        out = phrase_search(ddf, "doc_id", "text", qdf, "query_id", "qtext")
+        rows = [tuple(r) for r in out.collect()]
+        assert len(rows) == 1 and rows[0][2:] == (2, 1), rows
+    with pytest.raises(ValueError, match="query ids"):
+        nested = qdf.select(F.struct("query_id").alias("q"), "qtext")
+        phrase_search(ddf, "doc_id", "text", nested, "q", "qtext")
+
+
+def _q134_paths(monkeypatch):
+    """q134's builder once per regime: the default, then the
+    distributed plan (held_rows_max=0)."""
+    import functools
+
+    from demy_spark import queries as Q
+    from demy_spark.operators import retrieval
+
+    for bound in (4_000_000, 0):
+        monkeypatch.setattr(
+            retrieval,
+            "phrase_search",
+            functools.partial(phrase_search, held_rows_max=bound),
+        )
+        yield Q.REGISTRY["q134_phrase_search"].fn
+
+
+def test_q134_leaves_no_persisted_rdd(spark, sf_dir, monkeypatch):
+    """Inside owned(), a q134 call leaves no persisted RDD in either
+    regime: the held regime releases the kept stream before returning,
+    and the distributed result's cache belongs to the scope (a
+    localCheckpoint block would outlive both)."""
+    from demy_spark.session import owned
+
+    jsc = spark.sparkContext._jsc
+    for fn in _q134_paths(monkeypatch):
+        before = set(jsc.getPersistentRDDs().keySet().toArray())
+        with owned():
+            fn(spark, sf_dir).collect()
+        assert set(jsc.getPersistentRDDs().keySet().toArray()) - before == set()
+
+
+def test_q134_null_id_document_matches_oracle(spark, tmp_path, monkeypatch):
+    # _Q134_SQL groups a NULL-id document like any other: it ranks
+    # first for "table table" (two occurrences against one)
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from demy_spark import queries as Q
+    from tests.test_oracle_parity import assert_query_parity
+
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([None, 3, 4], pa.int64()),
+                "text": ["table table x table table", "table table", "fast key scan"],
+            }
+        ),
+        str(tmp_path / "documents.parquet"),
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM read_parquet("
+        f"'{tmp_path / 'documents.parquet'}')"
+    )
+    oracle = Q.REGISTRY["q134_phrase_search"].oracle
+    top = con.execute(
+        f"SELECT doc_id FROM ({oracle}) WHERE query_id = 1 AND rk = 1"
+    ).fetchall()
+    assert top == [(None,)]
+    for _ in _q134_paths(monkeypatch):
+        assert_query_parity("q134_phrase_search", spark, str(tmp_path), con)
+
+
 def test_phrase_query_side_stays_broadcast_at_load(spark):
     """A realistic query load (200 phrases vs the fixture's 5) must
     not tip the QUERY-side joins into a shuffle: every query-frame
@@ -147,7 +309,12 @@ def test_phrase_query_side_stays_broadcast_at_load(spark):
     wall-time side). Under the
     default rarest-term anchoring the ONE join allowed to shuffle is
     the positional verify join — corpus vs corpus on
-    (_id_, _w_, _pos_), which no broadcast can absorb at scale."""
+    (_id_, _w_, _pos_), which no broadcast can absorb at scale. The
+    query side is the plan's only other join input: three broadcast
+    frames under rarest-term anchoring (anchor offsets, other offsets,
+    phrase lengths), two under "all" (tokens, phrase lengths); every
+    join but the verify join must broadcast. The plans are the
+    distributed regime's (held_rows_max=0)."""
     import re
 
     docs = spark.createDataFrame(
@@ -158,9 +325,10 @@ def test_phrase_query_side_stays_broadcast_at_load(spark):
         [(i, f"tok{i % 37} tok{(i + 1) % 37}") for i in range(200)],
         "qid long, qtext string",
     )
-    for mode, allow_smj in (("rarest", True), ("all", False)):
+    for mode, allow_smj, query_frames in (("rarest", True, 3), ("all", False, 2)):
         out = phrase_search(
-            docs, "doc_id", "text", queries, "qid", "qtext", k=5, anchor=mode
+            docs, "doc_id", "text", queries, "qid", "qtext", k=5, anchor=mode,
+            held_rows_max=0,
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
         smjs = [
@@ -173,7 +341,11 @@ def test_phrase_query_side_stays_broadcast_at_load(spark):
             ), smjs
         else:
             assert not smjs
-        assert plan.count("BroadcastHashJoin") >= 3
+        joins = [
+            ln for ln in plan.splitlines() if re.search(r"(Join|CartesianProduct) ", ln)
+        ]
+        assert all("BroadcastHashJoin" in ln or ln in smjs for ln in joins), joins
+        assert plan.count("BroadcastHashJoin") >= query_frames
         assert out.count() > 0
 
 
