@@ -34,8 +34,8 @@ Scale shape of ``phrase_search``: the query side is prepared on the
 driver, and the positional token stream, filtered to the query words,
 is held once. Its size picks the regime. Up to ``held_rows_max``
 query-term postings, the stream is collected and the search finishes
-in pyarrow: a call runs a fixed handful of Spark jobs (6 for q134,
-against 17 for its distributed plan). Above the bound, the anchored
+in pyarrow: a call runs a fixed handful of Spark jobs (6 for q134),
+however many phrases it searches. Above the bound, the anchored
 distributed plan runs over the held stream, and nothing corpus-scale
 reaches the driver.
 """
