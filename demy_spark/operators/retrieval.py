@@ -32,12 +32,13 @@ Scale shape of ``bm25_search``:
 
 Scale shape of ``phrase_search``: the query side is prepared on the
 driver, and the positional token stream, filtered to the query words,
-is held once. Its size picks the regime. Up to ``held_rows_max``
-query-term postings, the stream is collected and the search finishes
-in pyarrow: a call runs a fixed handful of Spark jobs (6 for q134),
-however many phrases it searches. Above the bound, the anchored
-distributed plan runs over the held stream, and nothing corpus-scale
-reaches the driver.
+is held once. The size of the plan that would finish on the driver
+picks the regime: the stream's rows plus each phrase's anchor postings
+times its length. Up to ``_HELD_ROWS_MAX`` such rows, the stream is
+collected and the search finishes in pyarrow: a call runs a fixed
+handful of Spark jobs (6 for q134), however many phrases it searches.
+Above the bound, the anchored distributed plan runs over the held
+stream, and nothing corpus-scale reaches the driver.
 """
 
 from __future__ import annotations
@@ -54,6 +55,10 @@ from demy_spark.io import arrow_exact_key, local_frame
 from demy_spark.session import keep
 
 __all__ = ["bm25_search", "phrase_search", "rrf_fuse"]
+
+# phrase_search finishes on the driver while its held plan has at most
+# this many rows (see the phrase_search docstring for the measurement)
+_HELD_ROWS_MAX = 11_000_000
 
 
 def bm25_search(
@@ -188,7 +193,6 @@ def phrase_search(
     *,
     k: int = 10,
     anchor: str = "rarest",
-    held_rows_max: int = 4_000_000,
 ) -> DataFrame:
     """Exact-phrase retrieval over a positional index: top ``k``
     documents per query ranked by how many times the query's tokens
@@ -208,24 +212,30 @@ def phrase_search(
     positional token stream is the corpus's one wide frame: it is
     filtered to the query words (an ``isin`` list, no join) and held
     with ``session.keep``. One stats job reads each query word's
-    document frequency (df) from it, which picks the anchors and the
-    regime. Their sum is the stream's row count:
+    posting count (df) from it, which picks the anchors and the regime.
+    The held plan's rows are the stream's (the sum of the dfs) plus,
+    per phrase, its anchor's df times its length m: the anchor, probe
+    and covered rows, which grow with the number of phrases that share
+    an anchor word:
 
-    - up to ``held_rows_max`` rows (and document ids that Arrow keys
-      exactly, ``io.arrow_exact_key``: no floating point, nothing
-      nested), the stream is collected once and released, and the
-      rest — anchor, verify, the per-anchor distinct-offset count,
+    - up to ``_HELD_ROWS_MAX`` (11M) held rows (and document ids that
+      Arrow keys exactly, ``io.arrow_exact_key``: no floating point,
+      nothing nested), the stream is collected once and released, and
+      the rest — anchor, verify, the per-anchor distinct-offset count,
       the count per (query, doc) and the top-k rank — runs in pyarrow
       on dictionary codes, returned as a ``LocalRelation``
       (``io.local_frame``). Measured with
       ``scripts/held_cutoff.py phrase_search`` (4-core host,
-      ``local[4]``, 4 GB driver heap, 125 phrases over a Zipf-like
-      corpus, warm calls): at 1M postings a held call took 1.8-2.4 s
-      against 4.1-5.2 s distributed, at 4M 5.4-6.0 s against
-      11.1-12.3 s. The driver's Python process peaked at 416 and
-      1098 MB against 143 MB (~240 bytes per held posting), its JVM at
-      1.6 and 1.8 GB against 3.0 and 3.8 GB. Nothing above 4M is
-      measured, so the bound stays there;
+      ``local[4]``, 4 GB driver heap, a Zipf-like corpus, warm calls),
+      held against distributed: with about one phrase per anchor word
+      (125 phrases), 2.9M held rows took 1.9-2.3 s against 3.9-5.3 s
+      and 11.7M took 4.5-4.8 s against 9.8-10.9 s; with eight (1000
+      phrases), 4.2M took 2.0-2.3 s against 4.0-5.4 s and 11.9M took
+      4.1-4.4 s against 8.6-10.1 s. The driver's Python process peaked
+      at 414, 1179, 596 and 1264 MB against 144 MB (90-110 bytes per
+      held row at either fan-out), its JVM at 1.2-1.8 GB against
+      2.2-3.9 GB. The bound is the largest size measured at both
+      fan-outs, rounded down;
     - above it, or for other id types, the distributed plan below. Its
       lazy result still reads the kept stream, so the caller's
       ``session.owned()`` scope owns that cache.
@@ -261,11 +271,12 @@ def phrase_search(
 
     Returns (``query_id_col``, ``id_col``, n_occurrences, rk) with
     ``rk`` (int) in 1..k per query, ranked by occurrence count
-    descending, ties to ascending document id (NULL first, as Spark
-    sorts). Queries whose phrase never occurs, and queries with a NULL
-    id, return no rows (retrieval convention, same as bm25_search).
-    Query ids are grouped on the driver, so they must be of a type
-    ``io.arrow_exact_key`` admits.
+    descending, ties to ascending document id (NULL last, as the DuckDB
+    oracle sorts). Queries whose phrase never occurs, and queries with
+    a NULL id, return no rows (retrieval convention, same as
+    bm25_search). Query ids group by Spark's equality: ids of a type
+    ``io.arrow_exact_key`` refuses get their grouping code from a Spark
+    rank in the query-token collect.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -274,17 +285,16 @@ def phrase_search(
     spark = docs.sparkSession
     q_type = queries.schema[query_id_col].dataType
     id_type = docs.schema[id_col].dataType
-    if not arrow_exact_key(q_type):
-        raise ValueError(f"query ids of type {q_type.simpleString()} cannot be grouped")
     # a NULL query id would never meet its phrase length: no rows
-    qtok = (
-        queries.select(
-            F.col(query_id_col).alias("_qid_"),
-            F.posexplode(norm_tokens(F.col(query_text_col))).alias("_i_", "_w_"),
-        )
-        .where(F.col("_qid_").isNotNull())
-        .toArrow()
-    )
+    qtok = queries.select(
+        F.col(query_id_col).alias("_qid_"),
+        F.posexplode(norm_tokens(F.col(query_text_col))).alias("_i_", "_w_"),
+    ).where(F.col("_qid_").isNotNull())
+    if not arrow_exact_key(q_type):
+        # Arrow would group these ids by bits or bytes: Spark codes them
+        # by its own equality (a window over the human-sized query side)
+        qtok = qtok.withColumn("_qk_", F.dense_rank().over(Window.orderBy("_qid_")))
+    qtok = qtok.toArrow()
     words = pc.unique(qtok.column("_w_"))
     matched = keep(
         docs.select(
@@ -297,8 +307,9 @@ def phrase_search(
     counts = matched.groupBy("_w_").count().toArrow()
     at = pc.index_in(words, value_set=counts.column("_w_"))
     df = pc.fill_null(pc.take(counts.column("count"), at), 0)
-    qt, qlen = _phrases(qtok, words, df)
-    if sum(df.to_pylist()) <= held_rows_max and arrow_exact_key(id_type):
+    qt, qlen, fan_out = _phrases(qtok, words, df)
+    held_rows = sum(df.to_pylist()) + fan_out
+    if held_rows <= _HELD_ROWS_MAX and arrow_exact_key(id_type):
         try:
             stream = matched.toArrow()
         finally:
@@ -380,7 +391,7 @@ def phrase_search(
         F.count(F.lit(1)).cast("long").alias("n_occurrences")
     )
     wq = Window.partitionBy("_qid_").orderBy(
-        F.col("n_occurrences").desc(), F.col("_id_").asc()
+        F.col("n_occurrences").desc(), F.col("_id_").asc_nulls_last()
     )
     return (
         agg.withColumn("rk", F.row_number().over(wq))
@@ -396,30 +407,38 @@ def phrase_search(
 
 def _phrases(
     qtok: pa.Table, words: pa.Array, df: pa.Array
-) -> tuple[pa.Table, pa.Table]:
+) -> tuple[pa.Table, pa.Table, int]:
     """The driver-side query plan. ``qtok`` holds the (``_qid_``,
-    ``_i_``, ``_w_``) token rows and ``df`` each of ``words``' df.
+    ``_i_``, ``_w_``) token rows, and a ``_qk_`` code per query id when
+    Spark grouped the ids; ``df`` holds each of ``words``' df.
     Returns the token rows with ``_q_`` (the query's index in the
     second table), ``_wc_`` (the word's index in ``words``) and
     ``_anchor_`` (the phrase's one anchor offset: lowest df, ties to
-    the earliest offset), and the (``_qid_``, ``_m_``) phrase lengths,
-    one row per query id."""
-    qids = pc.dictionary_encode(qtok.column("_qid_").combine_chunks())
-    q = qids.indices.to_numpy(zero_copy_only=False)
+    the earliest offset); the (``_qid_``, ``_m_``) phrase lengths, one
+    row per query; and the sum over phrases of the anchor's df times
+    the phrase length, the held plan's bound on its anchor, probe and
+    covered rows."""
+    key = qtok.column("_qk_" if "_qk_" in qtok.column_names else "_qid_")
+    q = pc.dictionary_encode(key.combine_chunks()).indices.to_numpy(zero_copy_only=False)
+    # the codes run 0..n-1 in order of first occurrence
+    _, first = np.unique(q, return_index=True)
     wc = pc.index_in(qtok.column("_w_"), value_set=words)
     i = qtok.column("_i_").to_numpy()
-    order = np.lexsort((i, pc.take(df, wc).to_numpy(), q))
-    first = np.ones(len(q), dtype=bool)
-    first[1:] = q[order][1:] != q[order][:-1]
+    dfs = pc.take(df, wc).to_numpy()
+    order = np.lexsort((i, dfs, q))
+    starts = np.ones(len(q), dtype=bool)
+    starts[1:] = q[order][1:] != q[order][:-1]
     is_anchor = np.zeros(len(q), dtype=bool)
-    is_anchor[order[first]] = True
+    is_anchor[order[starts]] = True
     qt = (
         qtok.append_column("_q_", pa.array(q, pa.int32()))
         .append_column("_wc_", wc)
         .append_column("_anchor_", pa.array(is_anchor))
     )
-    m = np.bincount(q, minlength=len(qids.dictionary))
-    return qt, pa.table({"_qid_": qids.dictionary, "_m_": pa.array(m, pa.int64())})
+    m = np.bincount(q, minlength=len(first))
+    qids = pc.take(qtok.column("_qid_"), pa.array(first, pa.int64()))
+    fan_out = int(np.dot(dfs[is_anchor], m[q[is_anchor]]))
+    return qt, pa.table({"_qid_": qids, "_m_": pa.array(m, pa.int64())}), fan_out
 
 
 def _held_top_k(
@@ -476,7 +495,7 @@ def _held_top_k(
         pc.sort_indices(
             ranked,
             sort_keys=[("_q_", "ascending"), ("_n_", "descending"), ("_id_", "ascending")],
-            null_placement="at_start",
+            null_placement="at_end",
         )
     )
     q = ranked.column("_q_").to_numpy()

@@ -8966,7 +8966,7 @@ def q134_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain, nothing corpus-scale broadcast, and the oracle replays
     anchor arithmetic exactly (both anchoring strategies produce
     identical rows — the probe asserts it). At every fixture scale the
-    query-term postings fit under ``held_rows_max``, so the call
+    held plan fits under ``retrieval._HELD_ROWS_MAX`` rows, so the call
     finishes on the driver and returns a LocalRelation."""
     from demy_spark.operators.retrieval import phrase_search
 

@@ -11,21 +11,23 @@ held pass's one-off collect and every edge pass's wall in the last
 repeat.
 
 phrase_search: ``retrieval.phrase_search`` collects the query-term
-postings and finishes on the driver while they have at most
-``held_rows_max`` rows, and runs its distributed plan above that. The
-script searches one generated corpus (documents of 100 tokens drawn
-from a 1000-word Zipf-like vocabulary, ``w{floor(1000 u^3)}``) for 125
-phrases of two or three words that together use the 125 most frequent
-words, about half of all tokens, so the postings number about SIZE.
-It reports the exact postings count and the wall of each call
-(query plus a noop-sink write) per repeat.
+postings and finishes on the driver while its held plan has at most
+``_HELD_ROWS_MAX`` rows (the postings plus each phrase's anchor
+postings times its length), and runs its distributed plan above that.
+The script searches one generated corpus (documents of 100 tokens
+drawn from a 1000-word Zipf-like vocabulary, ``w{floor(1000 u^3)}``)
+for 125 x FANOUT phrases of two or three words over the 125 most
+frequent words, about half of all tokens, so the postings number about
+SIZE. Each of those words anchors about FANOUT phrases (default 1). It
+reports the exact postings count, the held plan's row count and the
+wall of each call (query plus a noop-sink write) per repeat.
 
 Both print one JSON line, with the peak RSS of the driver's Python
 process and of its JVM, which local mode shares with the executors.
 
 Usage:
     python scripts/held_cutoff.py pagerank held|broadcast SIZE
-    python scripts/held_cutoff.py phrase_search held|distributed SIZE
+    python scripts/held_cutoff.py phrase_search held|distributed SIZE [FANOUT]
 
 Run each regime in its own process, so that each peak RSS is its own.
 """
@@ -127,7 +129,7 @@ def pagerank(spark, mode: str, n_edges: int) -> dict:
     }
 
 
-def phrase_search(spark, mode: str, postings: int) -> dict:
+def phrase_search(spark, mode: str, postings: int, fan_out: int = 1) -> dict:
     if mode not in ("held", "distributed"):
         raise SystemExit("phrase_search mode must be held|distributed")
     n_docs = postings // 50  # 100 tokens a document, half of them query words
@@ -144,8 +146,16 @@ def phrase_search(spark, mode: str, postings: int) -> dict:
     docs = spark.range(n_docs).select(
         F.col("id").alias("doc_id"), F.array_join(words, " ").alias("text")
     ).cache()
+    # phrase (a, r) steps r + 1 words from w{a}; its rarest word, the
+    # anchor, is nearly always its last, so every word anchors about
+    # fan_out phrases
     phrases = [
-        (a, " ".join(f"w{(a + j) % 125}" for j in range(2 + a % 2))) for a in range(125)
+        (
+            a * fan_out + r,
+            " ".join(f"w{(a + j * (r + 1)) % 125}" for j in range(2 + (a + r) % 2)),
+        )
+        for a in range(125)
+        for r in range(fan_out)
     ]
     queries = spark.createDataFrame(phrases, "qid long, qtext string").cache()
     rows = (
@@ -153,14 +163,23 @@ def phrase_search(spark, mode: str, postings: int) -> dict:
         .where(F.col("w").isin([f"w{i}" for i in range(125)]))
         .count()
     )
-    # held: any bound at or above the postings count; distributed: 0
-    bound = 2**62 if mode == "held" else 0
+    fan_outs = []
+    phrases_of = retrieval._phrases
+
+    def spy(qtok, words, df):
+        out = phrases_of(qtok, words, df)
+        fan_outs.append(out[2])
+        return out
+
+    retrieval._phrases = spy
+    # held: any bound at or above the held plan's rows; distributed: 0
+    retrieval._HELD_ROWS_MAX = 2**62 if mode == "held" else 0
     walls = []
     for _ in range(REPEATS):
         t = time.perf_counter()
         with owned():
             out = retrieval.phrase_search(
-                docs, "doc_id", "text", queries, "qid", "qtext", held_rows_max=bound
+                docs, "doc_id", "text", queries, "qid", "qtext"
             )
             plan = out._jdf.queryExecution().executedPlan().toString()
             out.write.format("noop").mode("overwrite").save()
@@ -169,7 +188,9 @@ def phrase_search(spark, mode: str, postings: int) -> dict:
     return {
         "mode": mode,
         "docs": n_docs,
+        "phrases": len(phrases),
         "postings": rows,
+        "held_rows": rows + fan_outs[-1],
         "call_wall_s": [round(w, 2) for w in walls],
         **_rss(spark),
         "result_rows": out.count(),
@@ -177,9 +198,10 @@ def phrase_search(spark, mode: str, postings: int) -> dict:
 
 
 if __name__ == "__main__":
-    if len(sys.argv) != 4 or sys.argv[1] not in ("pagerank", "phrase_search"):
+    argc = {"pagerank": (4,), "phrase_search": (4, 5)}
+    if len(sys.argv) < 2 or len(sys.argv) not in argc.get(sys.argv[1], ()):
         raise SystemExit(__doc__)
     spark = get_spark("held_cutoff")
     run = pagerank if sys.argv[1] == "pagerank" else phrase_search
-    print(json.dumps(run(spark, sys.argv[2], int(sys.argv[3]))))
+    print(json.dumps(run(spark, sys.argv[2], *map(int, sys.argv[3:]))))
     spark.stop()

@@ -145,9 +145,10 @@ def test_quiet_calib_override_moves_class_bands_in_lockstep():
 # - quantile_sketch 12 -> 10: each mode's percents cross join
 #   broadcasts the percents table, and the (group, p) rank window
 #   reuses the summary's group partitioning (8 -> 6 exchanges).
-# - phrase_search 17 -> 6: the filtered positional stream (a few
-#   thousand query-term postings at sf0.1) is under held_rows_max, so
-#   the call finishes on the driver (retrieval.py). Its jobs: the
+# - phrase_search 17 -> 6: the held plan (a few thousand query-term
+#   postings at sf0.1, plus the anchors' postings times the phrase
+#   lengths) is under retrieval._HELD_ROWS_MAX, so the call finishes
+#   on the driver (retrieval.py). Its jobs: the
 #   query-token collect, the kept stream's materialization, the two
 #   stages of the per-term count (the stats job), the stream collect
 #   and the sink write of the driver-built result. None depends on the

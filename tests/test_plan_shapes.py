@@ -8,7 +8,6 @@ operator naming don't produce false alarms.
 
 from __future__ import annotations
 
-import functools
 import re
 
 import pytest
@@ -100,14 +99,10 @@ PLANNABLE = [
 def _executed_plan(spark, sf_dir, name):
     """``name``'s executed plan string, read inside ``owned()`` so a
     frame the builder keeps is released once the plan is read. q134's
-    is its distributed plan (held_rows_max=0)."""
+    is its distributed plan (a held-row bound of 0)."""
     with pytest.MonkeyPatch.context() as mp, owned():
         if name == "q134_phrase_search":
-            mp.setattr(
-                retrieval,
-                "phrase_search",
-                functools.partial(retrieval.phrase_search, held_rows_max=0),
-            )
+            mp.setattr(retrieval, "_HELD_ROWS_MAX", 0)
         df = Q.REGISTRY[name].fn(spark, sf_dir)
         return df._jdf.queryExecution().executedPlan().toString()
 
@@ -149,7 +144,7 @@ def test_no_single_partition_data_window(name, plans):
 # exchange fewer per mode).
 #
 # q134 (11, 9, 0) -> (4, 5, 0), pinned on the distributed plan
-# (held_rows_max=0): the query side is prepared on the driver. The
+# (a held-row bound of 0): the query side is prepared on the driver. The
 # per-term df aggregation and the anchor-choice window, each planned
 # once per consumer of the three that read them, and the phrase-length
 # aggregation left the plan (7 exchanges), and with them the three df

@@ -90,31 +90,36 @@ def test_no_match_query_absent_and_bad_k(spark):
 # phrase_search: anchored exact-phrase semantics
 # ---------------------------------------------------------------------------
 
+from demy_spark.operators import retrieval  # noqa: E402
 from demy_spark.operators.retrieval import phrase_search  # noqa: E402
 
 
-# held_rows_max settings: the default (the filtered stream held on the
-# driver and finished in pyarrow) and 0 (the distributed plan), each
-# under both anchor strategies
-PATHS = [
-    {"anchor": a, "held_rows_max": h} for a in ("rarest", "all") for h in (4_000_000, 0)
-]
+# (anchor, bound) paths: the default _HELD_ROWS_MAX (the filtered stream
+# held on the driver and finished in pyarrow) and 0 (the distributed
+# plan), each under both anchor strategies
+PATHS = [(a, h) for a in ("rarest", "all") for h in (retrieval._HELD_ROWS_MAX, 0)]
+
+
+def _paths(ddf, qdf, qid_col="query_id", **kw):
+    """Rows by (query, rank). Runs every path of PATHS and asserts they
+    agree exactly."""
+    got = []
+    for anchor, bound in PATHS:
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(retrieval, "_HELD_ROWS_MAX", bound)
+            out = phrase_search(
+                ddf, "doc_id", "text", qdf, qid_col, "qtext", anchor=anchor, **kw
+            )
+        assert dict(out.dtypes)["rk"] == "int", (anchor, bound)
+        got.append([tuple(r) for r in out.orderBy(qid_col, "rk").collect()])
+    assert all(g == got[0] for g in got), got
+    return got[0]
 
 
 def _phrases(spark, docs, queries, **kw):
-    """Rows by (query, rank). Runs every path of PATHS and asserts they
-    agree exactly."""
     ddf = spark.createDataFrame(docs, "doc_id long, text string")
     qdf = spark.createDataFrame(queries, "query_id long, qtext string")
-    got = []
-    for path in PATHS:
-        out = phrase_search(
-            ddf, "doc_id", "text", qdf, "query_id", "qtext", **path, **kw
-        )
-        assert dict(out.dtypes)["rk"] == "int", path
-        got.append([tuple(r) for r in out.orderBy("query_id", "rk").collect()])
-    assert all(g == got[0] for g in got), got
-    return got[0]
+    return _paths(ddf, qdf, **kw)
 
 
 def test_phrase_requires_adjacency_and_order(spark):
@@ -186,9 +191,9 @@ def test_phrase_empty_query_frame(spark):
 
 
 def test_phrase_stream_above_the_bound_is_never_collected(spark, monkeypatch):
-    """The stats job reads the filtered stream's row count before
-    anything corpus-sized reaches the driver: above held_rows_max the
-    stream is never collected, at the bound it is collected once."""
+    """The stats job reads the held plan's row count before anything
+    corpus-sized reaches the driver: above _HELD_ROWS_MAX the stream is
+    never collected, at the bound it is collected once."""
     cls = type(spark.range(1))
     collected = []
     to_arrow = cls.toArrow
@@ -203,12 +208,13 @@ def test_phrase_stream_above_the_bound_is_never_collected(spark, monkeypatch):
         [(1, "a b c a b"), (2, "b a b"), (3, "c c")], "doc_id long, text string"
     )
     qdf = spark.createDataFrame([(1, "a b")], "query_id long, qtext string")
-    stream = ["_id_", "_pos_", "_w_"]  # 7 rows: the a and b postings
-    for bound, times in ((6, 0), (7, 1)):
+    # the held plan's 13 rows: 7 postings of a and b, and the anchor a's
+    # 3 postings times the phrase length 2
+    stream = ["_id_", "_pos_", "_w_"]
+    for bound, times in ((12, 0), (13, 1)):
         collected.clear()
-        out = phrase_search(
-            ddf, "doc_id", "text", qdf, "query_id", "qtext", held_rows_max=bound
-        )
+        monkeypatch.setattr(retrieval, "_HELD_ROWS_MAX", bound)
+        out = phrase_search(ddf, "doc_id", "text", qdf, "query_id", "qtext")
         rows = [tuple(r) for r in out.orderBy("rk").collect()]
         assert rows == [(1, 1, 2, 1), (1, 2, 1, 2)], bound
         assert collected.count(stream) == times, (bound, collected)
@@ -217,8 +223,7 @@ def test_phrase_stream_above_the_bound_is_never_collected(spark, monkeypatch):
 def test_phrase_inexact_doc_ids_take_the_distributed_path(spark):
     # Spark groups -0.0 with 0.0, and 'A' with 'a' under UTF8_LCASE,
     # where Arrow compares bits and bytes, so such document ids never
-    # take the held regime: each pair is one document. Query ids are
-    # grouped on the driver, so a nested query id is refused.
+    # take the held regime: each pair is one document.
     qdf = spark.createDataFrame([(1, "a b")], "query_id long, qtext string")
     floats = spark.createDataFrame(
         [(0.0, "a b"), (-0.0, "x a b")], "doc_id double, text string"
@@ -230,25 +235,35 @@ def test_phrase_inexact_doc_ids_take_the_distributed_path(spark):
         out = phrase_search(ddf, "doc_id", "text", qdf, "query_id", "qtext")
         rows = [tuple(r) for r in out.collect()]
         assert len(rows) == 1 and rows[0][2:] == (2, 1), rows
-    with pytest.raises(ValueError, match="query ids"):
-        nested = qdf.select(F.struct("query_id").alias("q"), "qtext")
-        phrase_search(ddf, "doc_id", "text", nested, "q", "qtext")
+
+
+def test_phrase_query_ids_of_inexact_types(spark):
+    # Spark codes floating, nested and collated query ids by its own
+    # equality (a rank over the query side), so on every path they
+    # return the rows a long id returns
+    docs = [(1, "a b a b"), (2, "x a b"), (3, "b a")]
+    queries = [(1, "a b"), (2, "b a")]
+    base = _phrases(spark, docs, queries)
+    ddf = spark.createDataFrame(docs, "doc_id long, text string")
+    qdf = spark.createDataFrame(queries, "query_id long, qtext string")
+    for qid in (
+        F.col("query_id").cast("double"),
+        F.struct("query_id"),
+        F.array("query_id"),
+        F.collate(F.col("query_id").cast("string"), "UTF8_LCASE"),
+    ):
+        conv = dict(qdf.select("query_id", qid).collect())
+        rows = _paths(ddf, qdf.select(qid.alias("q"), "qtext"), "q")
+        assert rows == [(conv[r[0]], *r[1:]) for r in base], (qid, rows)
 
 
 def _q134_paths(monkeypatch):
-    """q134's builder once per regime: the default, then the
-    distributed plan (held_rows_max=0)."""
-    import functools
-
+    """q134's builder once per regime: the default bound, then the
+    distributed plan (bound 0)."""
     from demy_spark import queries as Q
-    from demy_spark.operators import retrieval
 
-    for bound in (4_000_000, 0):
-        monkeypatch.setattr(
-            retrieval,
-            "phrase_search",
-            functools.partial(phrase_search, held_rows_max=bound),
-        )
+    for bound in (retrieval._HELD_ROWS_MAX, 0):
+        monkeypatch.setattr(retrieval, "_HELD_ROWS_MAX", bound)
         yield Q.REGISTRY["q134_phrase_search"].fn
 
 
@@ -267,9 +282,21 @@ def test_q134_leaves_no_persisted_rdd(spark, sf_dir, monkeypatch):
         assert set(jsc.getPersistentRDDs().keySet().toArray()) - before == set()
 
 
-def test_q134_null_id_document_matches_oracle(spark, tmp_path, monkeypatch):
-    # _Q134_SQL groups a NULL-id document like any other: it ranks
-    # first for "table table" (two occurrences against one)
+@pytest.mark.parametrize(
+    "texts, ranked",
+    [
+        # two occurrences against one: the NULL-id document ranks first
+        (["table table x table table", "table table"], [None, 3]),
+        # a tie: the oracle sorts the NULL id last
+        (["table table", "table table"], [3, None]),
+    ],
+    ids=["more", "tie"],
+)
+def test_q134_null_id_document_matches_oracle(
+    spark, tmp_path, monkeypatch, texts, ranked
+):
+    # _Q134_SQL groups a NULL-id document like any other, and its
+    # ORDER BY id puts NULL after every id on a tie
     import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -281,7 +308,7 @@ def test_q134_null_id_document_matches_oracle(spark, tmp_path, monkeypatch):
         pa.table(
             {
                 "doc_id": pa.array([None, 3, 4], pa.int64()),
-                "text": ["table table x table table", "table table", "fast key scan"],
+                "text": [*texts, "fast key scan"],
             }
         ),
         str(tmp_path / "documents.parquet"),
@@ -292,15 +319,15 @@ def test_q134_null_id_document_matches_oracle(spark, tmp_path, monkeypatch):
         f"'{tmp_path / 'documents.parquet'}')"
     )
     oracle = Q.REGISTRY["q134_phrase_search"].oracle
-    top = con.execute(
-        f"SELECT doc_id FROM ({oracle}) WHERE query_id = 1 AND rk = 1"
+    got = con.execute(
+        f"SELECT doc_id FROM ({oracle}) WHERE query_id = 1 ORDER BY rk"
     ).fetchall()
-    assert top == [(None,)]
+    assert got == [(d,) for d in ranked]
     for _ in _q134_paths(monkeypatch):
         assert_query_parity("q134_phrase_search", spark, str(tmp_path), con)
 
 
-def test_phrase_query_side_stays_broadcast_at_load(spark):
+def test_phrase_query_side_stays_broadcast_at_load(spark, monkeypatch):
     """A realistic query load (200 phrases vs the fixture's 5) must
     not tip the QUERY-side joins into a shuffle: every query-frame
     join carries an explicit broadcast hint regardless of query count
@@ -314,9 +341,10 @@ def test_phrase_query_side_stays_broadcast_at_load(spark):
     frames under rarest-term anchoring (anchor offsets, other offsets,
     phrase lengths), two under "all" (tokens, phrase lengths); every
     join but the verify join must broadcast. The plans are the
-    distributed regime's (held_rows_max=0)."""
+    distributed regime's (bound 0)."""
     import re
 
+    monkeypatch.setattr(retrieval, "_HELD_ROWS_MAX", 0)
     docs = spark.createDataFrame(
         [(i, f"tok{i % 37} tok{(i + 1) % 37} tok{(i + 2) % 37}") for i in range(300)],
         "doc_id long, text string",
@@ -327,8 +355,7 @@ def test_phrase_query_side_stays_broadcast_at_load(spark):
     )
     for mode, allow_smj, query_frames in (("rarest", True, 3), ("all", False, 2)):
         out = phrase_search(
-            docs, "doc_id", "text", queries, "qid", "qtext", k=5, anchor=mode,
-            held_rows_max=0,
+            docs, "doc_id", "text", queries, "qid", "qtext", k=5, anchor=mode
         )
         plan = out._jdf.queryExecution().executedPlan().toString()
         smjs = [
